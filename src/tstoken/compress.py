@@ -66,15 +66,18 @@ class _BitWriter:
 
 
 class _BitReader:
-    __slots__ = ("data", "pos")
+    __slots__ = ("data", "pos", "end")
 
     def __init__(self, data: bytes):
         self.data = data
         self.pos = 0  # bit position
+        self.end = 8 * len(data)
 
     def read(self, nbits: int) -> int:
         out = 0
         pos = self.pos
+        if pos + nbits > self.end:
+            raise ValueError("corrupt block: read past the block end")
         for _ in range(nbits):
             byte = self.data[pos >> 3]
             out = (out << 1) | ((byte >> (7 - (pos & 7))) & 1)
@@ -130,12 +133,13 @@ def _check_count(n: int, block: bytes) -> None:
     """Bound the decoded point count by the block's information
     capacity BEFORE allocating the output array: every point beyond
     the second costs at least 1 stream bit, so n can never exceed
-    8*len(block) + 2. A truncated/corrupt block whose first 4 bytes
-    decode to a huge n must raise the documented ValueError, not
-    attempt a multi-GiB np.empty and die with MemoryError (ADVICE r4)."""
+    8*len(block) + 2 (timestamps and values alike). A truncated/corrupt
+    block whose first 4 bytes decode to a huge n must raise the
+    documented ValueError, not attempt a multi-GiB np.empty and die
+    with MemoryError (ADVICE r4)."""
     if n > 8 * len(block) + 2:
         raise ValueError(
-            f"corrupt timestamp block: count {n} exceeds the "
+            f"corrupt block: count {n} exceeds the "
             f"{len(block)}-byte block's capacity")
 
 
@@ -155,34 +159,35 @@ def decode_timestamps(block: bytes) -> np.ndarray:
     delta = r.read(64)
     if delta >= 1 << 63:
         delta -= 1 << 64
-    out[1] = out[0] + delta
-    for i in range(2, n):
-        tag = r.read(1)
-        if tag == 0:
-            dod = 0
-        else:
-            tag2 = r.read(1)
-            if tag2 == 0:
-                dod = r.read(7) - 63
-            else:
-                tag3 = r.read(1)
-                if tag3 == 0:
-                    dod = r.read(9) - 255
-                else:
-                    tag4 = r.read(1)
-                    if tag4 == 0:
-                        dod = r.read(12) - 2047
-                    elif r.read(1) == 0:
-                        dod = r.read(32)
-                        if dod >= 1 << 31:
-                            dod -= 1 << 32
-                    else:
-                        dod = r.read(64)
-                        if dod >= 1 << 63:
-                            dod -= 1 << 64
-        delta += dod
-        out[i] = out[i - 1] + delta
+    try:
+        t = t0 + delta
+        out[1] = t
+        for i in range(2, n):
+            delta += _read_dod(r)
+            t += delta
+            out[i] = t
+    except OverflowError:
+        raise ValueError("corrupt timestamp block: timestamps overflow "
+                         "int64") from None
     return out
+
+
+def _read_dod(r: _BitReader) -> int:
+    """One v2 delta-of-delta: '0' | '10'+7b | '110'+9b | '1110'+12b |
+    '1111'+'0'+32b | '1111'+'1'+64b."""
+    if r.read(1) == 0:
+        return 0
+    if r.read(1) == 0:
+        return r.read(7) - 63
+    if r.read(1) == 0:
+        return r.read(9) - 255
+    if r.read(1) == 0:
+        return r.read(12) - 2047
+    if r.read(1) == 0:
+        dod = r.read(32)
+        return dod - (1 << 32) if dod >= 1 << 31 else dod
+    dod = r.read(64)
+    return dod - (1 << 64) if dod >= 1 << 63 else dod
 
 
 def decode_timestamps_v1(block: bytes) -> np.ndarray:
@@ -214,10 +219,7 @@ def decode_timestamps_v1(block: bytes) -> np.ndarray:
     r = _BitReader(block)
     try:
         n = r.read(32)
-        if n > 8 * len(block) + 2:
-            raise ValueError(
-                f"v1 count {n} exceeds the {len(block)}-byte block's "
-                f"capacity: {not_v1}")
+        _check_count(n, block)
         if n == 0:
             return np.empty(0, dtype=np.int64)
         t0 = r.read(64)
@@ -253,9 +255,8 @@ def decode_timestamps_v1(block: bytes) -> np.ndarray:
                                 dod -= 1 << 32
             delta += dod
             out[i] = out[i - 1] + delta
-    except IndexError:
-        raise ValueError(
-            f"v1 decode ran past the block end: {not_v1}") from None
+    except ValueError as e:
+        raise ValueError(f"v1 {e}: {not_v1}") from None
     if n > 1 and not (np.diff(out) >= 0).all():
         raise ValueError(
             f"v1 decode produced non-monotonic timestamps: {not_v1}")
@@ -312,6 +313,7 @@ def encode_values(vals: np.ndarray) -> bytes:
 def decode_values(block: bytes) -> np.ndarray:
     r = _BitReader(block)
     n = r.read(32)
+    _check_count(n, block)
     out = np.empty(n, dtype=np.uint64)
     if n == 0:
         return out.view(np.float64)

@@ -1,4 +1,4 @@
-"""Pure-NumPy/stdlib image codecs: PNG decode and baseline JPEG.
+"""Pure-NumPy/stdlib image codecs: PNG decode and Huffman JPEG.
 
 Round-5 closure of the multimodal `partial`: through round 4,
 JPEG/PNG payloads raised NotImplementedError because no image library
@@ -16,8 +16,9 @@ tables), decodable with stdlib zlib + NumPy alone:
     verified.
   - ``jpeg_decode``: baseline sequential DCT (SOF0/SOF1) AND Huffman
     progressive (SOF2 — spectral selection, successive approximation,
-    EOB runs, per T.81 Annex G), restart markers, 4:4:4 / 4:2:2 /
-    4:2:0 chroma, JFIF YCbCr -> RGB. Arithmetic coding and
+    EOB runs, per T.81 Annex G) through one entropy decoder and one
+    coefficient store, restart markers, 4:4:4 / 4:2:2 / 4:2:0 chroma,
+    JFIF YCbCr -> RGB. Arithmetic coding and
     lossless/differential SOFs raise NotImplementedError.
   - ``jpeg_encode``: baseline encoder (Annex K quantization + Huffman
     tables, quality scaling per libjpeg's convention) plus a
@@ -313,36 +314,28 @@ def _build_canonical(counts: list[int],
 
 class _BitReader:
     """MSB-first bit reader over entropy-coded JPEG data with 0xFF00
-    byte-stuffing removal; RST markers are consumed by the caller."""
+    byte-stuffing removal; RST markers are consumed by the caller
+    between restart intervals. Reading into any marker or past the
+    payload end is corrupt data: a complete scan never needs a bit
+    beyond its final padded byte."""
 
     def __init__(self, data: bytes, pos: int):
         self.data = data
         self.pos = pos
         self.bits = 0
         self.nbits = 0
-        self.eof = False
 
     def _fill(self) -> None:
-        if self.eof:
-            self.bits <<= 8            # zero-pad past EOI (spec allows)
-            self.nbits += 8
-            return
-        b = self.data[self.pos]
+        b = self.data[self.pos:self.pos + 1]
+        if b == b"\xff":
+            if self.data[self.pos + 1:self.pos + 2] != b"\x00":
+                raise ValueError("JPEG entropy data interrupted by a "
+                                 "marker mid-interval")
+            self.pos += 1              # stuffed byte
+        elif not b:
+            raise ValueError("truncated JPEG entropy data")
         self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos]
-            if nxt == 0x00:
-                self.pos += 1          # stuffed byte
-            elif 0xD0 <= nxt <= 0xD7:  # RST inside fill: caller's job
-                raise _RestartMarker(nxt)
-            elif nxt == 0xD9:          # EOI: stop consuming, zero-pad
-                self.eof = True
-                self.pos -= 1
-                b = 0
-            else:
-                raise ValueError(f"unexpected marker 0xFF{nxt:02X} "
-                                 "inside entropy data")
-        self.bits = (self.bits << 8) | b
+        self.bits = (self.bits << 8) | b[0]
         self.nbits += 8
 
     def read(self, n: int) -> int:
@@ -367,11 +360,6 @@ class _BitReader:
         self.bits = 0
 
 
-class _RestartMarker(Exception):
-    def __init__(self, marker: int):
-        self.marker = marker
-
-
 def _extend(v: int, t: int) -> int:
     """T.81 EXTEND: map t-bit magnitude v to signed coefficient."""
     return v if t == 0 or v >= (1 << (t - 1)) else v - (1 << t) + 1
@@ -385,14 +373,16 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
     approximation, DC and AC first/refinement scans, EOB runs),
     DRI/RST, 1- or 3-component scans, any h/v sampling up to 2
     (4:4:4, 4:2:2, 4:2:0). Lossless/arithmetic/differential SOFs
-    raise NotImplementedError."""
+    raise NotImplementedError. Every scan, sequential or progressive,
+    decodes into one DCT-coefficient store that is dequantized and
+    inverse-transformed once, after the last scan."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
     pos = 2
     qt: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], dict] = {}
     frame = None
-    coef = None        # progressive coefficient store, built at 1st SOS
+    coef = None        # coefficient store, built at the first SOS
     restart = 0
     while pos + 4 <= len(payload):
         if payload[pos] != 0xFF:
@@ -424,9 +414,16 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
                     i += 128
                 qt[tq] = tbl
         elif marker in (0xC0, 0xC1, 0xC2):           # SOF0/1 + SOF2
+            if frame is not None or len(body) < 6 \
+                    or len(body) != 6 + 3 * body[5]:
+                raise ValueError("malformed or repeated JPEG SOF")
             prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-            if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG supported")
+            if prec != 8 or nc not in (1, 3):
+                raise NotImplementedError(
+                    "only 8-bit 1- or 3-component JPEG supported")
+            if w * h > 64_000_000:
+                raise ValueError(f"JPEG dimensions {w}x{h} exceed the "
+                                 "64M-pixel decode limit")
             comps = []
             for k in range(nc):
                 cid, hv, tq = body[6 + 3 * k:9 + 3 * k]
@@ -446,14 +443,21 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
                 counts = list(body[i + 1:i + 17])
                 n = sum(counts)
                 syms = list(body[i + 17:i + 17 + n])
+                if len(counts) != 16 or len(syms) != n:
+                    raise ValueError("JPEG DHT symbol counts overrun "
+                                     "the segment")
                 huff[(tc, th)] = _build_canonical(counts, syms)
                 i += 17 + n
         elif marker == 0xDD:                         # DRI
+            if len(body) != 2:
+                raise ValueError("malformed JPEG DRI segment")
             (restart,) = struct.unpack(">H", body)
         elif marker == 0xDA:                         # SOS
             if frame is None:
                 raise ValueError("JPEG SOS before SOF")
-            ns = body[0]
+            ns = body[0] if body else 0
+            if ns < 1 or len(body) != 4 + 2 * ns:
+                raise ValueError("malformed JPEG SOS header")
             scan = []
             for k in range(ns):
                 cs, tdta = body[1 + 2 * k], body[2 + 2 * k]
@@ -463,9 +467,6 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
                     raise ValueError(
                         f"JPEG scan references unknown component {cs}")
                 scan.append((comp, tdta >> 4, tdta & 15))
-            if not frame.get("prog"):
-                return _jpeg_scan(payload, pos + seglen, frame, scan,
-                                  qt, huff, restart)
             ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
             ahal = body[3 + 2 * ns]
             if coef is None:
@@ -476,56 +477,9 @@ def jpeg_decode(payload: bytes) -> np.ndarray:
             pos = end
             continue
         pos += seglen
-    if frame is not None and frame.get("prog") and coef is not None:
+    if coef is not None:
         return _prog_assemble(frame, coef, qt)
     raise ValueError("JPEG has no SOS scan")
-
-
-def _jpeg_scan(payload: bytes, pos: int, frame: dict, scan: list,
-               qt: dict, huff: dict, restart: int) -> np.ndarray:
-    h, w, comps = frame["h"], frame["w"], frame["comps"]
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    if min(c["h"] for c in comps) < 1 or min(c["v"] for c in comps) < 1:
-        raise ValueError("invalid JPEG sampling factor 0")
-    if hmax > 2 or vmax > 2:
-        raise NotImplementedError("sampling factors above 2 unsupported")
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    planes = {}
-    for c in comps:
-        planes[c["id"]] = np.zeros((mcuy * c["v"] * 8, mcux * c["h"] * 8),
-                                   dtype=np.float64)
-    reader = _BitReader(payload, pos)
-    pred = {c["id"]: 0 for c in comps}
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart and mcu_count and mcu_count % restart == 0:
-                # byte-align, expect RSTn
-                reader.align()
-                p = reader.pos
-                if payload[p:p + 1] == b"\xff" and \
-                        0xD0 <= payload[p + 1] <= 0xD7:
-                    reader.pos = p + 2
-                pred = {c["id"]: 0 for c in comps}
-            try:
-                for comp, td, ta in scan:
-                    q = qt[comp["tq"]]
-                    dctab = _get_huff(huff, 0, td)
-                    actab = _get_huff(huff, 1, ta)
-                    for by in range(comp["v"]):
-                        for bx in range(comp["h"]):
-                            blk = _decode_block(reader, dctab, actab, q,
-                                                pred, comp["id"])
-                            y0 = (my * comp["v"] + by) * 8
-                            x0 = (mx * comp["h"] + bx) * 8
-                            planes[comp["id"]][y0:y0 + 8, x0:x0 + 8] = blk
-            except _RestartMarker:
-                raise ValueError("restart marker at unexpected MCU "
-                                 "position") from None
-            mcu_count += 1
-    return _jpeg_finish(planes, comps, h, w, hmax, vmax)
 
 
 def _jpeg_finish(planes: dict, comps: list, h: int, w: int,
@@ -548,39 +502,15 @@ def _jpeg_finish(planes: dict, comps: list, h: int, w: int,
         .astype(np.uint8)
 
 
-def _decode_block(reader: _BitReader, dctab: dict, actab: dict,
-                  q: np.ndarray, pred: dict, cid: int) -> np.ndarray:
-    coeff = np.zeros(64, dtype=np.float64)
-    t = reader.huff(dctab)
-    diff = _extend(reader.read(t), t) if t else 0
-    pred[cid] += diff
-    coeff[0] = pred[cid] * q[0]
-    k = 1
-    while k < 64:
-        rs = reader.huff(actab)
-        r, s = rs >> 4, rs & 15
-        if s == 0:
-            if r == 15:       # ZRL: sixteen zeros
-                k += 16
-                continue
-            break             # EOB
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC run past end of block")
-        coeff[k] = _extend(reader.read(s), s) * q[k]
-        k += 1
-    blk = np.zeros(64, dtype=np.float64)
-    blk[_ZIGZAG] = coeff
-    return _DCT_A.T @ blk.reshape(8, 8) @ _DCT_A
-
-
-# ------------------------------------------------- JPEG progressive (SOF2)
+# ------------------------------------------- JPEG entropy decode (SOF0/1/2)
 #
 # T.81 Annex G, Huffman coding only. Each SOS contributes one band
 # (spectral selection Ss..Se) at one precision (successive
 # approximation Ah -> Al) to a per-component DCT-coefficient store;
 # the image materializes once, after EOI, via dequant + IDCT over the
-# completed store. The AC refinement control flow mirrors G.1.2.3:
+# completed store. A sequential (SOF0/SOF1) scan is the Ss=0, Se=63,
+# Ah=Al=0 case: DC then AC 1..63 per block, with no EOB runs. The AC
+# refinement control flow mirrors G.1.2.3:
 # each (run, size) symbol advances over `run` ZERO-history positions,
 # consuming one correction bit for every nonzero-history position
 # passed; an EOBn symbol refines every remaining nonzero-history
@@ -590,13 +520,14 @@ def _decode_block(reader: _BitReader, dctab: dict, actab: dict,
 def _next_jpeg_marker(payload: bytes, pos: int) -> int:
     """First byte offset >= pos of a marker that terminates entropy
     data (not a stuffed 0xFF00, not RST, not fill bytes)."""
-    while pos + 1 < len(payload):
-        if payload[pos] == 0xFF and payload[pos + 1] != 0x00 \
-                and payload[pos + 1] != 0xFF \
-                and not (0xD0 <= payload[pos + 1] <= 0xD7):
+    while True:
+        pos = payload.find(b"\xff", pos)
+        if pos < 0 or pos + 1 >= len(payload):
+            return len(payload)
+        if payload[pos + 1] not in (0x00, 0xFF) \
+                and not 0xD0 <= payload[pos + 1] <= 0xD7:
             return pos
         pos += 1
-    return len(payload)
 
 
 def _get_huff(huff: dict, tc: int, th: int) -> dict:
@@ -613,7 +544,8 @@ def _prog_init(frame: dict) -> dict:
     """Per-component coefficient stores (MCU-padded block grid) plus
     the component's OWN block dimensions for non-interleaved scans
     (A.2.2: ceil of the component's sample extent, NOT the padded
-    MCU grid)."""
+    MCU grid). int64, so DC predictors shifted by Al <= 13 cannot
+    overflow."""
     comps = frame["comps"]
     h, w = frame["h"], frame["w"]
     hmax = max(c["h"] for c in comps)
@@ -631,13 +563,15 @@ def _prog_init(frame: dict) -> dict:
         chh = -(-h * c["v"] // vmax)
         out[c["id"]] = {
             "a": np.zeros((mcuy * c["v"], mcux * c["h"], 64),
-                          dtype=np.int32),
+                          dtype=np.int64),
             "bw": -(-cw // 8), "bh": -(-chh // 8)}
     return out
 
 
 def _dc_first_unit(reader, dctab, cf, pred, cid, al):
     t = reader.huff(dctab)
+    if t > 11:
+        raise ValueError(f"invalid JPEG DC magnitude category {t}")
     diff = _extend(reader.read(t), t) if t else 0
     pred[cid] += diff
     cf[0] = pred[cid] << al
@@ -711,79 +645,75 @@ def _ac_refine_unit(reader, actab, cf, ss, se, al, eobrun):
 def _prog_scan(payload: bytes, pos: int, frame: dict, scan: list,
                huff: dict, restart: int, coef: dict,
                ss: int, se: int, ah: int, al: int) -> None:
+    """Decode one scan into the coefficient store. The per-block unit
+    is picked once: sequential (DC then AC 1..63), DC first, DC
+    refine, AC first or AC refine. Interleaved scans visit blocks in
+    MCU order, single-component scans in raster order (A.2.2)."""
     comps = frame["comps"]
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
     mcux = -(-frame["w"] // (8 * hmax))
     mcuy = -(-frame["h"] // (8 * vmax))
-    if ss == 0 and se != 0:
+    if not frame["prog"]:
+        if (ss, se, ah, al) != (0, 63, 0, 0):
+            raise ValueError("sequential JPEG scan must have Ss=0, "
+                             "Se=63, Ah=Al=0")
+    elif ss == 0 and se != 0:
         raise ValueError("JPEG DC scan must have Se=0")
-    if ss > 0 and len(scan) != 1:
+    elif ss > 0 and len(scan) != 1:
         raise ValueError("JPEG progressive AC scan must be 1-component")
-    if ss > se or se > 63:
-        raise ValueError(f"invalid spectral band {ss}..{se}")
+    if ss > se or se > 63 or ah > 13 or al > 13:
+        raise ValueError(f"invalid JPEG scan: band {ss}..{se}, "
+                         f"Ah={ah}, Al={al}")
     reader = _BitReader(payload, pos)
     eobrun = [0]
     pred = {c["id"]: 0 for c, _, _ in scan}
 
-    def do_restart():
-        reader.align()
-        p = reader.pos
-        if payload[p:p + 1] == b"\xff" and 0xD0 <= payload[p + 1] <= 0xD7:
-            reader.pos = p + 2
-        else:
-            raise ValueError("JPEG restart marker missing in scan")
-        for cid in pred:
-            pred[cid] = 0
-        eobrun[0] = 0
+    if not frame["prog"]:
+        def unit(cf, cid, dctab, actab):
+            _dc_first_unit(reader, dctab, cf, pred, cid, 0)
+            _ac_first_unit(reader, actab, cf, 1, 63, 0, eobrun)
+            if eobrun[0]:
+                raise ValueError("EOB run in a sequential JPEG scan")
+    elif ss == 0 and ah == 0:
+        def unit(cf, cid, dctab, actab):
+            _dc_first_unit(reader, dctab, cf, pred, cid, al)
+    elif ss == 0:
+        def unit(cf, cid, dctab, actab):
+            cf[0] |= reader.read(1) << al
+    elif ah == 0:
+        def unit(cf, cid, dctab, actab):
+            _ac_first_unit(reader, actab, cf, ss, se, al, eobrun)
+    else:
+        def unit(cf, cid, dctab, actab):
+            _ac_refine_unit(reader, actab, cf, ss, se, al, eobrun)
 
-    try:
-        if ss == 0 and len(scan) > 1:        # interleaved DC, MCU order
-            n = 0
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    if restart and n and n % restart == 0:
-                        do_restart()
-                    for comp, td, _ in scan:
-                        cid = comp["id"]
-                        for by in range(comp["v"]):
-                            for bx in range(comp["h"]):
-                                cf = coef[cid]["a"][
-                                    my * comp["v"] + by,
-                                    mx * comp["h"] + bx]
-                                if ah == 0:
-                                    _dc_first_unit(reader,
-                                                   _get_huff(huff, 0, td),
-                                                   cf, pred, cid, al)
-                                else:
-                                    cf[0] |= reader.read(1) << al
-                    n += 1
-        else:                                # single component, raster
-            comp, td, ta = scan[0]
-            cid = comp["id"]
-            info = coef[cid]
-            n = 0
-            for by in range(info["bh"]):
-                for bx in range(info["bw"]):
-                    if restart and n and n % restart == 0:
-                        do_restart()
-                    cf = info["a"][by, bx]
-                    if ss == 0:
-                        if ah == 0:
-                            _dc_first_unit(reader, _get_huff(huff, 0, td),
-                                           cf, pred, cid, al)
-                        else:
-                            cf[0] |= reader.read(1) << al
-                    elif ah == 0:
-                        _ac_first_unit(reader, _get_huff(huff, 1, ta), cf,
-                                       ss, se, al, eobrun)
-                    else:
-                        _ac_refine_unit(reader, _get_huff(huff, 1, ta), cf,
-                                        ss, se, al, eobrun)
-                    n += 1
-    except _RestartMarker:
-        raise ValueError("restart marker at unexpected position "
-                         "in progressive scan") from None
+    # only the tables the unit reads: a DC refinement reads none
+    units = [(coef[c["id"]]["a"], c,
+              _get_huff(huff, 0, td) if ss == 0 and ah == 0 else None,
+              _get_huff(huff, 1, ta) if se else None)
+             for c, td, ta in scan]
+    if len(units) > 1:
+        mcus = ([(a, c["id"], dct, act, my * c["v"] + y, mx * c["h"] + x)
+                 for a, c, dct, act in units
+                 for y in range(c["v"]) for x in range(c["h"])]
+                for my in range(mcuy) for mx in range(mcux))
+    else:
+        a, c, dct, act = units[0]
+        info = coef[c["id"]]
+        mcus = ([(a, c["id"], dct, act, y, x)]
+                for y in range(info["bh"]) for x in range(info["bw"]))
+    for n, mcu in enumerate(mcus):
+        if restart and n and n % restart == 0:
+            reader.align()
+            rst = payload[reader.pos:reader.pos + 2]
+            if rst[:1] != b"\xff" or not b"\xd0" <= rst[1:] <= b"\xd7":
+                raise ValueError("JPEG restart marker missing in scan")
+            reader.pos += 2
+            pred.update(dict.fromkeys(pred, 0))
+            eobrun[0] = 0
+        for a, cid, dct, act, y, x in mcu:
+            unit(a[y, x], cid, dct, act)
 
 
 def _prog_assemble(frame: dict, coef: dict, qt: dict) -> np.ndarray:
@@ -796,10 +726,7 @@ def _prog_assemble(frame: dict, coef: dict, qt: dict) -> np.ndarray:
         a = coef[c["id"]]["a"]
         if c["tq"] not in qt:
             raise ValueError(f"missing quantization table {c['tq']}")
-        # int64 BEFORE the multiply: a crafted high-Al partial decode
-        # times a 16-bit quant value can exceed int32
-        deq = a.astype(np.int64) * qt[c["tq"]].astype(np.int64)
-        deq = deq.astype(np.float64)                 # zigzag order
+        deq = (a * qt[c["tq"]]).astype(np.float64)   # zigzag order
         nby, nbx = a.shape[:2]
         blk = np.zeros((nby, nbx, 64), dtype=np.float64)
         blk[:, :, _ZIGZAG] = deq
@@ -1065,6 +992,24 @@ def _encode_progressive_scans(coefs: list, seg) -> list:
     return parts
 
 
+def _ycc_planes(img: np.ndarray) -> list:
+    """uint8 gray or RGB -> level-shifted Y (or Y, Cb, Cr) float
+    planes, edge-padded to multiples of 8."""
+    h, w = img.shape[:2]
+    if img.ndim == 2:
+        planes = [img.astype(np.float64) - 128.0]
+    else:
+        rgb = img.astype(np.float64)
+        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
+        y = 0.299 * r + 0.587 * g + 0.114 * b - 128.0
+        cb = -0.168736 * r - 0.331264 * g + 0.5 * b
+        cr = 0.5 * r - 0.418688 * g - 0.081312 * b
+        planes = [y, cb, cr]
+    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
+    return [np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
+            for p in planes]
+
+
 def jpeg_encode(img: np.ndarray, quality: int = 90,
                 progressive: bool = False) -> bytes:
     """uint8 (H, W) gray or (H, W, 3) RGB -> JFIF JPEG (4:4:4, Annex K
@@ -1083,19 +1028,8 @@ def jpeg_encode(img: np.ndarray, quality: int = 90,
     h, w = img.shape[:2]
     ql = _quality_scale(_Q_LUMA, quality)
     qc = _quality_scale(_Q_CHROMA, quality)
-    if gray:
-        planes = [img.astype(np.float64) - 128.0]
-    else:
-        rgb = img.astype(np.float64)
-        r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b - 128.0
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b
-        planes = [y, cb, cr]
-    # pad to multiples of 8 by edge replication
-    ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
-    planes = [np.pad(p, ((0, ph - h), (0, pw - w)), mode="edge")
-              for p in planes]
+    planes = _ycc_planes(img)
+    ph, pw = planes[0].shape
 
     def seg(marker: int, body: bytes) -> bytes:
         return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body

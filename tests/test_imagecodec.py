@@ -17,9 +17,12 @@ import numpy as np
 import pytest
 
 from tstoken.imagecodec import (_HUFF_AC_CHROMA, _HUFF_AC_LUMA,
-                                _HUFF_DC_CHROMA, _HUFF_DC_LUMA, _Q_LUMA,
-                                _ZIGZAG, _build_canonical, jpeg_decode,
-                                jpeg_encode, png_decode)
+                                _HUFF_DC_CHROMA, _HUFF_DC_LUMA, _Q_CHROMA,
+                                _Q_LUMA, _ZIGZAG, _BitWriter,
+                                _build_canonical, _encode_block,
+                                _encode_tables, _quality_scale,
+                                _ycc_planes, jpeg_decode, jpeg_encode,
+                                png_decode)
 from tstoken.multimodal import decode_image, image_feature
 from tstoken.plotting import png_encode
 
@@ -302,6 +305,55 @@ def _minimal_gray_jpeg(entropy: bytes, w: int = 8, h: int = 8,
     return b"".join(parts)
 
 
+def _rescan_baseline(img: np.ndarray, per_component: bool = False,
+                     dri: int = 0) -> bytes:
+    """jpeg_encode(img) (quality 90) with its entropy data re-coded by
+    the encoder's own block coder: one non-interleaved scan per
+    component and/or DRI=dri with an RSTn every dri MCUs. With neither
+    it reproduces jpeg_encode(img) byte for byte."""
+    base = jpeg_encode(img)
+    parts = [base[:base.index(b"\xff\xda")]]
+    if dri:
+        parts.append(_seg(0xDD, struct.pack(">H", dri)))
+    planes = _ycc_planes(np.asarray(img))
+    enc = _encode_tables()
+    tabs = [(enc["dcl"], enc["acl"]), (enc["dcc"], enc["acc"])]
+    qs = [_quality_scale(q, 90)[_ZIGZAG].astype(np.float64)
+          for q in (_Q_LUMA, _Q_CHROMA)]
+    nbx = planes[0].shape[1] // 8
+    nblocks = planes[0].size // 64
+    comps = list(range(len(planes)))
+    for group in ([[c] for c in comps] if per_component else [comps]):
+        parts.append(_seg(0xDA, bytes([len(group)]) + b"".join(
+            bytes([c + 1, 0x11 if c else 0x00]) for c in group)
+            + b"\x00\x3f\x00"))
+        for n in range(nblocks):
+            if n % (dri or nblocks) == 0:
+                if n:
+                    bw.flush()
+                    parts.append(bytes(bw.out)
+                                 + bytes([0xFF, 0xD0 + (n // dri - 1) % 8]))
+                bw, preds = _BitWriter(), [[0] for _ in planes]
+            by, bx = divmod(n, nbx)
+            for c in group:
+                _encode_block(bw, planes[c][by * 8:by * 8 + 8,
+                                            bx * 8:bx * 8 + 8],
+                              qs[min(c, 1)], preds[c], *tabs[min(c, 1)])
+        bw.flush()
+        parts.append(bytes(bw.out))
+    parts.append(b"\xff\xd9")
+    return b"".join(parts)
+
+
+def _smooth_rgb(shape: tuple, seed: int) -> np.ndarray:
+    rng = np.random.default_rng(seed)
+    c = rng.integers(0, 256, shape).astype(float)
+    for _ in range(3):
+        c[1:-1, 1:-1] = (c[:-2, 1:-1] + c[2:, 1:-1] + c[1:-1, :-2]
+                         + c[1:-1, 2:] + c[1:-1, 1:-1]) / 5
+    return c.astype(np.uint8)
+
+
 class TestJpegDecodeSpecFixture:
     """Hand-assembled bitstreams — independent of jpeg_encode."""
 
@@ -406,8 +458,51 @@ class TestJpegDecodeSpecFixture:
 
     def test_truncated_raises(self):
         payload = jpeg_encode(np.zeros((16, 16), np.uint8))
-        with pytest.raises((ValueError, IndexError)):
+        with pytest.raises(ValueError):
             jpeg_decode(payload[:40])
+
+    def test_oversized_frame_raises_valueerror(self):
+        # a 65535x65535 SOF would need tens of GiB of coefficient
+        # store: refused up front, not a MemoryError
+        payload = bytearray(jpeg_encode(np.zeros((8, 8), np.uint8)))
+        i = payload.index(b"\xff\xc0")
+        payload[i + 5:i + 9] = b"\xff\xff\xff\xff"
+        with pytest.raises(ValueError, match="decode limit"):
+            jpeg_decode(bytes(payload))
+
+    def test_rescan_helper_reproduces_encoder(self):
+        img = _smooth_rgb((24, 40, 3), 29)
+        assert _rescan_baseline(img) == jpeg_encode(img)
+
+    @pytest.mark.parametrize("dri", [0, 3])
+    def test_per_component_scans_equal_interleaved(self, dri):
+        """Three single-component sequential scans (A.2.2) carry the
+        same blocks as the interleaved scan: every scan must land in
+        the coefficient store, chroma included."""
+        img = _smooth_rgb((24, 40, 3), 31)
+        want = jpeg_decode(jpeg_encode(img))
+        got = jpeg_decode(_rescan_baseline(img, per_component=True,
+                                           dri=dri))
+        assert np.array_equal(got, want)
+        assert np.array_equal(
+            jpeg_decode(_rescan_baseline(img, dri=dri)), want)
+
+    def test_subsampled_gray_scan_is_raster_order(self):
+        """A single-component scan is non-interleaved whatever the
+        sampling factors, so 2x2 sampling reads blocks in raster order
+        and decodes exactly like the 1x1 twin."""
+        img = _smooth_rgb((24, 48, 3), 37)[..., 0]
+        payload = bytearray(jpeg_encode(img))
+        i = payload.index(b"\xff\xc0")
+        assert payload[i + 11] == 0x11
+        payload[i + 11] = 0x22
+        assert np.array_equal(jpeg_decode(bytes(payload)),
+                              jpeg_decode(jpeg_encode(img)))
+
+    def test_missing_restart_marker_raises(self):
+        mcu = bytes([0b10010010, 0b10111111])
+        with pytest.raises(ValueError, match="restart marker missing"):
+            jpeg_decode(_minimal_gray_jpeg(mcu + mcu, w=16, dri=1))
 
 
 class TestJpegRoundtrip:
@@ -484,7 +579,7 @@ class _Bits:
         return bytes(out)
 
 
-def _prog_gray_stream(scans, w=8, h=8):
+def _prog_gray_stream(scans, w=8, h=8, dri=0):
     """Hand-assembled SOF2 stream: DQT all-ones, flat Huffman tables,
     `scans` = [(ss, se, ah, al, entropy_bytes), ...]."""
     from tstoken.imagecodec import _FLAT_HUFF
@@ -495,12 +590,30 @@ def _prog_gray_stream(scans, w=8, h=8):
                   + bytes([1, 0x11, 0])),
              _seg(0xC4, bytes([0x00]) + bytes(counts) + bytes(syms)
                   + bytes([0x10]) + bytes(counts) + bytes(syms))]
+    if dri:
+        parts.append(_seg(0xDD, struct.pack(">H", dri)))
     for ss, se, ah, al, data in scans:
         parts.append(_seg(0xDA, bytes([1, 1, 0x00, ss, se,
                                        (ah << 4) | al])))
         parts.append(data)
     parts.append(b"\xff\xd9")
     return b"".join(parts)
+
+
+def _prog_restart_stream() -> bytes:
+    """SOF2 gray 16x8, DRI=1: a DC-first scan coding diff +3 in each
+    block and an AC-first scan coding k1=+1 then EOB in each block,
+    every block its own restart interval."""
+    dc, ac = _Bits(), _Bits()
+    dc.put(*_flat_code(0x02))
+    dc.put(2, 0b11)
+    ac.put(*_flat_code(0x01))
+    ac.put(1, 1)
+    ac.put(*_flat_code(0x00))
+    return _prog_gray_stream(
+        [(0, 0, 0, 0, dc.bytes() + b"\xff\xd0" + dc.bytes()),
+         (1, 63, 0, 0, ac.bytes() + b"\xff\xd0" + ac.bytes())],
+        w=16, dri=1)
 
 
 def _ref_idct_zigzag(coeff64):
@@ -617,6 +730,15 @@ class TestJpegProgressive:
                 _ref_idct_zigzag(blocks[b])
         want = np.clip(np.round(want), 0, 255)
         assert np.abs(img.astype(float) - want).max() <= 1
+
+    def test_restart_resets_dc_predictor(self):
+        """Each restart interval restarts DC prediction, so both blocks
+        hold DC 3 (not 3 then 6) and the same k1=+1."""
+        img = jpeg_decode(_prog_restart_stream())
+        coeff = np.zeros(64)
+        coeff[0], coeff[1] = 3, 1
+        want = np.clip(np.round(_ref_idct_zigzag(coeff)), 0, 255)
+        assert np.abs(img.astype(float) - np.tile(want, (1, 2))).max() <= 1
 
     def test_missing_scan_leaves_partial_but_decodes(self):
         """A stream with only the DC-first scan (a legal truncated

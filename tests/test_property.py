@@ -4,15 +4,21 @@ The pytest suite pins known fixtures; these generate adversarial
 inputs for the invariants that must hold for EVERY input at 100 TB:
 codec round-trips (a single mis-decoded block corrupts a tier
 restore), PNG structural validity (every builder output must decode),
-and the simhash pigeonhole recall contract.
+the simhash pigeonhole recall contract, and the decoder error
+contract (corrupt bytes raise only the documented exception types).
 """
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from test_imagecodec import (_prog_restart_stream, _rescan_baseline,
+                             _smooth_rgb)
 
 from tstoken.compress import (decode_timestamps, decode_values,
                               encode_timestamps, encode_values)
+from tstoken.imagecodec import jpeg_decode, jpeg_encode, png_decode
+from tstoken.multimodal import (decode_audio, encode_video, encode_wav,
+                                sample_video_frames)
 from tstoken.plotting import png_decode_size, png_encode
 
 # bounded float64s that survive the codec's bit-level transport
@@ -94,3 +100,52 @@ class TestSimhashRecallProperty:
             if (base & mask) == (other & mask):
                 shared = True
         assert shared
+
+
+def _decoder_corpus() -> list:
+    """(decoder, valid payload) pairs: every JPEG mode the decoder
+    has (baseline and progressive, gray and RGB, with and without
+    DRI), PNG, WAV, TSVC and both compressed-block codecs."""
+    rgb = _smooth_rgb((24, 40, 3), 41)
+    gray = rgb[..., 1]
+    ts = 1_700_000_000 + np.cumsum(np.r_[0, np.full(40, 60), 7, 3, 900])
+    return ([(png_decode, png_encode(rgb))]
+            + [(jpeg_decode, jpeg_encode(img, 80, progressive=prog))
+               for img in (rgb, gray) for prog in (False, True)]
+            + [(jpeg_decode, _rescan_baseline(rgb, dri=2)),
+               (jpeg_decode, _rescan_baseline(gray, per_component=True,
+                                              dri=3)),
+               (jpeg_decode, _prog_restart_stream()),
+               (decode_audio, encode_wav(np.sin(np.arange(64) / 3.0))),
+               (sample_video_frames, encode_video([rgb[:4, :5], gray[:3]])),
+               (decode_timestamps, encode_timestamps(ts)),
+               (decode_values, encode_values(np.cos(ts / 7e3) * 1e3))])
+
+
+_CORPUS = _decoder_corpus()
+
+
+class TestDecoderErrorContract:
+    def test_corpus_is_valid(self):
+        for decode, payload in _CORPUS:
+            decode(payload)
+
+    @given(st.data())
+    @settings(max_examples=400, deadline=None, derandomize=True)
+    def test_corrupt_payloads_raise_only_documented_errors(self, data):
+        """Up to 3 byte mutations and/or a truncation of a valid payload
+        may decode to garbage, but the only exceptions that may escape
+        are ValueError (malformed) and NotImplementedError (out of
+        scope) — the `multimodal._featurize` and tier-restore
+        contract."""
+        decode, payload = data.draw(st.sampled_from(_CORPUS))
+        buf = bytearray(payload)
+        for _ in range(data.draw(st.integers(0, 3))):
+            buf[data.draw(st.integers(0, len(buf) - 1))] = \
+                data.draw(st.integers(0, 255))
+        if data.draw(st.booleans()):
+            buf = buf[:data.draw(st.integers(0, len(buf) - 1))]
+        try:
+            decode(bytes(buf))
+        except (ValueError, NotImplementedError):
+            pass
