@@ -367,15 +367,14 @@ def _tok_t1m_staged(spark, gapfilled: bool = False) -> DataFrame:
     """Materialized 1m tier (plain or gap-filled), staged to parquet
     once per (SparkContext, variant) and re-read thereafter.
 
-    The flag-family detectors reference their input tier several times
-    (MAD is two-pass; the MA detector joins the CV window search back
-    to the full series), so handing them the unmaterialized
-    synth→posexplode→salted-agg lineage re-executes the rollup under
-    every reference — tok_ma_flags carried Exchange×38 in the round-4
-    PLANS.md. In production the tiers ARE materialized tables (the
-    TableIO continuous-aggregate path); staging here makes the
-    contract plans match that shape: one rollup execution, then
-    detector passes over a parquet scan of bounded tier rows.
+    In production the tiers ARE materialized tables (the TableIO
+    continuous-aggregate path); staging here makes the contract plans
+    match that shape: one rollup execution, then detector passes over a
+    parquet scan of bounded tier rows. The detectors themselves read
+    their input once (per-source fences are window aggregates), except
+    ma_flags, whose CV window search is a second reference joined back
+    to the full series — over the unmaterialized synth→posexplode→
+    salted-agg lineage that second reference would re-run the rollup.
     """
     from tstoken.gapfill import gap_fill
     from tstoken.rollup import rollup_1m

@@ -5,6 +5,11 @@ Two layers (SURVEY.md §7.3):
     search): pure pyspark.sql expressions — whole-stage codegen, no
     Python in the data path. These are exact reimplementations of the
     reference's fence math (catch.py:124-165, 186, 216-235, 743-947).
+    Every per-source statistic (quartiles, mean/std, median/MAD) is a
+    Window.partitionBy("source") aggregate attached to each row, so a
+    detector reads its input once: one shuffle, no join back. The only
+    broadcast join left is ma_flags' CV window pick, which aggregates
+    a different row set (the test folds).
   - GROUPED Arrow-UDF detectors (classic/STL/MSTL/ESD): applyInPandas
     per source, each group being ONE rolled-up series (bounded size:
     buckets, never raw rows), running the tstoken.compat pipeline.
@@ -47,19 +52,15 @@ def iqr_flags(rollup: DataFrame, value_col: str = VALUE_COL) -> DataFrame:
     """Per-source IQR fences, fully native (catch.py:150-157 semantics:
     exact linear-interpolation percentiles, fences ±1.5·IQR)."""
     v = F.col(value_col).cast("double")
-    fences = (rollup.groupBy("source")
-              .agg(F.percentile(v, F.array(F.lit(0.25), F.lit(0.75)))
-                   .alias("q")))
-    fences = fences.select(
-        "source",
-        (F.col("q")[0] - 1.5 * (F.col("q")[1] - F.col("q")[0])).alias("lo"),
-        (F.col("q")[1] + 1.5 * (F.col("q")[1] - F.col("q")[0])).alias("hi"),
-        (F.col("q")[1] - F.col("q")[0]).alias("iqr"))
-    j = rollup.join(F.broadcast(fences), "source")
-    flag = (v < F.col("lo")) | (v > F.col("hi"))
-    dist = F.greatest(F.col("lo") - v, v - F.col("hi"), F.lit(0.0))
-    score = F.when(F.col("iqr") > 0, dist / F.col("iqr")).otherwise(dist)
-    return _flags_select(j, "iqr", flag, score)
+    q = F.percentile(v, F.array(F.lit(0.25), F.lit(0.75)))
+    j = rollup.select("source", "bucket_ts", v.alias("v"),
+                      q.over(Window.partitionBy("source")).alias("q"))
+    v, q1, q3 = F.col("v"), F.col("q")[0], F.col("q")[1]
+    iqr = q3 - q1
+    lo, hi = q1 - 1.5 * iqr, q3 + 1.5 * iqr
+    dist = F.greatest(lo - v, v - hi, F.lit(0.0))
+    score = F.when(iqr > 0, dist / iqr).otherwise(dist)
+    return _flags_select(j, "iqr", (v < lo) | (v > hi), score)
 
 
 # -------------------------------------------------------------- z-score
@@ -68,33 +69,49 @@ def zscore_flags(rollup: DataFrame, value_col: str = VALUE_COL,
                  threshold: float = 2.0) -> DataFrame:
     """|population z| > 2 per source (catch.py:186)."""
     v = F.col(value_col).cast("double")
-    stats = rollup.groupBy("source").agg(
-        F.avg(v).alias("mu"), F.stddev_pop(v).alias("sd"))
-    j = rollup.join(F.broadcast(stats), "source")
-    z = F.when(F.col("sd") > 0, F.abs((v - F.col("mu")) / F.col("sd"))) \
+    src = Window.partitionBy("source")
+    j = rollup.select("source", "bucket_ts", v.alias("v"),
+                      F.avg(v).over(src).alias("mu"),
+                      F.stddev_pop(v).over(src).alias("sd"))
+    z = F.when(F.col("sd") > 0,
+               F.abs((F.col("v") - F.col("mu")) / F.col("sd"))) \
          .otherwise(F.lit(0.0))
     return _flags_select(j, "zscore", z > threshold, z)
 
 
 # ------------------------------------------------------------------ MAD
 
+def _mad_fences(df: DataFrame, cols: dict[str, str]) -> DataFrame:
+    """Append ad_<t> = |c - median(c)| and mad_<t> = median(ad_<t>) per
+    source for every {t: c}. The two median windows share the (source)
+    partitioning, so the plan carries one shuffle and no join."""
+    src = Window.partitionBy("source")
+    med = df.select("*", *[
+        F.percentile(c, F.lit(0.5)).over(src).alias(f"med_{t}")
+        for t, c in cols.items()])
+    ad = med.select("*", *[F.abs(F.col(c) - F.col(f"med_{t}")).alias(f"ad_{t}")
+                           for t, c in cols.items()])
+    return ad.select("*", *[
+        F.percentile(f"ad_{t}", F.lit(0.5)).over(src).alias(f"mad_{t}")
+        for t in cols])
+
+
+def _mad_score(t: str) -> F.Column:
+    """0.6745·ad/MAD; a zero MAD scores 1e308 off the median, 0 on it."""
+    ad, mad = F.col(f"ad_{t}"), F.col(f"mad_{t}")
+    return F.when(mad > 0, F.lit(0.6745) * ad / mad) \
+            .otherwise(F.when(ad > 0, F.lit(1e308)).otherwise(F.lit(0.0)))
+
+
 def mad_flags(rollup: DataFrame, value_col: str = VALUE_COL,
               threshold: float = 3.5) -> DataFrame:
     """Modified z-score 0.6745·|x-med|/MAD > 3.5 (catch.py:216-235),
-    in two native aggregation passes — no UDF (SURVEY.md A3)."""
+    as two per-source median windows — no UDF (SURVEY.md A3)."""
     v = F.col(value_col).cast("double")
-    med = rollup.groupBy("source").agg(
-        F.percentile(v, F.lit(0.5)).alias("med"))
-    j1 = rollup.join(F.broadcast(med), "source") \
-               .withColumn("absdev", F.abs(v - F.col("med")))
-    mad = j1.groupBy("source").agg(
-        F.percentile(F.col("absdev"), F.lit(0.5)).alias("mad"))
-    j2 = j1.join(F.broadcast(mad), "source")
-    score = F.when(F.col("mad") > 0,
-                   F.lit(0.6745) * F.col("absdev") / F.col("mad")) \
-             .otherwise(F.when(F.col("absdev") > 0, F.lit(1e308))
-                        .otherwise(F.lit(0.0)))
-    return _flags_select(j2, "mad", score > threshold, score)
+    j = _mad_fences(rollup.select("source", "bucket_ts", v.alias("v")),
+                    {"v": "v"})
+    score = _mad_score("v")
+    return _flags_select(j, "mad", score > threshold, score)
 
 
 # --------------------------------------------------------- moving average
@@ -178,9 +195,10 @@ def ma_flags(rollup: DataFrame, value_col: str = VALUE_COL,
     full = full.withColumn("ma", chosen)
 
     # z-score of the MA series (NaN head skipped, population std)
-    zstats = full.groupBy("source").agg(
-        F.avg("ma").alias("mu"), F.stddev_pop("ma").alias("sd"))
-    j = full.join(F.broadcast(zstats), "source")
+    n_w = Window.partitionBy("source")
+    j = full.select("source", "bucket_ts", "ma",
+                    F.avg("ma").over(n_w).alias("mu"),
+                    F.stddev_pop("ma").over(n_w).alias("sd"))
     z = F.when(F.col("ma").isNull(), F.lit(None).cast("double")) \
          .when(F.col("sd") > 0, F.abs((F.col("ma") - F.col("mu")) / F.col("sd"))) \
          .otherwise(F.lit(0.0))
@@ -222,12 +240,6 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
     the round-1 engine-native rows. Rolling-mean detrending absorbs
     seasonality; log scale makes x8 spikes and x1/8 dips symmetric.
 
-    Scale note: MAD is inherently two-pass, so the windowed feature
-    subtree is referenced by both aggregation passes and the final
-    projection. Run this over a MATERIALIZED tier table (the engine's
-    TableIO pipeline does), not over an unmaterialized rollup lineage —
-    otherwise each reference recomputes the rollup upstream.
-
     `adaptive_dip=True` (OPT-IN; the frozen defaults above are never
     altered by it being off) lowers the dip threshold to
     `adaptive_dip_low` for sources whose median docs/bucket is at most
@@ -259,31 +271,16 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
             .withColumn("d_min", F.col("lmin") - F.avg("lmin").over(w))
             .withColumn("d_max", F.col("lmax") - F.avg("lmax").over(w)))
 
-    # All three MAD fences share ONE two-pass aggregation over feat
-    # (3 medians in pass 1, 3 MADs in pass 2, broadcast joins back) —
-    # calling mad_flags three times would re-derive the windowed feat
-    # subtree up to 6x. Fence math is identical to mad_flags.
-    cols = {"a": "avg_n_tok", "s": "d_min", "d": "d_max"}
-    dens_agg = ([F.percentile(F.col("n_docs").cast("double"), F.lit(0.5))
-                 .alias("med_docs")] if adaptive_dip else [])
-    med = feat.groupBy("source").agg(*[
-        F.percentile(F.col(c), F.lit(0.5)).alias(f"med_{t}")
-        for t, c in cols.items()], *dens_agg)
-    j1 = feat.join(F.broadcast(med), "source")
-    for t, c in cols.items():
-        j1 = j1.withColumn(f"ad_{t}", F.abs(F.col(c) - F.col(f"med_{t}")))
-    mad = j1.groupBy("source").agg(*[
-        F.percentile(F.col(f"ad_{t}"), F.lit(0.5)).alias(f"mad_{t}")
-        for t in cols])
-    j2 = j1.join(F.broadcast(mad), "source")
+    # All three MAD fences (and med_docs) share one two-select window
+    # pass over feat, on the partitioning feat's rolling window already
+    # has. Fence math is identical to mad_flags.
+    if adaptive_dip:
+        feat = feat.withColumn("med_docs", F.percentile(
+            F.col("n_docs").cast("double"), F.lit(0.5))
+            .over(Window.partitionBy("source")))
+    j = _mad_fences(feat, {"a": "avg_n_tok", "s": "d_min", "d": "d_max"})
 
-    def mscore(t: str) -> F.Column:
-        return F.when(F.col(f"mad_{t}") > 0,
-                      F.lit(0.6745) * F.col(f"ad_{t}") / F.col(f"mad_{t}")) \
-                .otherwise(F.when(F.col(f"ad_{t}") > 0, F.lit(1e308))
-                           .otherwise(F.lit(0.0)))
-
-    s_a, s_s, s_d = mscore("a"), mscore("s"), mscore("d")
+    s_a, s_s, s_d = _mad_score("a"), _mad_score("s"), _mad_score("d")
     dip_fence = F.lit(dip_threshold)
     if adaptive_dip:
         dip_fence = F.when(
@@ -292,7 +289,7 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
     flag = (s_a > avg_threshold) | (s_s > spike_threshold) \
         | ((s_d > dip_fence) & (F.col("d_max") < 0))
     score = F.greatest(s_a, s_s, s_d)
-    out = _flags_select(j2, "extrema_ensemble", flag, score)
+    out = _flags_select(j, "extrema_ensemble", flag, score)
     if "gap_filled" in rollup.columns:
         # flag contract: EVERY input bucket gets a boolean (module
         # docstring / FIXTURES A2). Gap-filled buckets carry no

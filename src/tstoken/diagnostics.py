@@ -8,7 +8,8 @@ the exact frames those plots draw — as native Spark operators:
 
   - monthwise_box: per (source, month) box-plot statistics, the data
     behind `build_monthwise_plot` (diagnostics.py:237-259), computed
-    with one exact-percentile aggregation (SQL-expressible → oracled).
+    with one exact-percentile window and one aggregate
+    (SQL-expressible → oracled).
   - decompose_tier: per-source seasonal/trend/resid/observed export
     over a rolled tier, the Spark analogue of
     `build_decomposition_results` (diagnostics.py:322-388) — classic
@@ -20,7 +21,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, StringType, StructField,
                                StructType, TimestampType)
@@ -46,39 +47,32 @@ def monthwise_box(daily: DataFrame, value_col: str = "n_events",
     (`diagnostics.py:237-259`): seaborn's boxplot over (Month-Year,
     Count) reduces to exactly these aggregates — quartiles with linear
     interpolation (matplotlib's default), 1.5·IQR whiskers clipped to
-    the data, and the count of fliers. One shuffle on (source, month);
-    every statistic is a native aggregate under codegen.
+    the data, and the count of fliers. One shuffle on (source, month):
+    an exact-percentile window attaches the quartiles to every point,
+    then one aggregate reduces each month.
     """
     v = F.col(value_col).cast("double")
-    q = F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
-    base = (daily.groupBy(
-        "source", F.date_trunc("month", F.col(ts_col)).alias("month"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.min(v).alias("vmin"), F.max(v).alias("vmax"),
-             q.alias("q")))
-    q1, med, q3 = base["q"][0], base["q"][1], base["q"][2]
-    iqr = q3 - q1
-    lo_fence = q1 - 1.5 * iqr
-    hi_fence = q3 + 1.5 * iqr
-    stats = base.select(
-        "source", "month", "n", "vmin", "vmax",
-        q1.alias("q1"), med.alias("median"), q3.alias("q3"))
-    # whiskers = extreme data points inside the fences; fliers = points
-    # outside. Second pass joins the (tiny, broadcast) fences back.
-    fences = base.select("source", "month", lo_fence.alias("lo"),
-                         hi_fence.alias("hi"))
     pts = daily.select(
         "source", F.date_trunc("month", F.col(ts_col)).alias("month"),
-        v.alias("v")).join(F.broadcast(fences), ["source", "month"])
-    whisk = (pts.groupBy("source", "month")
-             .agg(F.min(F.when((F.col("v") >= F.col("lo")), F.col("v")))
-                   .alias("whisker_lo"),
-                  F.max(F.when((F.col("v") <= F.col("hi")), F.col("v")))
-                   .alias("whisker_hi"),
-                  F.sum(F.when((F.col("v") < F.col("lo"))
-                               | (F.col("v") > F.col("hi")), 1)
-                         .otherwise(0)).alias("n_fliers")))
-    return stats.join(whisk, ["source", "month"])
+        v.alias("v"))
+    q = F.percentile(F.col("v"), F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)))
+    pts = pts.select("*", q.over(Window.partitionBy("source", "month"))
+                     .alias("q"))
+    v, q1, q3 = F.col("v"), F.col("q")[0], F.col("q")[2]
+    lo, hi = q1 - 1.5 * (q3 - q1), q3 + 1.5 * (q3 - q1)
+    # q is constant per (source, month), so grouping by it adds no
+    # shuffle; whiskers = extreme data points inside the fences,
+    # fliers = points outside
+    return (pts.groupBy("source", "month", "q")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.min(v).alias("vmin"), F.max(v).alias("vmax"),
+                 F.min(F.when(v >= lo, v)).alias("whisker_lo"),
+                 F.max(F.when(v <= hi, v)).alias("whisker_hi"),
+                 F.sum(F.when((v < lo) | (v > hi), 1).otherwise(0))
+                 .alias("n_fliers"))
+            .select("source", "month", "n", "vmin", "vmax",
+                    q1.alias("q1"), F.col("q")[1].alias("median"),
+                    q3.alias("q3"), "whisker_lo", "whisker_hi", "n_fliers"))
 
 
 def decompose_tier(rollup: DataFrame, tier: str,

@@ -193,6 +193,74 @@ class TestDetectors:
             expect = mad_labels(grp["sum_n_tok"].to_numpy(float))
             assert (grp["is_outlier"].to_numpy() == expect).all(), src
 
+    @pytest.fixture(scope="class")
+    def tier_path(self, gf, tmp_path_factory):
+        path = str(tmp_path_factory.mktemp("tier") / "t1m")
+        gf.write.parquet(path)
+        return path
+
+    @staticmethod
+    def _executed_plan(df) -> str:
+        """Final adaptive plan of `df` after collecting it."""
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]
+
+    @pytest.mark.parametrize("name,scans,n_bhj", [
+        ("iqr_flags", {1}, 0), ("zscore_flags", {1}, 0), ("mad_flags", {1}, 0),
+        ("extrema_ensemble_flags", {1, 2}, 0), ("ma_flags", None, 1)],
+        ids=["iqr", "zscore", "mad", "extrema", "ma"])
+    def test_plan_reads_tier_once(self, spark, tier_path, name, scans, n_bhj):
+        # per-source fences are window aggregates over the one input,
+        # not a groupBy joined back (each join re-reads the input and
+        # runs its broadcast as a separate job); the extrema ensemble
+        # may read its tier twice (feature rows + gap rows), and
+        # ma_flags keeps one broadcast for the CV window pick
+        plan = self._executed_plan(
+            getattr(detect, name)(spark.read.parquet(tier_path)))
+        assert plan.count("BroadcastHashJoin") == n_bhj, plan
+        assert scans is None or plan.count("Scan parquet") in scans, plan
+
+    @pytest.fixture(scope="class")
+    def edge_tier(self, spark):
+        t0 = pd.Timestamp("2024-01-01")
+        ordinary = [10, 12, 11, 13, 9, 10, 12, 40, 11, 10, 13, 12]
+        series = {"const": [5] * 8, "spike": [5] * 7 + [50],
+                  "single": [7], "ordinary": ordinary}
+        rows = [(s, t0 + pd.Timedelta(minutes=i), v)
+                for s, vals in series.items() for i, v in enumerate(vals)]
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=["source", "bucket_ts", "sum_n_tok"])
+        ), series
+
+    @pytest.mark.parametrize("method", ["iqr", "mad", "zscore"])
+    def test_window_fences_edge_sources(self, edge_tier, method):
+        from tstoken.stats.dispersion import (iqr_labels, mad_labels,
+                                              mad_scores, zscore)
+        df, series = edge_tier
+        fl = (getattr(detect, f"{method}_flags")(df).toPandas()
+              .sort_values(["source", "bucket_ts"]))
+        labels = {"iqr": iqr_labels, "mad": mad_labels,
+                  "zscore": lambda x: np.abs(zscore(x)) > 2.0}[method]
+        got = {s: g for s, g in fl.groupby("source")}
+        assert set(got) == set(series)
+        for s, vals in series.items():
+            x = np.asarray(vals, dtype=np.float64)
+            assert (got[s]["is_outlier"].to_numpy() == labels(x)).all(), s
+        # zero spread (IQR = MAD = sd = 0) scores 0.0 on the centre; off
+        # it, MAD scores 1e308 and IQR the raw distance to the fence
+        for s in ("const", "single"):
+            assert (got[s]["score"] == 0.0).all(), s
+        spike, ordinary = (np.asarray(series[s], dtype=np.float64)
+                           for s in ("spike", "ordinary"))
+        want = {"iqr": {"spike": [0.0] * 7 + [45.0]},
+                "mad": {"spike": [0.0] * 7 + [1e308],
+                        "ordinary": mad_scores(ordinary)},
+                "zscore": {"spike": np.abs(zscore(spike)),
+                           "ordinary": np.abs(zscore(ordinary))}}[method]
+        for s, w in want.items():
+            np.testing.assert_allclose(got[s]["score"], w, err_msg=s)
+
     def test_stl_f1_vs_ground_truth(self, spark, gf):
         fl = detect.grouped_flags(gf, "1m", "stl").toPandas()
         gt = synth.ground_truth(spark, ROWS, n_sources=SOURCES).toPandas()

@@ -44,6 +44,60 @@ class TestOracleCompare:
         assert compare(a, b) is None
 
 
+class TestOracleResume:
+    STAMP = {"git_head": "abc", "git_dirty": False, "src_sha256": "f00",
+             "entry_sha256": "ba5"}
+
+    def _prior(self, stamp):
+        return {"sf_dir": "/sf", "code_stamp": stamp, "queries": {
+            "a": {"status": "OK"}, "b": {"status": "rows_only"},
+            "c": {"status": "FAIL"}}}
+
+    def test_same_stamp_keeps_completed_rows(self):
+        from check_oracles import resumable_rows
+        kept = resumable_rows(self._prior(self.STAMP), "/sf", self.STAMP)
+        assert set(kept) == {"a", "b"}
+
+    @pytest.mark.parametrize("field,value", [
+        ("git_head", "def"), ("git_dirty", True), ("src_sha256", "bad"),
+        ("entry_sha256", "bad")])
+    def test_other_revision_keeps_nothing(self, field, value):
+        from check_oracles import resumable_rows
+        prior = self._prior({**self.STAMP, field: value})
+        assert resumable_rows(prior, "/sf", self.STAMP) == {}
+
+    def test_unstamped_or_other_sf_keeps_nothing(self):
+        from check_oracles import resumable_rows
+        prior = self._prior(self.STAMP)
+        assert resumable_rows(prior, "/other", self.STAMP) == {}
+        del prior["code_stamp"]
+        assert resumable_rows(prior, "/sf", self.STAMP) == {}
+
+    def test_code_stamp_tracks_src(self, tmp_path):
+        from check_oracles import code_stamp
+        (tmp_path / "src").mkdir()
+        (tmp_path / "__spark_entry__.py").write_text("x = 1\n")
+        mod = tmp_path / "src" / "m.py"
+        mod.write_text("a = 1\n")
+        before = code_stamp(str(tmp_path))
+        assert before["git_head"] is None and before["git_dirty"] is None
+        mod.write_text("a = 2\n")
+        after = code_stamp(str(tmp_path))
+        assert after["src_sha256"] != before["src_sha256"]
+        (tmp_path / "__spark_entry__.py").write_text("x = 2\n")
+        assert code_stamp(str(tmp_path))["entry_sha256"] \
+            != after["entry_sha256"]
+
+    def test_duckdb_memory_limit(self, tmp_path):
+        from check_oracles import duckdb_memory_limit
+        mi = tmp_path / "meminfo"
+        mi.write_text("MemTotal:       16384000 kB\nMemFree: 1 kB\n")
+        assert duckdb_memory_limit(str(mi)) == f"{16384000 * 3 // 4 // 1024}MiB"
+        mi.write_text("MemTotal:       268435456 kB\n")
+        assert duckdb_memory_limit(str(mi)) == "32768MiB"
+        assert duckdb_memory_limit(str(tmp_path / "missing")) == "32768MiB"
+
+
 class TestScalingVerdicts:
     def _summary(self, walls, cals):
         return {

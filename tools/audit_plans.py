@@ -26,7 +26,7 @@ INTERESTING = re.compile(
 
 SUMMARY_KEYS = ["Scan parquet", "BroadcastHashJoin", "SortMergeJoin",
                 "BroadcastNestedLoopJoin", "CartesianProduct",
-                "FlatMapGroupsInPandas", "Exchange"]
+                "FlatMapGroupsInPandas", "Exchange", "Window"]
 
 
 def condense(plan: str, max_lines: int = 40) -> tuple[str, dict]:

@@ -7,6 +7,7 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import tempfile
@@ -19,6 +20,7 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "src"))
+sys.path.insert(0, os.path.join(REPO, "perfbench"))  # host: code stamp
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -89,6 +91,42 @@ def compare(a: pd.DataFrame, b: pd.DataFrame) -> str | None:
     return None
 
 
+def code_stamp(root: str = REPO) -> dict:
+    """The revision a gate record vouches for: git HEAD, the dirty flag
+    and sha256 hashes of src/ and of the query contract (HEAD alone
+    cannot tell two dirty trees apart)."""
+    from host import git_state, tree_sha256
+
+    with open(os.path.join(root, "__spark_entry__.py"), "rb") as f:
+        entry = hashlib.sha256(f.read()).hexdigest()
+    return {**git_state(root), "src_sha256": tree_sha256(root, "src"),
+            "entry_sha256": entry}
+
+
+def resumable_rows(prior: dict, sf_dir: str, stamp: dict) -> dict:
+    """Completed rows of an earlier record that --resume may keep: none
+    unless it ran over the same sf dir AND carries the same code stamp,
+    so a resumed gate never vouches for rows of another revision."""
+    if prior.get("sf_dir") != sf_dir or prior.get("code_stamp") != stamp:
+        return {}
+    return {k: v for k, v in prior.get("queries", {}).items()
+            if v.get("status") in ("OK", "rows_only")}
+
+
+def duckdb_memory_limit(meminfo: str = "/proc/meminfo") -> str:
+    """min(32 GB, 75% of MemTotal): a big oracle spills instead of
+    taking the whole host (32 GB when MemTotal cannot be read)."""
+    cap_kib = 32 << 20
+    try:
+        with open(meminfo) as f:
+            total = next(int(l.split()[1]) for l in f
+                         if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        total = None
+    kib = cap_kib if total is None else min(cap_kib, total * 3 // 4)
+    return f"{kib // 1024}MiB"
+
+
 def main():
     args = sys.argv[1:]
     json_out = None
@@ -138,7 +176,7 @@ def main():
     # the box: the minhash-md5 pipeline oracle at the synthesized large
     # sf (50k docs) materializes ~10^9 shingle-hash rows and was
     # observed climbing past 90 GB RSS before this limit existed.
-    dmem = os.environ.get("CHECK_ORACLES_DUCKDB_MEM", "32GB")
+    dmem = os.environ.get("CHECK_ORACLES_DUCKDB_MEM") or duckdb_memory_limit()
     spill = os.path.join(tempfile.gettempdir(), "check_oracles_duckdb_spill")
     os.makedirs(spill, exist_ok=True)
     con.execute(f"SET memory_limit='{dmem}'")
@@ -152,6 +190,7 @@ def main():
     oracles = entrymod.oracle_sql()
     failures = []
     record: dict[str, dict] = {}
+    stamp = code_stamp()
     if resume and json_out and os.path.exists(json_out):
         # resume from an interrupted gate: keep completed rows, re-run
         # only what's missing or failed (incremental _flush means a
@@ -160,10 +199,13 @@ def main():
 
         with open(json_out) as f:
             prior = _json.load(f)
-        if prior.get("sf_dir") == sf_dir:
-            record = {k: v for k, v in prior.get("queries", {}).items()
-                      if v.get("status") in ("OK", "rows_only")}
+        record = resumable_rows(prior, sf_dir, stamp)
+        if record:
             print(f"resuming: {len(record)} completed queries kept")
+        else:
+            print(f"resuming: nothing kept from {json_out} (sf_dir "
+                  f"{prior.get('sf_dir')!r}, code {prior.get('code_stamp')}; "
+                  f"this run: {sf_dir!r}, code {stamp})")
 
     def _flush(partial: bool) -> None:
         # incremental checkpoint: a driver OOM/GC death mid-gate (seen
@@ -173,7 +215,8 @@ def main():
         import json as _json
 
         with open(json_out, "w") as f:
-            _json.dump({"sf_dir": sf_dir, "failures": failures,
+            _json.dump({"sf_dir": sf_dir, "code_stamp": stamp,
+                        "failures": failures,
                         "queries": record, "partial": partial},
                        f, indent=1)
 
