@@ -136,13 +136,20 @@ def main():
             if n != "train(seed0)"]
     held_ad = [results[n]["ensemble_adaptive"] for n, _ in REGIMES
                if n != "train(seed0)"]
+    # thresholds come from the code, not hard-coded prose
+    import inspect
+    from tstoken.detect import extrema_ensemble_flags
+    d = {k: par.default for k, par in
+         inspect.signature(extrema_ensemble_flags).parameters.items()}
     summary = {
         "rows": ROWS, "sources": SOURCES, "cpus": CPUS,
         "commit": commit,
-        "thresholds": "FROZEN library defaults "
-                      "(avg 3.5 / spike 3.5 / dip 8.0); adaptive "
-                      "column is the OPT-IN adaptive_dip=True variant "
-                      "(dip 5.0 when median docs/bucket <= 3)",
+        "thresholds": f"FROZEN library defaults (avg {d['avg_threshold']}"
+                      f" / spike {d['spike_threshold']} / dip "
+                      f"{d['dip_threshold']}); adaptive column is the "
+                      "OPT-IN adaptive_dip=True variant (dip "
+                      f"{d['adaptive_dip_low']} when median docs/bucket "
+                      f"<= {d['adaptive_dip_max_density']})",
         "regimes": results,
         "ensemble_train": results["train(seed0)"]["ensemble"],
         "ensemble_heldout_min": min(held),

@@ -6,11 +6,17 @@ throughput metrics". The ledger is itself a table (FIXTURES.md A2):
     ledger(tier, source, chunk, input_snapshot, rows_in, rows_out,
            wall_ms, points_per_sec, finished_at)
 
-A work unit is (tier, source, chunk) where chunk is a day index of the
-bucket. `pending_units` anti-joins the candidate units against the
-ledger (SURVEY.md J3), so a re-run after a crash processes only the
-missing units; tier writes go through overwrite_partitions, so
-replaying a unit is idempotent (byte-identical tiers).
+A work unit is (tier, source, chunk) where chunk is the day index of the
+bucket (no tier bucket spans days, so a unit keeps its chunk across
+tiers). `run_incremental_rollup` reads the ledger once; a candidate is
+pending when its tier's ledger lacks it. 1m candidates are the distinct
+units of raw's `doc_id`/`source` projection; a cascade's are its source
+tier's ledger units, including those recorded earlier in the same call
+(the ledger, not the table, vouches for a unit). Only pending units'
+input rows are rolled up; a tier with nothing pending runs no Spark job.
+NULL-keyed units never match the ledger (SURVEY.md J3): always pending.
+Tier writes replace the pending units' rows, so replaying a unit is
+idempotent (byte-identical tiers).
 """
 
 from __future__ import annotations
@@ -18,7 +24,7 @@ from __future__ import annotations
 import time
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (IntegerType, LongType, DoubleType, StringType,
                                StructField, StructType, TimestampType)
@@ -49,91 +55,85 @@ def read_ledger(io: TableIO) -> DataFrame:
     return io.spark.createDataFrame([], LEDGER_SCHEMA)
 
 
-def pending_units(candidates: DataFrame, ledger: DataFrame,
-                  tier: str) -> DataFrame:
-    """(source, chunk) units not yet in the ledger for this tier."""
-    done = ledger.filter(F.col("tier") == tier).select("source", "chunk")
-    return candidates.select("source", "chunk").distinct() \
-        .join(done, ["source", "chunk"], "left_anti")
+def _in_units(units: set) -> Column:
+    """Row is in one of `units` ((source, chunk) pairs): an exact string-key
+    InSet. NULL-keyed rows always are, as their units are always pending."""
+    key = F.concat(F.col("source"), F.lit("|"), F.col("chunk").cast("string"))
+    return key.isNull() | key.isin(
+        [f"{s}|{c}" for s, c in units if s is not None and c is not None])
 
 
 def record_units(io: TableIO, tier: str, units_with_counts: DataFrame,
                  input_snapshot: str, wall_ms: int) -> None:
-    """Append finished units. units_with_counts: (source, chunk,
-    rows_in, rows_out). Throughput is attributed evenly by rows."""
-    total = units_with_counts.agg(F.sum("rows_out")).collect()[0][0] or 0
-    pps = (total / (wall_ms / 1000.0)) if wall_ms > 0 else 0.0
-    now = datetime.now(timezone.utc)
-    rows = (units_with_counts
+    """Append finished units (source, chunk, rows_in, rows_out) in one
+    write; throughput is the step's total rows_out over its wall."""
+    total = F.sum("rows_out").over(Window.partitionBy())
+    pps = total / F.lit(wall_ms / 1000.0) if wall_ms > 0 else F.lit(0.0)
+    rows = (units_with_counts.coalesce(1)   # one row per unit: no shuffle
             .withColumn("tier", F.lit(tier))
             .withColumn("input_snapshot", F.lit(input_snapshot))
             .withColumn("wall_ms", F.lit(wall_ms).cast("long"))
-            .withColumn("points_per_sec", F.lit(float(pps)))
-            .withColumn("finished_at", F.lit(now))
+            .withColumn("points_per_sec", pps.cast("double"))
+            .withColumn("finished_at", F.lit(datetime.now(timezone.utc)))
             .select([f.name for f in LEDGER_SCHEMA.fields]))
     io.append(LEDGER_TABLE, rows, partition_by=("tier",))
+
+
+def _commit(io: TableIO, tier: str, units: set, work: DataFrame,
+            input_snapshot: str, t0: float, done: set) -> None:
+    """Merge `work` (the rows of `units`) into rollup_<tier>; record units."""
+    table = f"rollup_{tier}"
+    work = work.withColumn("chunk", chunk_col()).cache()
+    if io.exists(table):
+        merged = io.read(table).filter(~_in_units(units)).unionByName(work)
+        io.overwrite_safe(table, merged, partition_by=("source",))
+    else:
+        io.overwrite(table, work, partition_by=("source",))
+    counts = work.groupBy("source", "chunk").agg(
+        F.sum("n_docs").alias("rows_in"), F.count(F.lit(1)).alias("rows_out"))
+    record_units(io, tier, counts, input_snapshot,
+                 int((time.time() - t0) * 1000))
+    work.unpersist()
+    done.update((tier, *u) for u in units)
 
 
 def run_incremental_rollup(spark: SparkSession, io: TableIO, raw: DataFrame,
                            n_salts: int = 16) -> dict[str, int]:
     """Checkpointed tier build: only pending (source, chunk) units are
-    (re)computed; tier writes are partition-overwrites ⇒ idempotent.
+    (re)computed, from their own input rows; tier writes replace the units'
+    rows ⇒ idempotent. Returns per-tier counts of processed units."""
+    from .rollup import bucket_col, rollup_1m, rollup_cascade, with_event_time
 
-    Returns per-tier counts of processed units.
-    """
-    from .rollup import rollup_1m, rollup_cascade
+    done = {tuple(r) for r in
+            read_ledger(io).select("tier", "source", "chunk").collect()}
 
-    ledger = read_ledger(io)
-    processed: dict[str, int] = {}
+    def pending(tier: str, candidates: set) -> set:
+        return {u for u in candidates if None in u or (tier, *u) not in done}
 
-    # ---- 1m from raw
-    t0 = time.time()
-    full_1m = rollup_1m(raw, n_salts=n_salts).withColumn("chunk", chunk_col())
-    pend = pending_units(full_1m, ledger, "1m")
-    n_pend = pend.count()
-    processed["1m"] = n_pend
-    if n_pend > 0:
-        work = full_1m.join(F.broadcast(pend), ["source", "chunk"], "left_semi")
-        work = work.cache()
-        io_snapshot = "raw"
-        if io.exists("rollup_1m"):
-            merged = io.read("rollup_1m").join(
-                pend, ["source", "chunk"], "left_anti").unionByName(work)
-            io.overwrite_safe("rollup_1m", merged, partition_by=("source",))
-        else:
-            io.overwrite("rollup_1m", work, partition_by=("source",))
-        counts = work.groupBy("source", "chunk").agg(
-            F.sum("n_docs").alias("rows_in"),
-            F.count(F.lit(1)).alias("rows_out"))
-        record_units(io, "1m", counts, io_snapshot,
-                     int((time.time() - t0) * 1000))
-        work.unpersist()
-
-    # ---- cascades
-    for src_tier, dst_tier in (("1m", "1h"), ("1h", "1d")):
-        t0 = time.time()
-        ledger = read_ledger(io)
-        src_df = io.read(f"rollup_{src_tier}")
-        full = rollup_cascade(src_df.drop("chunk"), dst_tier) \
+    def with_chunk(df: DataFrame) -> DataFrame:   # raw + its 1m unit chunk
+        return with_event_time(df).withColumn(
+            "bucket_ts", bucket_col(F.col("event_ts"), "1m")) \
             .withColumn("chunk", chunk_col())
-        pend = pending_units(full, ledger, dst_tier)
-        n_pend = pend.count()
-        processed[dst_tier] = n_pend
-        if n_pend > 0:
-            work = full.join(F.broadcast(pend), ["source", "chunk"], "left_semi")
-            work = work.cache()
-            if io.exists(f"rollup_{dst_tier}"):
-                merged = io.read(f"rollup_{dst_tier}").join(
-                    pend, ["source", "chunk"], "left_anti").unionByName(work)
-                io.overwrite_safe(f"rollup_{dst_tier}", merged,
-                                  partition_by=("source",))
-            else:
-                io.overwrite(f"rollup_{dst_tier}", work, partition_by=("source",))
-            counts = work.groupBy("source", "chunk").agg(
-                F.sum("n_docs").alias("rows_in"),
-                F.count(F.lit(1)).alias("rows_out"))
-            record_units(io, dst_tier, counts,
-                         f"rollup_{src_tier}@{io.snapshot_id(f'rollup_{src_tier}')}",
-                         int((time.time() - t0) * 1000))
-            work.unpersist()
+
+    # ---- 1m from raw: candidates from a projection that never reads tokens
+    t0 = time.time()
+    cand = {tuple(r) for r in with_chunk(raw.select("doc_id", "source"))
+            .select("source", "chunk").distinct().collect()}
+    pend = pending("1m", cand)
+    if pend:
+        src = raw if pend == cand else \
+            with_chunk(raw).filter(_in_units(pend)).select(*raw.columns)
+        _commit(io, "1m", pend, rollup_1m(src, n_salts), "raw", t0, done)
+    processed = {"1m": len(pend)}
+
+    # ---- cascades: candidates are the source tier's ledger units
+    for src_tier, tier in (("1m", "1h"), ("1h", "1d")):
+        t0 = time.time()
+        pend = pending(tier, {u[1:] for u in done if u[0] == src_tier})
+        if pend:
+            src = f"rollup_{src_tier}"
+            work = io.read(src).filter(_in_units(pend)).drop("chunk")
+            _commit(io, tier, pend, rollup_cascade(work, tier),
+                    f"{src}@{io.snapshot_id(src)}", t0, done)
+        processed[tier] = len(pend)
     return processed

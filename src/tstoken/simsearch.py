@@ -79,8 +79,24 @@ def with_cosine(pairs: DataFrame, a_col: str = "qvec",
     na = F.col(a_norm_col) if a_norm_col else _norm(a, dim)
     nb = F.col(b_norm_col) if b_norm_col else _norm(b, dim)
     denom = na * nb
-    cos = F.when(denom > 0, _dot(a, b, dim) / denom).otherwise(F.lit(0.0))
+    # a zero vector scores 0.0; a NULL denom (a vector whose width is
+    # not `dim`, or a NULL vector) has no cosine and scores NULL
+    cos = F.when(denom > 0, _dot(a, b, dim) / denom) \
+           .when(denom.isNotNull(), F.lit(0.0))
     return pairs.withColumn("cosine", F.round(cos, 6))
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Top-k per query by (cosine desc, vec_id asc); a pair with a NULL
+    cosine is no neighbour and never ranks."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(),
+                                          F.col("vec_id").asc())
+    return (scored.filter(F.col("cosine").isNotNull())
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "vec_id", "cosine", "rank"))
 
 
 def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
@@ -90,8 +106,6 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     is a single pass with no shuffle until the final per-query top-k
     (window over qid).
     """
-    from pyspark.sql import Window
-
     # spread the corpus scan over the cluster: a small corpus parquet
     # is often ONE file, and a 1-partition broadcast-join pins the
     # whole O(n*q) scoring on a single task
@@ -104,11 +118,7 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
              .filter(F.col("vec_id") != F.col("qid"))
     scored = with_cosine(cross, dim=dim,
                          a_norm_col="_na", b_norm_col="_nb")
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(),
-                                          F.col("vec_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "vec_id", "cosine", "rank"))
+    return _rank_topk(scored, k)
 
 
 def infer_dim(emb: DataFrame, vec_col: str = "embedding") -> int:
@@ -403,8 +413,6 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     nprobe (or n_centroids with nprobe scaled) to trade scan fraction
     for recall.
     """
-    from pyspark.sql import Window
-
     if centroids is None:
         centroids = train_ivf_centroids(emb, "embedding",
                                         n_centroids=n_centroids)
@@ -425,11 +433,7 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
             .select("qid", "qvec", "_na", "vec_id", "embedding", "_nb")
     scored = with_cosine(cand, dim=dim,
                          a_norm_col="_na", b_norm_col="_nb")
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(),
-                                          F.col("vec_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "vec_id", "cosine", "rank"))
+    return _rank_topk(scored, k)
 
 
 def lsh_topk(emb: DataFrame, queries: DataFrame, dim: int, k: int = 5,
@@ -442,8 +446,6 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, dim: int, k: int = 5,
     on (tbl, lsh_sig) — the plan holds a single corpus scan however
     many tables are configured (round-2 verdict: the per-table join
     union put Scan×32 / BroadcastHashJoin×16 in the plan)."""
-    from pyspark.sql import Window
-
     # norms ride the signature rows as extra id columns: per-row work,
     # not per-candidate-pair (with_cosine docstring)
     e = _multi_table_sigs(
@@ -458,8 +460,4 @@ def lsh_topk(emb: DataFrame, queries: DataFrame, dim: int, k: int = 5,
              .dropDuplicates(["qid", "vec_id"]))
     scored = with_cosine(cands, dim=dim,
                          a_norm_col="_na", b_norm_col="_nb")
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(),
-                                          F.col("vec_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "vec_id", "cosine", "rank"))
+    return _rank_topk(scored, k)

@@ -16,6 +16,20 @@ ROWS = 8_000
 SOURCES = 3
 
 
+def _erase_1m_ledger(spark, io, source):
+    """Simulate a crash: drop `source`'s 1m ledger rows."""
+    ledger = read_ledger(io).toPandas()
+    keep = ledger[~((ledger["tier"] == "1m") & (ledger["source"] == source))]
+    assert len(keep) < len(ledger)
+    io.overwrite("ledger", spark.createDataFrame(
+        keep, schema=read_ledger(io).schema), partition_by=("tier",))
+
+
+def _tier(io, tier):
+    return io.read(f"rollup_{tier}").toPandas() \
+        .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
+
+
 class TestCheckpointResume:
     def test_resume_is_idempotent(self, spark, tmp_path):
         io = TableIO(spark, str(tmp_path / "tiers"))
@@ -44,20 +58,13 @@ class TestCheckpointResume:
         io = TableIO(spark, str(tmp_path / "tiers"))
         raw = synth.generate_tokens_raw(spark, ROWS, n_sources=SOURCES)
         run_incremental_rollup(spark, io, raw)
-        before = io.read("rollup_1m").toPandas() \
-            .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
+        before = _tier(io, "1m")
 
-        ledger = read_ledger(io).toPandas()
-        keep = ledger[~((ledger["tier"] == "1m")
-                        & (ledger["source"] == "src-000"))]
-        assert len(keep) < len(ledger)
-        io.overwrite("ledger", spark.createDataFrame(
-            keep, schema=read_ledger(io).schema), partition_by=("tier",))
+        _erase_1m_ledger(spark, io, "src-000")
 
         p = run_incremental_rollup(spark, io, raw)
         assert p["1m"] > 0  # replayed the erased units
-        after = io.read("rollup_1m").toPandas() \
-            .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
+        after = _tier(io, "1m")
         pd.testing.assert_frame_equal(before, after, check_like=True)
 
     def test_ledger_carries_metrics(self, spark, tmp_path):
@@ -70,6 +77,98 @@ class TestCheckpointResume:
                 "finished_at"} <= set(led.columns)
         assert (led["points_per_sec"] > 0).all()
         assert (led["rows_out"] > 0).all()
+
+    def test_noop_resume_runs_no_rollup(self, spark, tmp_path, monkeypatch):
+        """With every unit in the ledger, resume rolls nothing up: the
+        pending sets come from the ledger, not from a re-rollup."""
+        from tstoken import rollup
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        raw = synth.generate_tokens_raw(spark, ROWS, n_sources=SOURCES)
+        run_incremental_rollup(spark, io, raw)
+
+        def boom(*a, **k):
+            raise AssertionError("no-op resume must not roll up")
+        monkeypatch.setattr(rollup, "rollup_1m", boom)
+        monkeypatch.setattr(rollup, "rollup_cascade", boom)
+        assert run_incremental_rollup(spark, io, raw) == \
+            {"1m": 0, "1h": 0, "1d": 0}
+
+    def test_crash_resume_rolls_up_only_erased_units(self, spark, tmp_path,
+                                                     monkeypatch):
+        """After the crash drill, rollup_1m sees only the erased source's
+        raw rows and no cascade runs (its 1h/1d units are in the ledger)."""
+        from tstoken import rollup
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        raw = synth.generate_tokens_raw(spark, ROWS, n_sources=SOURCES)
+        run_incremental_rollup(spark, io, raw)
+        _erase_1m_ledger(spark, io, "src-000")
+
+        seen, cascades = [], []
+        real_1m, real_cascade = rollup.rollup_1m, rollup.rollup_cascade
+
+        def spy_1m(df, *a, **k):
+            seen.append((df.count(), df.filter(
+                F.col("source") != "src-000").count()))
+            return real_1m(df, *a, **k)
+
+        def spy_cascade(df, tier):
+            cascades.append(tier)
+            return real_cascade(df, tier)
+        monkeypatch.setattr(rollup, "rollup_1m", spy_1m)
+        monkeypatch.setattr(rollup, "rollup_cascade", spy_cascade)
+        p = run_incremental_rollup(spark, io, raw)
+        n_src0 = raw.filter(F.col("source") == "src-000").count()
+        assert seen == [(n_src0, 0)]
+        assert cascades == []
+        assert p["1h"] == 0 and p["1d"] == 0
+
+    def test_resumed_ledger_equals_pre_crash(self, spark, tmp_path):
+        """Crash + resume rebuilds the ledger the crash erased: same
+        (tier, source, chunk, input_snapshot, rows_in, rows_out) rows,
+        each unit recorded exactly once."""
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        raw = synth.generate_tokens_raw(spark, ROWS, n_sources=SOURCES)
+        run_incremental_rollup(spark, io, raw)
+        cols = ["tier", "source", "chunk", "input_snapshot", "rows_in",
+                "rows_out"]
+
+        def ledger():
+            return read_ledger(io).toPandas()[cols] \
+                .sort_values(cols[:3]).reset_index(drop=True)
+        before = ledger()
+        _erase_1m_ledger(spark, io, "src-000")
+        run_incremental_rollup(spark, io, raw)
+        after = ledger()
+        pd.testing.assert_frame_equal(before, after)
+        assert not after.duplicated(cols[:3]).any()
+
+    def test_resume_with_empty_and_null_token_docs(self, spark, tmp_path):
+        """Zero-token docs in the erased source (one NULL `tokens`, one
+        empty array) resume to the byte-identical 1m tier and still count
+        in n_docs (round-1 ADVICE contract)."""
+        from tstoken.rollup import rollup_1m
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        base = synth.generate_tokens_raw(spark, ROWS, n_sources=SOURCES)
+        null_doc, empty_doc = [r.doc_id for r in base.filter(
+            F.col("source") == "src-000").orderBy("doc_id").limit(2).collect()]
+        raw = base.withColumn(
+            "tokens",
+            F.when(F.col("doc_id") == null_doc, F.lit(None))
+            .when(F.col("doc_id") == empty_doc, F.array().cast("array<int>"))
+            .otherwise(F.col("tokens")))
+        run_incremental_rollup(spark, io, raw)
+        before = _tier(io, "1m")
+        _erase_1m_ledger(spark, io, "src-000")
+        assert run_incremental_rollup(spark, io, raw)["1m"] > 0
+        after = _tier(io, "1m")
+        pd.testing.assert_frame_equal(before, after, check_like=True)
+        one_shot = rollup_1m(raw).toPandas() \
+            .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
+        pd.testing.assert_frame_equal(
+            after.drop(columns=["chunk"])[one_shot.columns], one_shot)
+        src0 = after["source"] == "src-000"
+        assert after.loc[src0, "n_docs"].sum() == \
+            base.filter(F.col("source") == "src-000").count()
 
 
 class TestRetentionDelete:
@@ -375,6 +474,24 @@ class TestSimSearch:
             mine = got[got["qid"] == qid].sort_values("rank")["vec_id"] \
                 .to_numpy()
             assert (mine == order).all(), (qid, mine, order)
+
+    def test_width_mismatch_scores_null_and_never_ranks(self, spark):
+        """A vector whose width is not the corpus dim has no cosine: it
+        scores NULL, not 0.0, and never ranks ahead of the real (here all
+        negative) neighbours in cosine_topk."""
+        from tstoken.simsearch import cosine_topk, with_cosine
+        emb = spark.createDataFrame(
+            [(0, [1.0, 0.0, 0.0]), (1, [-1.0, 0.0, 0.0]),
+             (2, [-1.0, -1.0, 0.0]), (3, [1.0, 0.0])],
+            "vec_id long, embedding array<double>")
+        q = emb.filter("vec_id = 0").selectExpr("vec_id as qid",
+                                                "embedding as qvec")
+        scored = with_cosine(emb.crossJoin(q), dim=3).toPandas() \
+            .set_index("vec_id")["cosine"]
+        assert scored[3] is None or np.isnan(scored[3])
+        assert scored[2] == round(-1 / np.sqrt(2), 6) and scored[1] == -1.0
+        got = cosine_topk(emb, q, k=3).toPandas().sort_values("rank")
+        assert got["vec_id"].tolist() == [2, 1]
 
     def test_lsh_recall(self, spark):
         from tstoken.simsearch import cosine_topk, lsh_topk
