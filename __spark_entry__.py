@@ -13,7 +13,7 @@ three families:
          semantics are engine-portable, rows-only for xxhash-based
          MinHash/SimHash/LSH;
   tok_*  the engine's own token-table path: deterministic synthetic
-         tokens_raw (FIXTURES.md A1, fixed 30k rows) → salted 1m/1h
+         tokens_raw (FIXTURES.md A1, fixed 30k rows) → 1m/1h
          rollups → fences/decomposition flags. The synth is pure
          integer mixing + sin, so the rollup oracles REGENERATE the
          table inside DuckDB SQL and must match exactly.
@@ -374,7 +374,7 @@ def _tok_t1m_staged(spark, gapfilled: bool = False) -> DataFrame:
     their input once (per-source fences are window aggregates), except
     ma_flags, whose CV window search is a second reference joined back
     to the full series — over the unmaterialized synth→posexplode→
-    salted-agg lineage that second reference would re-run the rollup.
+    aggregate lineage that second reference would re-run the rollup.
     """
     from tstoken.gapfill import gap_fill
     from tstoken.rollup import rollup_1m

@@ -6,7 +6,7 @@ Two groups:
     __spark_entry__ — forced with a noop sink (full computation, no
     driver collect);
   - the token-engine pipeline at TSTOKEN_BENCH_ROWS synthetic rows
-    (default 2M): synth → salted 1m rollup → 1h → 1d cascades → IQR +
+    (default 2M): synth → 1m rollup → 1h → 1d cascades → IQR +
     MAD flags; reports rolled-up points/sec, the BASELINE.json metric.
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, TSTOKEN_BENCH_ROWS,

@@ -4,7 +4,7 @@ anomaly detection (reference: aseemanand/pycatcher, surveyed in SURVEY.md).
 
 Layout (SURVEY.md §7.1):
     stats/      pure-NumPy statistical kernels (no Spark imports)
-    rollup.py   1m/1h/1d continuous aggregates + salted two-phase agg
+    rollup.py   1m/1h/1d continuous aggregates, tiers partitioned by source
     gapfill.py  calendar-spine densification
     detect.py   anomaly detectors (native DataFrame ops + grouped Arrow UDFs)
     compress.py Gorilla XOR + delta-of-delta block codecs

@@ -98,10 +98,11 @@ def _commit(io: TableIO, tier: str, units: set, work: DataFrame,
 
 
 def run_incremental_rollup(spark: SparkSession, io: TableIO, raw: DataFrame,
-                           n_salts: int = 16) -> dict[str, int]:
+                           n_salts: int | None = None) -> dict[str, int]:
     """Checkpointed tier build: only pending (source, chunk) units are
     (re)computed, from their own input rows; tier writes replace the units'
-    rows ⇒ idempotent. Returns per-tier counts of processed units."""
+    rows ⇒ idempotent. Returns per-tier counts of processed units.
+    `n_salts` is ignored, kept only so existing callers still run."""
     from .rollup import bucket_col, rollup_1m, rollup_cascade, with_event_time
 
     done = {tuple(r) for r in
@@ -123,7 +124,7 @@ def run_incremental_rollup(spark: SparkSession, io: TableIO, raw: DataFrame,
     if pend:
         src = raw if pend == cand else \
             with_chunk(raw).filter(_in_units(pend)).select(*raw.columns)
-        _commit(io, "1m", pend, rollup_1m(src, n_salts), "raw", t0, done)
+        _commit(io, "1m", pend, rollup_1m(src), "raw", t0, done)
     processed = {"1m": len(pend)}
 
     # ---- cascades: candidates are the source tier's ledger units

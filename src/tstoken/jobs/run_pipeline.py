@@ -2,7 +2,7 @@
 
 Usage (cluster):
     spark-submit --py-files tstoken.zip -m tstoken.jobs.run_pipeline \
-        --rows 10000000 --sources 64 --base /data/tstoken --salts 64
+        --rows 10000000 --sources 64 --base /data/tstoken
 
 Every run is resumable: work units already in the ledger are skipped
 (tstoken.checkpoint), tier writes are partition-overwrites, so a rerun
@@ -21,7 +21,6 @@ def main(argv=None) -> dict:
     p.add_argument("--rows", type=int, default=1_000_000)
     p.add_argument("--sources", type=int, default=8)
     p.add_argument("--base", default="/tmp/tstoken_tiers")
-    p.add_argument("--salts", type=int, default=16)
     p.add_argument("--master", default=None)
     p.add_argument("--detect", action="store_true",
                    help="also run detectors and write flag tables")
@@ -38,7 +37,7 @@ def main(argv=None) -> dict:
     io = TableIO(spark, args.base)
     t0 = time.time()
     raw = generate_tokens_raw(spark, args.rows, n_sources=args.sources)
-    processed = run_incremental_rollup(spark, io, raw, n_salts=args.salts)
+    processed = run_incremental_rollup(spark, io, raw)
 
     if args.detect:
         for tier in ("1m", "1h", "1d"):

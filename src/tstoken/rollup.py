@@ -3,14 +3,19 @@
 Spark-first design (SURVEY.md A10, §4.2):
   - event time is DERIVED from doc_id's sequence encoding (SURVEY.md
     §1.4) so the stored schema stays exactly the 4-column input_hint;
-  - the 1m tier aggregates raw rows with a salted two-phase aggregation
-    (partial per (source, bucket, salt), final per (source, bucket)) so
-    one Zipf-hot source cannot pin a single reducer — the "salted
-    repartitioning by source" of the north rule;
+  - the 1m tier is one aggregate per (source, bucket) whose output is
+    hash-partitioned by `source` alone, so every per-source operator
+    downstream (the 1h/1d cascades, the gap-fill `lead` window, the
+    detectors' `Window.partitionBy("source")`) plans no shuffle of its
+    own — the "repartitioning by source" of the north rule. Raw rows are
+    never repartitioned: that would shuffle the fat `tokens` column and
+    pin a Zipf-hot source's rows to one reducer. Spark's map-side partial
+    aggregation already spreads key skew before the exchange
+    (BENCH/BASELINE.md skew stress), so no salt level is needed;
   - 1h re-aggregates 1m, 1d re-aggregates 1h (associative sums/counts/
     min/max only — the ROLLUP-cascade equivalent; averages derive at read);
   - token-derived statistics (sum of squared token ids) are computed
-    once, at the 1m tier, with higher-order array functions — the fat
+    once, at the 1m tier, by a native `posexplode` aggregate — the fat
     `tokens` array is never read again above 1m (column pruning).
 
 All tier measures are integer (count/sum/min/max of int64) ⇒ rollups
@@ -68,15 +73,8 @@ def bucket_col(event_ts: Column, tier: str) -> Column:
     return F.timestamp_seconds((epoch - F.pmod(epoch, F.lit(secs))))
 
 
-def _sum_tok_sq() -> Column:
-    """Σ token² per row via a higher-order function — no Python (F11)."""
-    return F.aggregate(
-        "tokens", F.lit(0).cast("long"),
-        lambda acc, t: acc + t.cast("long") * t.cast("long"))
-
-
-def rollup_1m(raw: DataFrame, n_salts: int = 16) -> DataFrame:
-    """tokens_raw → 1m tier with salted two-phase aggregation.
+def rollup_1m(raw: DataFrame, n_salts: int | None = None) -> DataFrame:
+    """tokens_raw → 1m tier, hash-partitioned by `source`.
 
     Token-derived statistics use `posexplode` + whole-stage-codegen
     native aggregation rather than an interpreted `F.aggregate` lambda:
@@ -93,47 +91,45 @@ def rollup_1m(raw: DataFrame, n_salts: int = 16) -> DataFrame:
     and must count toward n_docs (round-1 ADVICE; the synth generator's
     `n_tok >= 1` invariant never exercises this).
 
-    Phase 1 shuffles on (source, bucket_ts, salt) so a skewed source's
-    rows spread over n_salts reducers; phase 2 combines the (tiny)
-    partials. All measures are associative, so the result is exact.
+    One exchange feeds the (source, bucket_ts) aggregate (map-side
+    partial aggregation spreads a hot source before it); a second one
+    repartitions its output — ≤1 row per bucket — by `source`. That
+    partitioning is the contract: `rollup_cascade`, `gap_fill` and the
+    per-source detector windows inherit it instead of shuffling.
+    `n_salts` is ignored, kept only so existing callers still run.
     """
     toks = F.coalesce(F.col("tokens"), F.array().cast("array<int>"))
     padded = F.when(F.size(toks) == 0,
                     F.array(F.lit(None).cast("int"))).otherwise(toks)
-    df = with_event_time(raw)
-    df = (df
+    df = (with_event_time(raw)
           .withColumn("bucket_ts", bucket_col(F.col("event_ts"), "1m"))
-          .withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)))
-          .select("source", "bucket_ts", "salt", "n_tok",
+          .select("source", "bucket_ts", "n_tok",
                   F.posexplode(padded).alias("pos", "tok")))
     first = F.col("pos") == 0
     # F.sum skips the null sentinel tokens; coalesce covers the
     # all-empty-docs group (sum over only-nulls -> null, must be 0).
     # Per-group coalesce, NOT a per-token branch — the token stream is
     # the hot loop.
-    partial = (df.groupBy("source", "bucket_ts", "salt")
-               .agg(F.sum(F.when(first, 1)).alias("n_docs"),
-                    F.sum(F.when(first, F.col("n_tok").cast("long")))
-                     .alias("sum_n_tok"),
-                    F.min(F.when(first, F.col("n_tok"))).alias("min_n_tok"),
-                    F.max(F.when(first, F.col("n_tok"))).alias("max_n_tok"),
-                    F.coalesce(
-                        F.sum(F.col("tok").cast("long") * F.col("tok")),
-                        F.lit(0).cast("long")).alias("sum_tok_sq")))
-    final = (partial.groupBy("source", "bucket_ts")
-             .agg(F.sum("n_docs").alias("n_docs"),
-                  F.sum("sum_n_tok").alias("sum_n_tok"),
-                  F.min("min_n_tok").alias("min_n_tok"),
-                  F.max("max_n_tok").alias("max_n_tok"),
-                  F.sum("sum_tok_sq").alias("sum_tok_sq"))
-             .withColumn("gap_filled", F.lit(False)))
-    return final.select(*ROLLUP_COLUMNS)
+    return (df.groupBy("source", "bucket_ts")
+            .agg(F.sum(F.when(first, 1)).alias("n_docs"),
+                 F.sum(F.when(first, F.col("n_tok").cast("long")))
+                  .alias("sum_n_tok"),
+                 F.min(F.when(first, F.col("n_tok"))).alias("min_n_tok"),
+                 F.max(F.when(first, F.col("n_tok"))).alias("max_n_tok"),
+                 F.coalesce(
+                     F.sum(F.col("tok").cast("long") * F.col("tok")),
+                     F.lit(0).cast("long")).alias("sum_tok_sq"))
+            .withColumn("gap_filled", F.lit(False))
+            .select(*ROLLUP_COLUMNS)
+            .repartition("source"))
 
 
 def rollup_cascade(finer: DataFrame, tier: str) -> DataFrame:
     """Re-aggregate a finer tier into `tier` (1m→1h or 1h→1d).
 
-    Gap-filled zero rows are excluded so min/max stay exact.
+    Gap-filled zero rows are excluded so min/max stay exact. Over a
+    source-partitioned input (the 1m tier, or a cascade of it) the
+    aggregate plans no exchange and its output keeps that partitioning.
     """
     src = finer.filter(~F.col("gap_filled"))
     return (src
@@ -147,8 +143,8 @@ def rollup_cascade(finer: DataFrame, tier: str) -> DataFrame:
             .select(*ROLLUP_COLUMNS))
 
 
-def build_all_tiers(raw: DataFrame, n_salts: int = 16) -> dict[str, DataFrame]:
-    t1m = rollup_1m(raw, n_salts=n_salts)
+def build_all_tiers(raw: DataFrame) -> dict[str, DataFrame]:
+    t1m = rollup_1m(raw)
     t1h = rollup_cascade(t1m, "1h")
     t1d = rollup_cascade(t1h, "1d")
     return {"1m": t1m, "1h": t1h, "1d": t1d}

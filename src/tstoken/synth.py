@@ -25,7 +25,7 @@ rollup oracles can regenerate rows exactly:
     tokens     [(1000003·(seq·131 + i) + 17) mod 50257 for i in 0..n_tok-1]
 
 `source` cardinality is Zipf-skewed with exponent 1.2 (src-000 holds
-~35-43% of rows) to exercise the salted aggregation path.
+~35-43% of rows) to exercise a hot source in the 1m aggregation.
 """
 
 from __future__ import annotations

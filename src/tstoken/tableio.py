@@ -26,6 +26,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 class TableIO:
@@ -63,9 +64,17 @@ class TableIO:
                 return json.load(f)
         return {"snapshot_id": 0, "history": []}
 
-    def _bump_manifest(self, table: str, op: str, rows: int) -> int:
+    def _bump_manifest(self, table: str, op: str, rows: int, df: DataFrame,
+                       partition_by: tuple[str, ...]) -> int:
+        """Advance the snapshot id and record the schema `read` passes to
+        Spark (data columns, then partition columns, all nullable — what
+        parquet inference yields), so no read runs an inference job."""
         m = self._read_manifest(table)
         m["snapshot_id"] = int(m["snapshot_id"]) + 1
+        fields = ([f for f in df.schema if f.name not in partition_by]
+                  + [df.schema[c] for c in partition_by])
+        m["schema"] = StructType(
+            [StructField(f.name, f.dataType, True) for f in fields]).json()
         m["history"].append({"snapshot_id": m["snapshot_id"], "op": op,
                              "rows": rows, "ts": time.time(),
                              "run": str(uuid.uuid4())[:8]})
@@ -85,7 +94,11 @@ class TableIO:
     def read(self, table: str) -> DataFrame:
         if self.backend == "iceberg":
             return self.spark.read.table(f"{self.catalog}.{table}")
-        return self.spark.read.parquet(self._path(table))
+        schema = self._read_manifest(table).get("schema")
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(self._path(table))
 
     def append(self, table: str, df: DataFrame,
                partition_by: tuple[str, ...] = ("source",)) -> int:
@@ -94,7 +107,7 @@ class TableIO:
             return self.snapshot_id(table)
         (df.write.mode("append").partitionBy(*partition_by)
            .parquet(self._path(table)))
-        return self._bump_manifest(table, "append", -1)
+        return self._bump_manifest(table, "append", -1, df, partition_by)
 
     def overwrite_partitions(self, table: str, df: DataFrame,
                              partition_by: tuple[str, ...] = ("source",)) -> int:
@@ -106,7 +119,8 @@ class TableIO:
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         (df.write.mode("overwrite").partitionBy(*partition_by)
            .parquet(self._path(table)))
-        return self._bump_manifest(table, "overwrite_partitions", -1)
+        return self._bump_manifest(table, "overwrite_partitions", -1, df,
+                                   partition_by)
 
     def overwrite(self, table: str, df: DataFrame,
                   partition_by: tuple[str, ...] = ("source",)) -> int:
@@ -116,7 +130,7 @@ class TableIO:
         self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
         (df.write.mode("overwrite").partitionBy(*partition_by)
            .parquet(self._path(table)))
-        return self._bump_manifest(table, "overwrite", -1)
+        return self._bump_manifest(table, "overwrite", -1, df, partition_by)
 
     def overwrite_safe(self, table: str, df: DataFrame,
                        partition_by: tuple[str, ...] = ("source",)) -> int:
@@ -134,7 +148,8 @@ class TableIO:
         os.rename(tmp, final)
         with open(self._manifest_path(table), "w") as f:
             json.dump(manifest, f)
-        return self._bump_manifest(table, "overwrite_safe", -1)
+        return self._bump_manifest(table, "overwrite_safe", -1, df,
+                                   partition_by)
 
     def delete_where(self, table: str, predicate: str) -> int:
         """Retention delete. Iceberg: metadata-only DELETE FROM;
@@ -155,7 +170,8 @@ class TableIO:
         with open(self._manifest_path(table), "w") as f:
             json.dump(manifest, f)
         del pdf_cols
-        return self._bump_manifest(table, f"delete_where:{predicate}", -1)
+        return self._bump_manifest(table, f"delete_where:{predicate}", -1,
+                                   df, ("source",))
 
     def snapshot_id(self, table: str) -> int:
         if self.backend == "iceberg":

@@ -188,6 +188,31 @@ class TestRetentionDelete:
         assert (hi - lo).total_seconds() <= 3600
 
 
+class TestTableIORead:
+    def test_read_runs_no_schema_inference_job(self, spark, tmp_path):
+        """A table's manifest carries its read schema, so `read` launches
+        no Spark job; the schema is the one parquet inference yields."""
+        from tstoken.detect import iqr_flags
+        from tstoken.gapfill import gap_fill
+        io = TableIO(spark, str(tmp_path / "tiers"))
+        raw = synth.generate_tokens_raw(spark, ROWS, n_sources=SOURCES)
+        run_incremental_rollup(spark, io, raw)
+        flags = iqr_flags(gap_fill(io.read("rollup_1m").drop("chunk"), "1m"))
+        io.overwrite("flags_1m", flags, partition_by=("method",))
+        sc = spark.sparkContext
+        for table in ("rollup_1m", "ledger", "flags_1m"):
+            group = f"read-{table}-{time.time_ns()}"
+            sc.setJobGroup(group, group)
+            try:
+                df = io.read(table)
+                jobs = sc.statusTracker().getJobIdsForGroup(group)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert list(jobs) == [], table
+            assert df.schema == spark.read.parquet(
+                str(tmp_path / "tiers" / table)).schema, table
+
+
 class TestStreaming:
     def test_stream_matches_batch(self, spark, tmp_path):
         from tstoken.rollup import rollup_1m

@@ -1,10 +1,14 @@
 """Spark-side engine tests: synth exactness, rollup-vs-oracle equality,
-tier cascade, gap-fill, salting invariance, detector F1, codec
+tier cascade, gap-fill, source partitioning, detector F1, codec
 round-trip through Spark, retention (SURVEY.md §5 engine test plan)."""
+
+import re
+from datetime import datetime, timedelta
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 
 from tstoken import detect, gapfill, rollup, synth
@@ -117,15 +121,21 @@ class TestRollup:
             assert (r[c].to_numpy() == g[c].to_numpy()).all(), c
         assert (r["bucket_ts"].to_numpy() == g["bucket_ts"].to_numpy()).all()
 
-    def test_salting_invariance(self, raw, t1m):
-        # two-phase salted agg must be exact for any salt count
-        alt = rollup.rollup_1m(raw, n_salts=1).toPandas() \
+    def test_hot_source_exact_vs_oracle(self, spark):
+        # a Zipf-hot source (~70% of rows) lands in one task of the
+        # source-partitioned output; all five aggregates stay exact, and
+        # the ignored `n_salts` keyword is still accepted
+        kw = dict(n_sources=SOURCES, zipf_exp=2.0)
+        raw = synth.generate_tokens_raw(spark, 6000, **kw)
+        pdf = synth.generate_tokens_raw_pandas(6000, **kw)
+        assert (pdf["source"] == "src-000").mean() > 0.6
+        r = rollup.rollup_1m(raw, n_salts=8).toPandas() \
             .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
-        ref = t1m.toPandas().sort_values(["source", "bucket_ts"]) \
-            .reset_index(drop=True)
+        g = oracle_rollup_1m(pdf)
+        assert len(r) == len(g)
         for c in ["n_docs", "sum_n_tok", "min_n_tok", "max_n_tok",
                   "sum_tok_sq"]:
-            assert (alt[c].to_numpy() == ref[c].to_numpy()).all(), c
+            assert (r[c].to_numpy() == g[c].to_numpy()).all(), c
 
     def test_cascade_preserves_totals(self, t1m):
         t1h = rollup.rollup_cascade(t1m, "1h")
@@ -165,6 +175,93 @@ class TestGapFill:
             F.sum("sum_n_tok"), F.count(F.lit(1))).collect()[0]
         b = t1m.agg(F.sum("sum_n_tok"), F.count(F.lit(1))).collect()[0]
         assert tuple(a) == tuple(b)
+
+    def test_duplicate_and_null_buckets(self, spark):
+        # a duplicated bucket keeps both rows and is not a hole; a NULL
+        # bucket is dropped; a one-row source stays one row
+        t0 = datetime(2024, 1, 1)
+        m = [timedelta(minutes=i) for i in range(4)]
+        rows = [("a", t0, 1), ("a", t0, 2), ("a", t0 + m[3], 3),
+                ("b", t0, 4), ("c", None, 5), ("c", t0 + m[2], 6)]
+        df = spark.createDataFrame(
+            [(s, ts, n, n, n, n, n, False) for s, ts, n in rows],
+            "source string, bucket_ts timestamp, n_docs long, sum_n_tok long, "
+            "min_n_tok int, max_n_tok int, sum_tok_sq long, gap_filled boolean")
+        got = sorted(tuple(r) for r in gapfill.gap_fill(df, "1m")
+                     .select("source", "bucket_ts", "n_docs", "gap_filled")
+                     .collect())
+        assert got == [("a", t0, 1, False), ("a", t0, 2, False),
+                       ("a", t0 + m[1], 0, True), ("a", t0 + m[2], 0, True),
+                       ("a", t0 + m[3], 3, False), ("b", t0, 4, False),
+                       ("c", t0 + m[2], 6, False)]
+
+
+def _plan_nodes(plan, into_cache=False):
+    """Physical nodes of an executed plan, through adaptive query stages;
+    a cached relation's own plan only when `into_cache`."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan(), into_cache)
+        return
+    yield plan
+    if name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    elif name == "InMemoryTableScanExec" and into_cache:
+        kids = [plan.relation().cachedPlan()]
+    else:
+        kids = [plan.children().apply(i)
+                for i in range(plan.children().size())]
+    for k in kids:
+        yield from _plan_nodes(k, into_cache)
+
+
+def _exchanges(df, into_cache=False) -> list:
+    """Shuffle and broadcast exchanges of `df`'s final adaptive plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    return [n.toString() for n in _plan_nodes(plan, into_cache)
+            if n.getClass().getSimpleName() in ("ShuffleExchangeExec",
+                                                "BroadcastExchangeExec")]
+
+
+class TestSourcePartitioning:
+    """The 1m tier comes out hash-partitioned by `source`; every
+    per-source operator over it inherits that and plans no shuffle."""
+
+    def test_1m_output_partitioned_by_source_only(self, t1m):
+        t1m.collect()
+        root = next(_plan_nodes(t1m._jdf.queryExecution().executedPlan()))
+        part = root.outputPartitioning().toString()
+        assert re.fullmatch(r"hashpartitioning\(source#\d+, \d+\)", part), \
+            part
+
+    def test_1m_plans_two_exchanges(self, t1m):
+        # one below the (source, bucket_ts) aggregate, one repartitioning
+        # its output by source: no salt level
+        ex = _exchanges(t1m, into_cache=True)
+        assert len(ex) == 2, ex
+        assert all(e.startswith("Exchange hashpartitioning") for e in ex), ex
+
+    @pytest.mark.parametrize("tiers", [("1h",), ("1h", "1d")],
+                             ids=["1h", "1d"])
+    def test_cascade_plans_no_exchange(self, t1m, tiers):
+        df = t1m
+        for tier in tiers:
+            df = rollup.rollup_cascade(df, tier)
+        assert _exchanges(df) == []
+
+    @pytest.mark.parametrize("name", ["iqr_flags", "mad_flags"])
+    def test_gapfill_flags_plan_no_exchange(self, t1m, name):
+        df = getattr(detect, name)(gapfill.gap_fill(t1m, "1m"))
+        assert _exchanges(df) == []
+
+    def test_long_sum_overflow_raises(self, spark):
+        # Σtok² is a Spark long sum: 2·(−2³¹)² = 2⁶³ overflows under ANSI
+        raw = spark.createDataFrame(
+            [("src-000-000000000001", [-2**31, -2**31], 2, "src-000")],
+            "doc_id string, tokens array<int>, n_tok int, source string")
+        with pytest.raises(ArithmeticException):
+            rollup.rollup_1m(raw).collect()
 
 
 class TestDetectors:

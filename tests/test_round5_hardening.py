@@ -153,13 +153,14 @@ class TestGoldenFmt:
 
 
 class TestSkewStress:
-    def test_salted_rollup_exact_on_hot_minute_keys(self, spark):
+    def test_rollup_exact_on_hot_minute_keys(self, spark):
         """The pathological shape BENCH/skew_stress.py measures at
         scale, checked for exactness here: wrapped sequence numbers
-        concentrate 90% of docs onto ~3 minute buckets. The salted
-        two-phase agg must produce byte-identical tier rows to the
-        unsalted (single-phase-equivalent) run — salting is a physical
-        repartitioning, never a semantic change."""
+        concentrate 90% of docs onto ~3 minute buckets of one source.
+        Every tier row equals the pandas oracle's, on all five
+        aggregates, though the hot source's rows meet in one task."""
+        import pandas as pd
+        from test_engine_spark import oracle_rollup_1m
         from tstoken.rollup import rollup_1m
 
         hot = (spark.range(0, 4500)
@@ -182,18 +183,28 @@ class TestSkewStress:
                                          "src-002"))
         raw = hot.unionByName(cold).localCheckpoint()
 
-        def rows(n_salts):
-            return (rollup_1m(raw, n_salts=n_salts).toPandas()
-                    .sort_values(["source", "bucket_ts"])
-                    .reset_index(drop=True))
+        ids = np.arange(4500, dtype=np.int64)
+        n_tok = 4 + (ids * 2654435761 + 17) % 60
+        hot_pdf = pd.DataFrame({
+            "source": "src-000", "seq": ids % 60, "n_tok": n_tok,
+            "tokens": [(i * 131 + np.arange(n) + 7) % 50257
+                       for i, n in zip(ids, n_tok)]})
+        cold_pdf = synth.generate_tokens_raw_pandas(500, n_sources=2)
+        cold_pdf["source"] = cold_pdf["source"].replace("src-000", "src-002")
+        want = oracle_rollup_1m(pd.concat([hot_pdf, cold_pdf]))
 
-        salted, unsalted = rows(8), rows(1)
-        assert salted.shape == unsalted.shape
-        for c in salted.columns:
-            a, b = salted[c].to_numpy(), unsalted[c].to_numpy()
-            assert (a == b).all(), c
+        got = (rollup_1m(raw).toPandas()
+               .sort_values(["source", "bucket_ts"])
+               .reset_index(drop=True))
+        assert len(got) == len(want)
+        assert (got["source"] == want["source"]).all()
+        assert (pd.to_datetime(got["bucket_ts"]).to_numpy()
+                == want["bucket_ts"].to_numpy()).all()
+        for c in ["n_docs", "sum_n_tok", "min_n_tok", "max_n_tok",
+                  "sum_tok_sq"]:
+            assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
         # the hot source really is hot: >=60 docs in its busiest minute
-        hotmax = salted[salted["source"] == "src-000"]["n_docs"].max()
+        hotmax = got[got["source"] == "src-000"]["n_docs"].max()
         assert hotmax >= 60
 
 
