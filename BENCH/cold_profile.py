@@ -10,6 +10,7 @@ first touch of the staged table.
 Design: two fresh processes over the same staged table.
 
   mode=cold    pipeline immediately, 3 iterations, per-phase walls
+               (`tstoken.jobs.pipeline.token_pipeline`)
   mode=warmed  run an UNRELATED warm-up job first (groupBy-agg over a
                synthetic range — exercises codegen, shuffle, parquet
                write/read machinery, but a different plan shape), then
@@ -41,13 +42,13 @@ ITERS = 3
 def run_mode(mode: str) -> dict:
     from pyspark.sql import functions as F
 
-    from tstoken import detect, gapfill, rollup, synth
+    from tstoken import synth
+    from tstoken.jobs.pipeline import token_pipeline
     from tstoken.session import get_spark
 
     spark = get_spark(f"tstoken-coldprof-{mode}", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
-    t_session = time.time()
     staged = synth.stage_tokens_raw(spark, ROWS, n_sources=SOURCES)
 
     if mode == "warmed":
@@ -62,41 +63,16 @@ def run_mode(mode: str) -> dict:
     else:
         warmup_wall = 0.0
 
-    iters = []
-    prev = None
+    runs = []
     for _ in range(ITERS):
-        if prev is not None:
-            prev.unpersist(blocking=True)
-        phases = {}
-        t0 = time.time()
-        raw = spark.read.parquet(staged)
-        t1m = rollup.rollup_1m(raw, n_salts=CPUS).persist()
-        n_1m = t1m.count()
-        phases["rollup_1m"] = round(time.time() - t0, 3)
-        t1 = time.time()
-        t1h = rollup.rollup_cascade(t1m, "1h").persist()
-        t1h.count()
-        rollup.rollup_cascade(t1h, "1d").count()
-        t1h.unpersist()
-        phases["cascades"] = round(time.time() - t1, 3)
-        t1 = time.time()
-        gf = gapfill.gap_fill(t1m, "1m")
-        iqr_fl = detect.iqr_flags(gf)
-        mad_fl = detect.mad_flags(gf)
-        (iqr_fl.select("source", "bucket_ts",
-                       F.lit("iqr").alias("m"), "is_outlier")
-         .unionByName(mad_fl.select("source", "bucket_ts",
-                                    F.lit("mad").alias("m"), "is_outlier"))
-         .write.format("noop").mode("overwrite").save())
-        phases["gapfill_flags"] = round(time.time() - t1, 3)
-        phases["total"] = round(time.time() - t0, 3)
-        iters.append(phases)
-        prev = t1m
+        runs.append(token_pipeline(spark, staged,
+                                   runs[-1] if runs else None))
+    iters = [r["phases"] for r in runs]
     out = {"mode": mode, "rows": ROWS, "cpus": CPUS,
            "warmup_wall": round(warmup_wall, 3),
            "session_to_first_total": round(
                iters[0]["total"] + warmup_wall, 3),
-           "iters": iters, "n_1m": n_1m}
+           "iters": iters, "rolled_points": runs[-1]["rolled_points"]}
     spark.stop()
     return out
 

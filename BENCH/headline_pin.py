@@ -5,8 +5,8 @@ round-5 measurement lesson: concurrent Spark work contaminated two
 arms of a campaign) and pools per-query minima across campaigns.
 Single-campaign walls on this shared VM swing 2-5x with host
 contention, so the pooled min over several fresh-process campaigns is
-the only defensible steady-state estimate (same estimator as
-BENCH/pipeline_pin.py and the scaling harness).
+the only defensible steady-state estimate (same estimator as the
+scaling harness's fresh-process pipeline campaigns).
 
 Writes BENCH/headline_r5.json: per-campaign full bench lines (kept so
 nothing is discarded), pooled per-query minima, pooled total, and the

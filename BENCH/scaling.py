@@ -3,20 +3,23 @@ efficiency >= 0.8 from N to 4N executors; sandbox proxy per the task
 brief: the same job at two parallelism levels on the same input).
 
 Design notes (what we learned measuring this):
-  - The measured job is the stored-table path: a staged parquet
-    tokens_raw table (written once, shared byte-identical by every
-    level) -> salted 1m rollup (posexplode + native agg) -> 1h -> 1d
+  - The measured job is `tstoken.jobs.pipeline.token_pipeline`, the
+    stored-table path: a staged parquet tokens_raw table (written
+    once, shared byte-identical by every level) -> 1m rollup
+    (posexplode + native agg, partitioned by source) -> 1h -> 1d
     cascades -> gap-fill -> IQR + MAD flags. Fusing synthetic
     generation into the measured job would misattribute the
     interpreted-expression generator cost to the engine.
-  - Each level runs in a FRESH process and executes the pipeline
-    several times; the reported wall is the min of the post-first
-    iterations. A single cold run measures JVM JIT compilation (tens
-    of seconds) rather than the engine; on a real cluster against
-    10^12 rows that one-time cost is noise, in a minutes-long sandbox
-    job it dominates. Every iteration rebuilds its DataFrames from a
-    fresh `spark.read.parquet`, so no shuffle/cache is ever reused
-    across iterations (verified: repeat iterations re-execute).
+  - Each level runs in a FRESH process (`python -m
+    tstoken.jobs.pipeline <cpus> <rows> <iters>`) and executes the
+    pipeline under `steady_walls` (at least `iters` runs, cap 24); the
+    reported wall is the min of the post-first iterations. A single
+    cold run measures JVM JIT compilation (tens of seconds) rather
+    than the engine; on a real cluster against 10^12 rows that
+    one-time cost is noise, in a minutes-long sandbox job it
+    dominates. Every iteration rebuilds its DataFrames from a fresh
+    `spark.read.parquet`, so no shuffle/cache is ever reused across
+    iterations.
   - We report TWO N->4N pairs: local[2]->local[8] and
     local[8]->local[32]. A single box shares one memory subsystem, so
     high thread counts saturate DRAM bandwidth / GC throughput that a
@@ -24,8 +27,10 @@ Design notes (what we learned measuring this):
     faithful proxy for adding executors, the high pair is reported for
     transparency.
 
-Usage: python BENCH/scaling.py [rows] [iters] — writes BENCH/scaling.json
-and the results table in BENCH/BASELINE.md.
+Usage: python BENCH/scaling.py [rows] [iters] [--levels 8,32]
+[--merge [PATH]] [--out PATH] — writes BENCH/scaling.json (or PATH);
+`--recal` re-runs only the CPU calibration. BENCH/BASELINE.md is
+written by hand from these JSON files.
 """
 
 from __future__ import annotations
@@ -37,88 +42,24 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-CHILD = r"""
-import json, os, sys, time
-sys.path.insert(0, os.path.join({repo!r}, "src"))
-from tstoken.session import get_spark
-from tstoken import detect, gapfill, rollup, synth
-
-cpus = {cpus}
-rows = {rows}
-iters = {iters}
-spark = get_spark("scaling", master=f"local[{{cpus}}]",
-                  shuffle_partitions=max(cpus, 8))
-spark.sparkContext.setLogLevel("ERROR")
-staged = synth.stage_tokens_raw(spark, rows, n_sources=16)
-
-def pipeline():
-    raw = spark.read.parquet(staged)
-    t1m = rollup.rollup_1m(raw, n_salts=cpus).persist()
-    n_1m = t1m.count()
-    t1h = rollup.rollup_cascade(t1m, "1h").persist()
-    n_1h = t1h.count()
-    n_1d = rollup.rollup_cascade(t1h, "1d").count()
-    gf = gapfill.gap_fill(t1m, "1m")
-    # both detectors in ONE action: the union's two branches (each a
-    # fence agg + broadcast join over the persisted 1m tier) schedule
-    # as concurrent stages of a single job, so the high-thread levels
-    # keep their cores fed instead of paying two back-to-back barriers
-    from pyspark.sql import functions as SF
-    flags = detect.iqr_flags(gf).select(
-        "source", "bucket_ts", SF.lit("iqr").alias("m"), "is_outlier") \
-        .unionByName(detect.mad_flags(gf).select(
-            "source", "bucket_ts", SF.lit("mad").alias("m"), "is_outlier"))
-    flags.write.format("noop").mode("overwrite").save()
-    t1h.unpersist(); t1m.unpersist()
-    return n_1m + n_1h + n_1d
-
-walls = []
-# run at least `iters` iterations, then continue while the running min
-# is still improving by >2% within the last 3 iterations (cap 24):
-# JIT/profile warmup keeps improving walls for many iterations at the
-# fast levels (observed: local[8] still declining monotonically at
-# iteration 8), so a fixed count under-measures steady state.
-while True:
-    t0 = time.time()
-    points = pipeline()
-    walls.append(round(time.time() - t0, 2))
-    if len(walls) >= 24:
-        break
-    if len(walls) < max(iters, 5):
-        continue  # need warmup + >=1 baseline + 3 recent walls
-    # stop once the steady min stopped improving >2% over the last 3
-    # iterations; the baseline window excludes the iteration-1 warmup
-    prior_best = min(walls[1:-3])
-    if min(walls[1:]) > prior_best * 0.98:
-        break
-best = min(walls[1:]) if len(walls) > 1 else walls[0]
-print(json.dumps({{"cpus": cpus, "rows": rows, "walls": walls,
-                   "wall_sec": best, "rolled_points": points,
-                   "points_per_sec": round(points / best, 1),
-                   "raw_rows_per_sec": round(rows / best, 1)}}))
-spark.stop()
-"""
-
-
 STAGE_FILES = ("src/tstoken/rollup.py", "src/tstoken/gapfill.py",
                "src/tstoken/detect.py", "src/tstoken/synth.py",
-               "src/tstoken/session.py")
+               "src/tstoken/session.py", "src/tstoken/jobs/pipeline.py")
 
 
 def code_stamp() -> dict:
     """Identity of the measured code: git HEAD plus a sha256 over the
-    engine files the pipeline executes AND the CHILD job template
-    itself. --merge refuses to pool walls whose checksum differs —
-    'same code' in the headline is verified, not asserted (round-2
-    ADVICE: nothing recorded the engine version, so minima measured on
-    different code could silently pool)."""
+    engine files the pipeline executes, including the campaign module
+    `tstoken.jobs.pipeline` itself. --merge refuses to pool walls
+    whose checksum differs — 'same code' in the headline is verified,
+    not asserted (round-2 ADVICE: nothing recorded the engine version,
+    so minima measured on different code could silently pool)."""
     import hashlib
 
     h = hashlib.sha256()
     for rel in STAGE_FILES:
         with open(os.path.join(REPO, rel), "rb") as f:
             h.update(f.read())
-    h.update(CHILD.encode())
     try:
         commit = subprocess.run(
             ["git", "-C", REPO, "rev-parse", "HEAD"],
@@ -181,558 +122,18 @@ def stage(rows: int) -> None:
 
 
 def run(cpus: int, rows: int, iters: int) -> dict:
-    code = CHILD.format(repo=REPO, cpus=cpus, rows=rows, iters=iters)
-    out = subprocess.run([sys.executable, "-c", code], capture_output=True,
-                         text=True, timeout=7200)
-    line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)
-
-
-def efficiency(res: dict, lo: int, hi: int) -> float:
-    return round((res[lo]["wall_sec"] / res[hi]["wall_sec"])
-                 / (hi / lo), 3)
-
-
-def _verdict_cell(summary: dict, tag: str) -> str:
-    v = summary.get(f"pass_{tag}")
-    return "n/a (level not measured)" if v is None else \
-        ("PASS" if v else "FAIL")
-
-
-def render_holdout_f1() -> str:
-    """Held-out F1 section from BENCH/holdout_f1.json (written by
-    BENCH/holdout_f1.py), so a --render never silently drops it from
-    BASELINE.md. Empty string when the harness hasn't been run."""
-    path = os.path.join(REPO, "BENCH", "holdout_f1.json")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        h = json.load(f)
-    dets = ("iqr", "mad", "stl", "stl_z", "mad_avg", "stl_z_avg")
-    has_adaptive = any("ensemble_adaptive" in r
-                       for r in h["regimes"].values())
-    rows = []
-    margins = []
-    seed_devs = []
-    train = h["regimes"].get("train(seed0)", {}).get("ensemble")
-    for name, r in h["regimes"].items():
-        singles = {d: r[d] for d in dets}
-        best = max(singles, key=singles.get)
-        margins.append(r["ensemble"] - singles[best])
-        if train is not None and name.startswith("seed"):
-            seed_devs.append(abs(r["ensemble"] - train))
-        ad = (f" {r.get('ensemble_adaptive', 'n/a')} |"
-              if has_adaptive else "")
-        rows.append(f"| {name} | {r['n_truth']} | **{r['ensemble']}** "
-                    f"| {singles[best]} ({best}) |" + ad)
-    table = "\n".join(rows)
-    # prose derived from the data it sits above, so a re-run can never
-    # render a narrative contradicting its own table
-    seed_line = (
-        f"fresh seeds of the training regime land within "
-        f"{max(seed_devs):.3f} of the training F1 {train}"
-        if seed_devs else "no fresh-seed regimes recorded")
-    bottom = min(h["regimes"], key=lambda n: h["regimes"][n]["ensemble"])
-    margin = min(margins)
-    margin_line = (
-        f"the ensemble beats the best single detector on every regime "
-        f"(worst-case margin +{margin:.3f})" if margin > 0 else
-        f"a single detector matches/beats the ensemble on at least one "
-        f"regime (worst margin {margin:+.3f})")
-    adaptive_hdr = " adaptive (opt-in) |" if has_adaptive else ""
-    adaptive_sep = "---|" if has_adaptive else ""
-    adaptive_line = ""
-    if has_adaptive:
-        ad_vals = {n: r["ensemble_adaptive"]
-                   for n, r in h["regimes"].items()
-                   if "ensemble_adaptive" in r}
-        deltas = {n: round(ad_vals[n] - h["regimes"][n]["ensemble"], 4)
-                  for n in ad_vals}
-        worst_n = min(deltas, key=deltas.get)
-        best_n = max(deltas, key=deltas.get)
-        # parameters come from the code, not hard-coded prose
-        src = os.path.join(REPO, "src")
-        if src not in sys.path:
-            sys.path.insert(0, src)
-        from tstoken.detect import extrema_ensemble_flags as _eef
-        import inspect
-        sig = inspect.signature(_eef)
-        low = sig.parameters["adaptive_dip_low"].default
-        dmax = sig.parameters["adaptive_dip_max_density"].default
-        train_delta = deltas.get("train(seed0)")
-        held = {n: d for n, d in deltas.items() if n != "train(seed0)"}
-        verdict = (
-            "it does NOT generalize — the train gain does not carry to "
-            "the held-out regimes, so the frozen default remains the "
-            "recommended configuration"
-            if train_delta is not None and train_delta > 0
-            and min(held.values()) < -0.02 else
-            "held-out movement is within the frozen default's own "
-            "seed-to-seed band")
-        adaptive_line = (
-            f" The opt-in `adaptive_dip=True` column (dip fence {low} "
-            f"on sources with median docs/bucket <= {dmax:g}; "
-            f"grid-tuned on the training regime ONLY, "
-            f"`BENCH/adaptive_probe.json`; library default unchanged) "
-            f"moves F1 by {train_delta:+.4f} on train and "
-            f"[{deltas[worst_n]:+.4f} on {worst_n}, "
-            f"{deltas[best_n]:+.4f} on {best_n}] overall vs the frozen "
-            f"default: {verdict}.")
-    return f"""
-
-## Held-out anomaly-flag F1 (thresholds frozen)
-
-The extrema-ensemble thresholds (`detect.extrema_ensemble_flags`,
-avg 3.5 / spike 3.5 / dip 8.0) were tuned on the bench generator's
-seed-0 regime, an overfitting risk flagged by the round-3 verdict.
-`BENCH/holdout_f1.py` re-scores every bench detector with thresholds
-FROZEN ({h['rows']:,} rows, {h['sources']} sources, scoring identical
-to bench.py; full numbers in `BENCH/holdout_f1.json`, commit
-{h['commit']}):
-
-| regime | truth pts | ensemble F1 | best single detector |{adaptive_hdr}
-|---|---|---|---|{adaptive_sep}
-{table}
-
-Reading: {seed_line}. Regime shifts move the score the way the
-signal-to-noise moves — the held-out ensemble range is
-[{h['ensemble_heldout_min']}, {h['ensemble_heldout_max']}], with
-`{bottom}` at the bottom — and {margin_line}. No thresholds were
-touched for any row.{adaptive_line}
-"""
-
-
-def render_pipeline_pin() -> str:
-    """tok_pipeline steady-state pin from BENCH/pipeline_pin_r5.json
-    (written by BENCH/pipeline_pin.py)."""
-    path = os.path.join(REPO, "BENCH", "pipeline_pin_r5.json")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        p = json.load(f)
-    mins = ", ".join(f"{r['wall_sec']}s (loadavg {r['pre_loadavg']})"
-                     for r in p["runs"])
-    wall_bar = p["bar"]["wall_sec"]
-    pps_bar = p["bar"]["points_per_sec"]
-    if p["meets_wall_bar"] and p["meets_pps_bar"]:
-        verdict = (
-            f"Both bars pass; the round-4 quiet-window 19.9 s reading "
-            f"was host contention, not a code regression — the "
-            f"per-campaign minima track the pre-campaign load "
-            f"averages, and the quietest campaign beats every prior "
-            f"round's steady state. No bisect was needed.")
-    else:
-        verdict = (
-            f"The pooled minimum misses a bar — the regression is "
-            f"real; bisect the round-4 data-path commits.")
-    return f"""
-
-## tok_pipeline steady state, pinned (round-5)
-
-Round 4 left a ±3 s ambiguity (driver run 17.5 s / 28.3k pts/s vs
-quiet-window 19.9 s / 24.8k). `BENCH/pipeline_pin.py` re-measured at
-the round-4 HEAD with {p['campaigns']} independent fresh-process
-campaigns over the same staged {p['rows']:,}-row table (each campaign:
-min of post-first iterations; every wall recorded in
-`pipeline_pin_r5.json`): per-campaign minima {mins}. **Pooled min
-{p['pooled_min_wall_sec']} s = {p['pooled_points_per_sec']:,.0f}
-rolled-points/s** against the bars of <= {wall_bar} s and
->= {pps_bar:,.0f} pts/s. {verdict}
-"""
-
-
-def render_cold_note() -> str:
-    """Cold-start root-cause section from BENCH/cold_profile.json
-    (written by BENCH/cold_profile.py)."""
-    path = os.path.join(REPO, "BENCH", "cold_profile.json")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        cp = json.load(f)
-    c1 = cp["cold"]["iters"][0]
-    w1 = cp["warmed"]["iters"][0]
-    c_steady = min(i["total"] for i in cp["cold"]["iters"][1:])
-    w_steady = min(i["total"] for i in cp["warmed"]["iters"][1:])
-    steady_rollup = min(i["rollup_1m"]
-                        for m in ("cold", "warmed")
-                        for i in cp[m]["iters"][1:])
-    # conclusion derived from the data above it: if the unrelated
-    # warm-up brought the first-ever pipeline rollup near steady
-    # state, the premium is generic infra warm-up; otherwise a
-    # plan-specific residual remains and the note must say so
-    if w1["rollup_1m"] <= 1.5 * steady_rollup:
-        conclusion = (
-            "Because a job sharing NO stage with the pipeline removes "
-            "most of the first-run premium, the premium is generic "
-            "JVM/Spark infrastructure warm-up (codegen compiler, "
-            "shuffle and scheduler class loading, first parquet "
-            "footer reads) — not plan-shape-specific JIT of the "
-            "dominant rollup stage, and not a first-run plan "
-            "difference (the claim is gated on the rollup phase, the "
-            "pipeline's largest; per-phase walls for the rest are in "
-            "the JSON).")
-    else:
-        conclusion = (
-            f"The unrelated warm-up did NOT close the first-run gap "
-            f"(first rollup {w1['rollup_1m']} s vs steady "
-            f"{steady_rollup} s) — a plan-shape-specific residual "
-            "remains unexplained; re-profile in a quiet window.")
-    return f"""
-
-## tok_pipeline cold-start root cause
-
-BENCH_r03 recorded `tok_pipeline_cold` 61.3 s vs 16.7 s steady at
-sf0.1 and asked whether the gap is spin-up or a first-run plan
-difference. `BENCH/cold_profile.py` ran the pipeline with per-phase
-walls in two fresh processes over the same staged
-{cp['cold']['rows']:,}-row table: one cold, one after a
-{cp['warmed']['warmup_wall']:.1f} s UNRELATED warm-up job (different
-plan shape — range -> wide agg -> shuffle; it shares no stage with
-the pipeline).
-
-Cold first iteration: rollup phase {c1['rollup_1m']} s. After the
-unrelated warm-up: first-ever pipeline execution's rollup phase
-{w1['rollup_1m']} s, vs steady-state rollup phase {steady_rollup} s
-(cold steady {c_steady} s, warmed steady {w_steady} s totals; full
-per-phase walls in `BENCH/cold_profile.json`, measured under visible
-host contention, spikes disclosed). {conclusion} Implication: at the
-10^12-row design point the one-time cost is noise; a
-latency-sensitive deployment can absorb it by running any trivial job
-at session start. bench.py's steady-state metric (min of post-first
-iterations) remains the design-point number; `tok_pipeline_cold`
-stays published for transparency.
-"""
-
-
-def render_skew_stress() -> str:
-    """Adversarial-skew section from BENCH/skew_stress.json (written by
-    BENCH/skew_stress.py). Empty string when the harness hasn't run."""
-    path = os.path.join(REPO, "BENCH", "skew_stress.json")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        s = json.load(f)
-    t, r, c = s["tables"], s["runs"], s["criteria"]
-    rows = []
-    for name in ("balanced", "balanced_unsalted", "skew90",
-                 "hotminute_salted", "hotminute_unsalted"):
-        run = r[name]
-        sp = run.get("spread", {})
-        rows.append(
-            f"| {name} | {run['wall_sec']} | {run['rows_per_sec']:,.0f} "
-            f"| {sp.get('task_sec_median', 'n/a')} "
-            f"| {sp.get('task_sec_max', 'n/a')} "
-            f"| {sp.get('max_over_median', 'n/a')} |")
-    table = "\n".join(rows)
-    skew_line = (
-        f"the 90%-one-source table holds {c['skew90_rps_over_balanced']:.0%} "
-        f"of balanced raw-row throughput on the same input volume "
-        f"({'within' if c['skew90_within_20pct'] else 'OUTSIDE'} the 20% "
-        f"criterion), with dominant-stage task max/median "
-        f"{c['skew90_spread']} vs {c['balanced_spread']} balanced")
-    hot = c["hotminute_salted_over_unsalted"]
-    hot_line = (
-        f"the salted run costs {hot}x the unsalted wall "
-        f"(task max/median {c['hotminute_spread_salted']} salted vs "
-        f"{c['hotminute_spread_unsalted']} unsalted)")
-    salt_ov = c["salt_overhead_balanced_paired"]
-    ab = s.get("ab_balanced", {})
-    n_pairs = len(ab.get("pairs", []))
-    # campaign-to-campaign noise band, from the data: per-arm minima
-    # across campaigns (min of each campaign's post-first walls)
-    bands = []
-    for name, run in r.items():
-        cws = run.get("campaign_walls")
-        if cws and len(cws) > 1:
-            minima = [min(wl[1:] if len(wl) > 1 else wl) for wl in cws]
-            bands.append(max(minima) / min(minima))
-    noise_line = (
-        f"re-measured arms saw campaign-minimum swings up to "
-        f"{max(bands):.1f}x on this shared-host VM, so cross-campaign "
-        f"wall RATIOS between different arms are unresolvable below "
-        f"that band; the paired A/B below is the noise-robust "
-        f"estimator" if bands else
-        "single campaign per arm — no cross-campaign band measured")
-    worst = max(salt_ov, hot)
-    if worst <= 1.10:
-        salt_verdict = (
-            f"at a worst measured cost of {worst}x the default stays "
-            f"n_salts=16 — the failure mode it guards against (a future "
-            f"non-associative measure pinning a reducer) is catastrophic "
-            f"at 100 TB and the insurance is near-free.")
-    else:
-        salt_verdict = (
-            f"the worst measured cost is {worst}x, which is NOT free — "
-            f"see the accompanying analysis for whether the default "
-            f"n_salts should drop.")
-    return f"""
-
-## Adversarial skew stress (salted rollup, measured)
-
-The north rule claims "salted repartitioning by source" handles skewed
-key cardinalities; through round 4 that was asserted by design, never
-measured adversarially. `BENCH/skew_stress.py` stages three
-{s['rows']:,}-row-class tables (balanced zipf 1.2; `skew90` with
-{t['skew90'].get('top_share', 'n/a')} of all rows in ONE source of 16;
-`hotminute` with 90% of {s['hotminute_rows']:,} docs concentrated onto
-~9 minute buckets of one source — hundreds of millions of exploded
-token rows behind ~9 (source, bucket) keys) and runs the 1m rollup
-fresh-process over each (wall = min of iterations 2+; spreads parsed
-from Spark event logs scoped to the best iteration's time window —
-the direct task-balance measurement). `_unsalted` arms run the same
-engine with `n_salts=1`, i.e. a plain groupBy(source, bucket); salted
-arms use the shipped default `n_salts=16`. Throughput is raw input
-rows/s — tables of equal row count produce different output-key
-counts, so rolled-points/s is not comparable across tables:
-
-| run | wall (s) | raw rows/s | dominant-stage task median (s) | max (s) | max/median |
-|---|---|---|---|---|---|
-{table}
-
-Walls are pooled minima over {s.get('campaigns', 1)} campaign(s);
-{noise_line}.
-
-Reading (all numbers from `skew_stress.json`): {skew_line}.
-On the pathological hot-minute table {hot_line}; on the balanced
-table the default salting costs **{salt_ov}x** by the paired
-in-one-JVM A/B (median of {n_pairs} alternating salted/unsalted
-iteration pairs — host noise cancels within a pair). The
-mechanism behind both: Spark's hash aggregation already performs
-partial (map-side) aggregation BEFORE the exchange, so for this
-engine's purely associative rollup measures the shuffle carries only
-per-(key, input-partition) partials — key skew never concentrates raw
-rows onto one reducer, with or without salt. Salting therefore buys
-insurance for non-algebraic extensions (exact per-key percentiles,
-collect-based measures, high-cardinality groups that overflow the
-map-side hash) at the measured overhead above; {salt_verdict}
-"""
-
-
-def render_headline() -> str:
-    """Pooled headline-suite pin from BENCH/headline_r5.json
-    (written by BENCH/headline_pin.py). Empty until it exists."""
-    path = os.path.join(REPO, "BENCH", "headline_r5.json")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        s = json.load(f)
-    q = s["pooled_query_min_sec"]
-    rows = "\n".join(f"| {name} | {sec} |"
-                     for name, sec in q.items())
-    loads = ", ".join(str(c["_pre_loadavg_1m"]) for c in s["campaigns"])
-    return f"""
-
-## Headline suite pooled pin (round 5, post-spread)
-
-Round 5 root-caused the doc_* query cost: a small single-file parquet
-corpus scans as ONE split, so every per-row text expression (shingle
-hashing, regexes, higher-order functions) ran on one thread until the
-first exchange. The adaptive spread (`textops._spread` — project to
-needed columns, repartition only when the scan has fewer splits than
-cores; self-disabling at cluster scale) fixed it:
-`doc_minhash_pairs` 8.2-9.0 s (r3/r4 steady state) -> **{q.get('doc_minhash_pairs')} s**,
-`doc_ngram_jaccard` 1.4-1.6 s -> {q.get('doc_ngram_jaccard')} s,
-`doc_quality` 0.82 s -> {q.get('doc_quality')} s; with the round-5
-stream-side repartition of the exact-baseline cosine join,
-`emb_cosine_topk` 1.4-1.5 s -> {q.get('emb_cosine_topk')} s.
-
-Pooled per-query minima over {s['n_campaigns']} fresh-process
-campaigns at git {s['git_head']} (pre-campaign 1-min loadavg per
-campaign: {loads}; every campaign's full bench line is kept in
-`headline_r5.json`):
-
-| query | pooled min wall (s) |
-|---|---|
-{rows}
-
-Pooled total **{s['pooled_total_sec']} s** (best single campaign
-{s['best_campaign_total_sec']} s; r3 steady state was 34.3 s, r4
-driver-run 38.5 s). Best rolled-points/s across campaigns:
-**{s['best_rolled_points_per_sec']:,.0f}** (bar: >= 25,000).
-"""
-
-
-def render_notes() -> str:
-    """Hand-maintained evidence sections from BENCH/NOTES.md, included
-    verbatim (currently: the round-5 HEAD single-run bench note and the
-    large-sf contract-gate narrative with the codegen-cosine and
-    norm-placement A/Bs). A --render rebuilds BASELINE.md wholesale
-    from the committed JSONs; without this hook those hand sections
-    were silently dropped on regeneration."""
-    path = os.path.join(REPO, "BENCH", "NOTES.md")
-    if not os.path.exists(path):
-        return ""
-    with open(path) as f:
-        return "\n\n" + f.read().rstrip() + "\n"
-
-
-def render_bigsf() -> str:
-    """Large-SF contract + bench section from BENCH/oracle_sfbig.json
-    (tools/check_oracles.py --json over the synthesized sf1-scale dir)
-    and BENCH/bench_sf1.json (bench.py at that dir with a 20M-row
-    token table). Empty until both exist; the hand narrative of HOW
-    the gate was made survivable lives in BENCH/NOTES.md."""
-    cpath = os.path.join(REPO, "BENCH", "oracle_sfbig.json")
-    bpath = os.path.join(REPO, "BENCH", "bench_sf1.json")
-    if not (os.path.exists(cpath) and os.path.exists(bpath)):
-        return ""
-    with open(cpath) as f:
-        c = json.load(f)
-    with open(bpath) as f:
-        b = json.load(f)
-    qs = c["queries"]
-    n_ok = sum(1 for q in qs.values() if q["status"] == "OK")
-    n_rows_only = sum(1 for q in qs.values() if q["status"] == "rows_only")
-    n_fail = len(c["failures"])
-    slowest = sorted(((q.get("spark_sec") or 0, n) for n, q in qs.items()),
-                     reverse=True)[:5]
-    slow_line = ", ".join(f"`{n}` {w}s" for w, n in slowest)
-    fail_line = ("zero failures" if n_fail == 0 else
-                 f"**{n_fail} FAILURES: {c['failures']}**")
-    bench_rows = "\n".join(
-        f"| {name} | {sec} |" for name, sec in sorted(
-            b["queries"].items(), key=lambda kv: -kv[1]))
-    return f"""
-
-## Full contract + bench above sf0.1 (synthesized sf1-scale dir)
-
-`/root/testdata` is read-only, so `tools/make_bigsf.py` synthesizes a
-driver-schema dir an order of magnitude above the sf0.1 gate on the
-text/embedding axes (seeded, vocab drawn from the real sf0.1
-documents, ~1% planted exact dups / ~1% near-dups / 100
-near-identical embedding pairs). The full 48-query oracle gate over
-it: **{n_ok} oracle-green, {n_rows_only} rows-only, {fail_line}**
-(`BENCH/oracle_sfbig.json`; DuckDB runs the same SQL on the same
-parquet; the survivability fixes the gate forced are narrated in the
-large-sf section above). Slowest Spark sides: {slow_line}.
-
-`bench.py` at the same dir with a
-{b.get('tok_bench_rows', 0):,}-row token table (10x the sf0.1
-bench; local[{b.get('cpus', 32)}], `BENCH/bench_sf1.json`): headline
-total **{b['value']} s**, tok_pipeline {b['queries'].get(
-    'tok_pipeline')} s steady = {b.get('rolled_points_per_sec', 0):,.0f}
-rolled-points/s over {b.get('rolled_points', 0):,} points, ensemble
-F1 {b.get('anomaly_flag_f1', {}).get('ensemble')}.
-
-| query | wall (s) |
-|---|---|
-{bench_rows}
-"""
-
-
-def render_md(summary: dict) -> str:
-    rows = ["| level | best wall (s) | all iterations (s) | rolled points/s | raw rows/s |",
-            "|---|---|---|---|---|"]
-    for name, r in summary["levels"].items():
-        rows.append(
-            f"| {name} | {r['wall_sec']} | {r['walls']} "
-            f"| {r['points_per_sec']:,.0f} | {r['raw_rows_per_sec']:,.0f} |")
-    table = "\n".join(rows)
-    lo_pass = summary.get("pass_2_to_8")
-    hi_pass = summary.get("pass_8_to_32")
-    if lo_pass and hi_pass:
-        verdict_context = (
-            "Both N->4N pairs meet the criterion under the "
-            "conservative pooled estimator. Context on the estimator "
-            "itself:")
-    elif lo_pass and not hi_pass:
-        verdict_context = (
-            "The low pair (the faithful proxy for adding executors — "
-            "see below) meets the criterion; the high pair falls "
-            "short of it even after hardware normalization. Context "
-            "the reader should weigh — context, not excuses; every "
-            "number behind it is published:")
-    else:
-        verdict_context = (
-            "Under this conservative pooled estimator the table says "
-            "FAIL. Context the reader should weigh — context, not "
-            "excuses; every number behind it is published:")
-    merged = int(summary.get("merged_runs", 1))
-    pooled = ("" if merged <= 1 else
-              f"\nWalls below are pooled across {merged} independent "
-              "harness runs of the same code over the same staged input "
-              "(min over the union; every iteration of every run remains "
-              "listed) — the shared host's contention spikes make any "
-              "single run's min a biased-high estimate of uncontended "
-              "capability.\n")
-    return f"""# BENCH/BASELINE.md — two-parallelism scaling evidence
-
-North rule criterion: **throughput scaling efficiency >= 0.8 from N to
-4N executors**. No real cluster exists in this sandbox, so per the task
-brief the proxy is the same job at two parallelism levels on the same
-input (identical staged parquet bytes, fresh process per level).
-
-**Job**: staged `tokens_raw` parquet ({summary['rows']:,} rows,
-Zipf-skewed sources) -> salted 1m rollup (posexplode + native
-whole-stage-codegen aggregation, two-phase salted) -> 1h -> 1d
-cascades -> gap-fill -> IQR + MAD anomaly flags. Wall = min of the
-post-first iterations; each level runs at least
-{summary['iters_per_level']} iterations and keeps iterating (cap 24)
-while its min is still improving >2% over the last three — JVM
-JIT/profile warmup keeps improving the fast levels for many
-iterations, so a fixed count under-measures steady state. Every
-iteration rebuilds its plans from a fresh `spark.read.parquet`, so
-nothing is reused across iterations.
-{pooled}
-{table}
-
-| N -> 4N pair | raw efficiency | hw ceiling | **normalized** | criterion | verdict |
-|---|---|---|---|---|---|
-| local[2] -> local[8] | {summary.get('scaling_efficiency_2_to_8', 'n/a')} | {summary.get('hw_ceiling_2_to_8', 'n/a')} | **{summary.get('normalized_efficiency_2_to_8', 'n/a')}** | >= 0.8 | {_verdict_cell(summary, '2_to_8')} |
-| local[8] -> local[32] | {summary.get('scaling_efficiency_8_to_32', 'n/a')} | {summary.get('hw_ceiling_8_to_32', 'n/a')} | **{summary.get('normalized_efficiency_8_to_32', 'n/a')}** | >= 0.8 | {_verdict_cell(summary, '8_to_32')} |
-
-**Hardware ceiling** = what this virtualized box itself delivers going
-N -> 4N, measured with independent pure-Python CPU-burn processes (no
-JVM, no Spark, no shared state, nothing to contend on). Every
-calibration run is recorded in scaling.json `calibration_runs`; the
-ceiling uses the per-level MAX across them (the quietest window the
-host ever showed per level). That pairing is deliberately the
-CONSERVATIVE one: the pooled walls estimate quiet-window ENGINE
-capability, so normalizing them by a contended-window calibration
-would inflate the normalized value. **Normalized** = engine
-efficiency / ceiling — the fraction of achievable scaling the engine
-captures; the verdict column applies the >= 0.8 criterion to it.
-
-**Reading the verdicts honestly.** {verdict_context}
-
-- This shared VM's contention moves single iterations by 2-5x and
-  whole ~10-minute level windows at once; each level's pooled min
-  improves independently across runs, so the ratio is a division of
-  two noisy floors — ±0.05-0.1 swings between campaigns were observed
-  in both directions across rounds 1-3. Every iteration of every run
-  stays listed above.
-- The engine has no algorithmic serial section: it shards by
-  (source, bucket_ts, salt), uses broadcast-only small joins and
-  associative tier cascades, and every stage's task count scales with
-  input splits, not with a fixed constant. Scan splits are sized
-  (32 MB) so every level runs >= 3-4 task waves — at 6M rows the
-  default 128 MB splits left local[32] a single ragged wave and cost
-  ~38% of its wall (round-3 fix, measured 47 s -> 29 s).
-- Residual high-pair raw shortfall is fixed per-JOB cost (driver plan
-  analysis, stage barriers) that is constant in thread count and
-  double-digit percent of a sub-minute proxy wall; at the 10^12-row
-  design point the same seconds are noise. The input-size trend
-  DEMONSTRATES the amortization: 8->32 raw efficiency measured 0.65
-  at 2M rows, 0.77 at 6M, **1.06 at 12M** (same-run pair, walls
-  285.3 s -> 67.4 s, BENCH/scaling_12m.json), and **0.89 at 20M**
-  (raw PASS without normalization; walls 472.1 s -> 132.5 s pooled
-  over two campaigns, BENCH/scaling_20m.json — the first campaign's
-  local[32] window ran under host load ~30 and every wall exceeded
-  185 s; a same-code re-measurement in a quieter window set the
-  pooled min, disclosure in its merge_notes). Once the input
-  amortizes fixed costs the pair sits at or above the 0.8 criterion
-  RAW, before any hardware normalization; the 12M-vs-20M spread
-  (1.06 vs 0.89) is within the ±0.05-0.1 campaign-to-campaign band
-  this shared host shows everywhere else.
-
-Both pairs are reported for honesty about the proxy's limits: all
-threads of a `local[k]` master share ONE memory subsystem and ONE JVM
-heap, so the high pair progressively measures DRAM-bandwidth and GC
-saturation that a real scale-OUT to 4N executors (4x memory channels,
-4x independent heaps) would not suffer.
-""" + render_holdout_f1() + render_pipeline_pin() + render_cold_note() \
-        + render_skew_stress() + render_headline() + render_notes() \
-        + render_bigsf()
+    src = os.path.join(REPO, "src")
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (src, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run(
+        [sys.executable, "-m", "tstoken.jobs.pipeline",
+         str(cpus), str(rows), str(iters)],
+        capture_output=True, text=True, timeout=7200, env=env)
+    lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(f"local[{cpus}] campaign failed "
+                           f"(rc={out.returncode}):\n{out.stderr[-3000:]}")
+    return json.loads(lines[-1])
 
 
 def recompute_verdicts(summary: dict) -> dict:
@@ -769,10 +170,7 @@ def recompute_verdicts(summary: dict) -> dict:
 
 
 def main():
-    if len(sys.argv) > 1 and sys.argv[1] == "--render":
-        with open(os.path.join(REPO, "BENCH", "scaling.json")) as f:
-            summary = json.load(f)
-    elif len(sys.argv) > 1 and sys.argv[1] == "--recal":
+    if len(sys.argv) > 1 and sys.argv[1] == "--recal":
         # re-run the CPU calibration only, append it to the pooled
         # calibration list, and recompute ceilings/verdicts over the
         # existing pooled walls (no Spark re-run)
@@ -914,17 +312,12 @@ def main():
         summary = recompute_verdicts(summary)
         # --out PATH: write an auxiliary evidence file (e.g. a
         # larger-rows 8->32-only measurement) without touching the
-        # primary scaling.json / BASELINE.md
+        # primary scaling.json
+        out_path = os.path.join(REPO, "BENCH", "scaling.json")
         if "--out" in sys.argv:
             out_path = sys.argv[sys.argv.index("--out") + 1]
-            with open(out_path, "w") as f:
-                json.dump(summary, f, indent=2)
-            print(json.dumps(summary))
-            return
-        with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
+        with open(out_path, "w") as f:
             json.dump(summary, f, indent=2)
-    with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "w") as f:
-        f.write(render_md(summary))
     print(json.dumps(summary))
 
 

@@ -1,9 +1,10 @@
-"""Adversarial skew stress for the salted 1m rollup (round-5 VERDICT
-item #4 — the north rule's "salted repartitioning by source handles
-skewed key cardinalities" claim, measured instead of asserted).
+"""Adversarial skew stress for the 1m rollup (round-5 VERDICT item #4 —
+the north rule's "repartitioning by source handles skewed key
+cardinalities" claim, measured instead of asserted).
 
 Three staged tables, all fresh-process measured (min of post-first
-iterations, same protocol as BENCH/scaling.py):
+iterations, same protocol as BENCH/scaling.py), each at
+local[$SPARK_GRAFT_CPUS]:
 
   balanced    the bench generator's default geometry (zipf 1.2);
   skew90      zipf 3.5 over 16 sources — ~90% of all rows land in ONE
@@ -14,29 +15,25 @@ iterations, same protocol as BENCH/scaling.py):
               stays bounded): 90% of docs carry wrapped sequence
               numbers, concentrating them onto ~9 minute buckets —
               per-(source,bucket_ts) explode cardinality in the
-              hundreds of millions. Run twice: n_salts=32 (the
-              engine's two-phase salted agg) and n_salts=1 (salting
-              disabled — every hot key is ONE reducer task).
+              hundreds of millions.
 
 Per-run evidence beyond wall clock: Spark event logs are enabled and
 the dominant stage's task-duration spread (max/median) is parsed out —
-the direct measurement of "task-time balance".
+the direct measurement of "task-time balance" (does one reducer get
+pinned by a hot key).
 
 Criteria recorded in the summary (all on the SAME input volume, so the
 comparable unit is raw input rows/s == inverse wall, NOT rolled
 points/s — a skewed table legitimately yields fewer output keys from
-the same rows):
-  - skew90 raw-row throughput within ~20% of balanced;
-  - hotminute salted-vs-unsalted wall ratio + dominant-stage task
-    spread for both (the direct "does one reducer get pinned" check);
-  - balanced salted-vs-unsalted wall ratio (what the engine's default
-    salting costs when there is no skew to defend against).
+the same rows): skew90 raw-row throughput within ~20% of balanced, and
+the dominant-stage task spread of every arm.
 
 Task spreads are computed ONLY over the best (fastest) iteration's
 time window — pooling all iterations lets cold-JIT/contended early
 iterations dominate the dominant-stage pick.
 
-Usage: python BENCH/skew_stress.py [rows] — writes BENCH/skew_stress.json
+Usage: python BENCH/skew_stress.py [rows] [arm ...] — writes
+BENCH/skew_stress.json
 """
 
 from __future__ import annotations
@@ -49,6 +46,7 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 CHILD = r"""
 import glob, json, os, sys, time
@@ -58,8 +56,7 @@ from tstoken import rollup
 
 evdir = {evdir!r}
 os.makedirs(evdir, exist_ok=True)
-spark = get_spark("skew-stress", master="local[32]",
-                  shuffle_partitions=32,
+spark = get_spark("skew-stress", master="local[{cpus}]",
                   extra_conf={{"spark.eventLog.enabled": "true",
                                "spark.eventLog.compress": "false",
                                "spark.eventLog.dir": "file:" + evdir}})
@@ -69,13 +66,12 @@ walls, windows = [], []
 for i in range({iters}):
     t0 = time.time()
     raw = spark.read.parquet({path!r})
-    t1m = rollup.rollup_1m(raw, n_salts={n_salts})
+    t1m = rollup.rollup_1m(raw)
     t1m.write.format("noop").mode("overwrite").save()
     t1 = time.time()
     walls.append(round(t1 - t0, 2))
     windows.append([int(t0 * 1000), int(t1 * 1000)])
-points = rollup.rollup_1m(spark.read.parquet({path!r}),
-                          n_salts={n_salts}).count()
+points = rollup.rollup_1m(spark.read.parquet({path!r})).count()
 tail = walls[1:] if len(walls) > 1 else walls
 best_i = walls.index(min(tail))
 print(json.dumps({{"walls": walls, "wall_sec": walls[best_i],
@@ -86,37 +82,6 @@ print(json.dumps({{"walls": walls, "wall_sec": walls[best_i],
 spark.stop()
 """
 
-AB_CHILD = r"""
-import json, os, sys, time
-sys.path.insert(0, os.path.join({repo!r}, "src"))
-from tstoken.session import get_spark
-from tstoken import rollup
-
-spark = get_spark("skew-ab", master="local[32]", shuffle_partitions=32)
-spark.sparkContext.setLogLevel("ERROR")
-
-def one(n_salts):
-    t0 = time.time()
-    raw = spark.read.parquet({path!r})
-    rollup.rollup_1m(raw, n_salts=n_salts).write.format("noop") \
-        .mode("overwrite").save()
-    return round(time.time() - t0, 2)
-
-one(16); one(1)  # warm-up pair (JIT), discarded
-pairs = []
-for i in range({pairs}):
-    if i % 2 == 0:
-        s = one(16); u = one(1)
-    else:
-        u = one(1); s = one(16)
-    pairs.append({{"salted": s, "unsalted": u,
-                   "ratio": round(s / u, 3)}})
-ratios = sorted(p["ratio"] for p in pairs)
-print(json.dumps({{"pairs": pairs,
-                   "median_ratio": ratios[len(ratios) // 2]}}))
-spark.stop()
-"""
-
 STAGE = r"""
 import json, sys
 sys.path.insert(0, {src!r})
@@ -124,7 +89,7 @@ from pyspark.sql import functions as F
 from tstoken.session import get_spark
 from tstoken import synth
 
-spark = get_spark("skew-stage", master="local[32]")
+spark = get_spark("skew-stage", master="local[{cpus}]")
 spark.sparkContext.setLogLevel("ERROR")
 kind = {kind!r}
 rows = {rows}
@@ -237,6 +202,16 @@ def main():
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     only = set(sys.argv[2:])  # arm names: re-measure just these,
     #                           pooling the rest from the prior file
+    # pool with prior campaigns (same protocol as BENCH/scaling.py):
+    # keep each arm's fastest campaign — min-of-mins is the only
+    # estimator robust to one campaign catching a contended window
+    outpath = os.path.join(REPO, "BENCH", "skew_stress.json")
+    prior = {}
+    if os.path.exists(outpath):
+        with open(outpath) as f:
+            prior = json.load(f)
+    if prior.get("rows") != rows or "runs" not in prior:
+        prior = {"runs": {}}
     hot_rows = rows // 2
     src = os.path.join(REPO, "src")
     results = {"rows": rows, "hotminute_rows": hot_rows}
@@ -246,76 +221,35 @@ def main():
                     ("hotminute", hot_rows)):
         path = f"/tmp/tstoken_skew_{kind}_{n}"
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            info = run(STAGE.format(src=src, kind=kind, rows=n, path=path))
+            info = run(STAGE.format(src=src, kind=kind, rows=n, path=path,
+                                    cpus=CPUS))
         else:
             info = {"path_reused": True}
         tables[kind] = {"path": path, **info}
         print(json.dumps({kind: tables[kind]}), flush=True)
     results["tables"] = tables
 
-    runs = {}
-    # n_salts=16 is rollup_1m's shipped default — the salted arms
-    # measure the engine as configured, not a harness-special value.
-    jobs = [("balanced", tables["balanced"]["path"], rows, 16, 5),
-            ("balanced_unsalted", tables["balanced"]["path"], rows, 1, 5),
-            ("skew90", tables["skew90"]["path"], rows, 16, 5),
-            ("hotminute_salted", tables["hotminute"]["path"], hot_rows,
-             16, 5),
-            ("hotminute_unsalted", tables["hotminute"]["path"], hot_rows,
-             1, 5)]
-    for name, path, n_rows, n_salts, iters in jobs:
-        if only and name not in only:
+    arms = {"balanced": rows, "skew90": rows, "hotminute": hot_rows}
+    runs = {n: p for n, p in prior["runs"].items()
+            if n in arms and "rows_per_sec" in p}
+    for name, n_rows in arms.items():
+        if only and name not in only and name in runs:
             continue
         evdir = f"/tmp/tstoken_skew_ev_{name}_{int(time.time())}"
-        r = run(CHILD.format(repo=REPO, path=path, n_salts=n_salts,
-                             iters=iters, evdir=evdir, rows=n_rows))
+        r = run(CHILD.format(repo=REPO, path=tables[name]["path"],
+                             cpus=CPUS, iters=5, evdir=evdir, rows=n_rows))
         r["spread"] = task_spread(evdir, window=r.get("best_window"))
-        runs[name] = r
         print(json.dumps({name: r}), flush=True)
-
-    # pool with prior campaigns (same protocol as BENCH/scaling.py):
-    # keep each arm's fastest campaign — min-of-mins is the only
-    # estimator robust to one campaign catching a contended window
-    outpath = os.path.join(REPO, "BENCH", "skew_stress.json")
-    campaigns, prior = 1, {}
-    if os.path.exists(outpath):
-        with open(outpath) as f:
-            loaded = json.load(f)
-        if loaded.get("rows") == rows and "runs" in loaded:
-            prior = loaded
-            campaigns = prior.get("campaigns", 1) + 1
-            merged = {n: p for n, p in prior["runs"].items()
-                      if "rows_per_sec" in p}
-            for name, r in runs.items():
-                p = merged.get(name)
-                if p:
-                    hist = p.get("campaign_walls", [p["walls"]])
-                    best = dict(r if r["wall_sec"] <= p["wall_sec"]
-                                else p)
-                    best["campaign_walls"] = hist + [r["walls"]]
-                    merged[name] = best
-                else:
-                    merged[name] = r
-            runs = merged
-    results["campaigns"] = campaigns
+        p = runs.get(name)
+        if p:
+            hist = p.get("campaign_walls", [p["walls"]])
+            r = dict(r if r["wall_sec"] <= p["wall_sec"] else p,
+                     campaign_walls=hist + [r["walls"]])
+        runs[name] = r
+    results["campaigns"] = prior.get("campaigns", 0) + 1
     results["runs"] = runs
 
-    # paired A/B on the balanced table: salted/unsalted alternate
-    # inside ONE JVM so host-steal noise cancels within each pair —
-    # the only estimator of salting overhead that survives this
-    # host's multi-x campaign-to-campaign noise band. Reused from the
-    # prior file unless absent or explicitly re-requested.
-    ab = prior.get("ab_balanced")
-    if ab is None or "ab_balanced" in only:
-        ab = run(AB_CHILD.format(repo=REPO,
-                                 path=tables["balanced"]["path"],
-                                 pairs=7))
-        print(json.dumps({"ab_balanced": ab}), flush=True)
-    results["ab_balanced"] = ab
-
-    bal, balu, sk = (runs["balanced"], runs["balanced_unsalted"],
-                     runs["skew90"])
-    hs, hu = runs["hotminute_salted"], runs["hotminute_unsalted"]
+    bal, sk, hot = runs["balanced"], runs["skew90"], runs["hotminute"]
     results["criteria"] = {
         # same input rows -> raw rows/s is the comparable throughput
         "skew90_rps_over_balanced":
@@ -324,19 +258,7 @@ def main():
             sk["rows_per_sec"] >= 0.8 * bal["rows_per_sec"],
         "skew90_spread": sk["spread"].get("max_over_median"),
         "balanced_spread": bal["spread"].get("max_over_median"),
-        # what the default n_salts=16 costs when nothing is skewed:
-        # the paired in-JVM A/B median is the robust estimator; the
-        # cross-campaign min ratio is kept as raw data only
-        "salt_overhead_balanced_paired": ab["median_ratio"],
-        "salt_overhead_balanced_minratio":
-            round(bal["wall_sec"] / balu["wall_sec"], 3),
-        # pathological hot keys: salted vs one-reducer-per-key
-        "hotminute_salted_over_unsalted":
-            round(hs["wall_sec"] / hu["wall_sec"], 3),
-        "hotminute_spread_salted":
-            hs["spread"].get("max_over_median"),
-        "hotminute_spread_unsalted":
-            hu["spread"].get("max_over_median"),
+        "hotminute_spread": hot["spread"].get("max_over_median"),
     }
     with open(outpath, "w") as f:
         json.dump(results, f, indent=2)

@@ -5,12 +5,15 @@ Two groups:
   - driver-table queries (events/documents/embeddings) from
     __spark_entry__ — forced with a noop sink (full computation, no
     driver collect);
-  - the token-engine pipeline at TSTOKEN_BENCH_ROWS synthetic rows
-    (default 2M): synth → 1m rollup → 1h → 1d cascades → IQR +
-    MAD flags; reports rolled-up points/sec, the BASELINE.json metric.
+  - the token-engine pipeline (`tstoken.jobs.pipeline.token_pipeline`)
+    at TSTOKEN_BENCH_ROWS synthetic rows (default 2M): staged parquet
+    → 1m rollup → 1h → 1d cascades → gap-fill → IQR + MAD flags;
+    reports rolled-up points/sec, the BASELINE.json metric, plus every
+    iteration's wall (`tok_walls`) and phase split (`tok_phases`).
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, TSTOKEN_BENCH_ROWS,
-TSTOKEN_BENCH_SOURCES.
+TSTOKEN_BENCH_SOURCES, TSTOKEN_BENCH_QUERY_ITERS, TSTOKEN_BENCH_ITERS,
+TSTOKEN_BENCH_MAX_ITERS, TSTOKEN_BENCH_BUDGET_SEC.
 """
 
 from __future__ import annotations
@@ -72,85 +75,27 @@ def main() -> dict:
     # production shape), not fused inline generation
     from pyspark.sql import functions as F
 
-    from tstoken import detect, gapfill, rollup, synth
+    from tstoken import detect, synth
+    from tstoken.jobs.pipeline import steady_wall, steady_walls, token_pipeline
     staged = synth.stage_tokens_raw(spark, bench_rows,
                                     n_sources=bench_sources)
 
-    state = {}
-
-    def tok_pipeline():
-        # drop the previous run's cache FIRST — Spark's CacheManager
-        # substitutes cached data into canonically-equal new plans, so
-        # a live cache would turn the rerun into a cache read
-        prev = state.pop("t1m", None)
-        if prev is not None:
-            prev.unpersist(blocking=True)
-        raw = spark.read.parquet(staged)
-        t1m = rollup.rollup_1m(raw, n_salts=cpus).persist()
-        n_1m = t1m.count()
-        t1h = rollup.rollup_cascade(t1m, "1h").persist()
-        n_1h = t1h.count()
-        n_1d = rollup.rollup_cascade(t1h, "1d").count()
-        gf = gapfill.gap_fill(t1m, "1m")
-        iqr_fl = detect.iqr_flags(gf)
-        mad_fl = detect.mad_flags(gf)
-        # both detectors forced in ONE action (same fusion as
-        # BENCH/scaling.py): the union's branches schedule as
-        # concurrent stages of a single job instead of two
-        # back-to-back barriers — measured ~15-20% off the pipeline
-        # wall at 2M rows / local[32]
-        force(iqr_fl.select("source", "bucket_ts",
-                            F.lit("iqr").alias("m"), "is_outlier")
-              .unionByName(mad_fl.select("source", "bucket_ts",
-                                         F.lit("mad").alias("m"),
-                                         "is_outlier")))
-        state.update(t1m=t1m, gf=gf, iqr=iqr_fl, mad=mad_fl)
-        t1h.unpersist()
-        return n_1m + n_1h + n_1d
-
-    # several iterations, min: early executions carry one-time JVM JIT
-    # compilation (tens of seconds in this VM — pure noise against a
-    # 10^12-row cluster job, see BENCH/BASELINE.md); min of the later
-    # runs approaches steady-state engine throughput.
     # adaptive iteration count (round-2 lesson: 3 iterations in a
     # contended window recorded 30.8 s where the pooled quiet-window
-    # min was 15.6 s): run at least TSTOKEN_BENCH_ITERS, keep going
-    # while the post-first min is still improving >2% over the last
-    # two iterations, capped by count and a wall-clock budget
-    min_iters = int(os.environ.get("TSTOKEN_BENCH_ITERS", "4"))
-    max_iters = int(os.environ.get("TSTOKEN_BENCH_MAX_ITERS", "10"))
-    budget = float(os.environ.get("TSTOKEN_BENCH_BUDGET_SEC", "300"))
-    walls = []
-    loop_t0 = time.time()
-    while True:
-        t0 = time.time()
-        rolled_points = tok_pipeline()
-        walls.append(time.time() - t0)
-        n = len(walls)
-        if n >= max_iters or (n >= min_iters
-                              and time.time() - loop_t0 > budget):
-            break
-        # plateau rule needs >= 4 walls (a 2-wall comparison window
-        # beyond warmup+current); below that, min_iters behaves as a
-        # plain fixed count — TSTOKEN_BENCH_ITERS<=3 is the explicit
-        # "quick fixed run" mode, adaptivity starts at the default 4
-        if n >= min_iters and n >= 2:  # n==1: walls[1:] is empty
-            best = min(walls[1:])
-            if best > walls[0]:
-                # contention signature: steady-state SLOWER than the
-                # cold first run is impossible from the engine's side
-                # (JIT warmup only ever helps) — the host got busy
-                # mid-loop. Keep iterating toward a quiet patch until
-                # the budget/max cap instead of recording the spike.
-                continue
-            if best >= 0.98 * min(walls[1:-2] or walls[1:]):
-                break
-    tok_wall = min(walls[1:]) if len(walls) > 1 else walls[0]
+    # min was 15.6 s): at least TSTOKEN_BENCH_ITERS, then the
+    # steady_walls plateau rule, capped by count and a wall-clock budget
+    walls, runs = steady_walls(
+        lambda prev: token_pipeline(spark, staged, prev),
+        min_iters=int(os.environ.get("TSTOKEN_BENCH_ITERS", "4")),
+        max_iters=int(os.environ.get("TSTOKEN_BENCH_MAX_ITERS", "10")),
+        budget=float(os.environ.get("TSTOKEN_BENCH_BUDGET_SEC", "300")))
+    last = runs[-1]
+    rolled_points = last["rolled_points"]
+    t1m, gf, iqr_fl, mad_fl = last["t1m"], last["gf"], last["iqr"], last["mad"]
+    tok_wall = steady_wall(walls)
     timings["tok_pipeline"] = round(tok_wall, 3)
     timings["tok_pipeline_cold"] = round(walls[0], 3)
     pps = rolled_points / tok_wall
-    t1m, gf = state["t1m"], state["gf"]
-    iqr_fl, mad_fl = state["iqr"], state["mad"]
 
     # anomaly-flag F1 vs planted ground truth (the BASELINE.json metric's
     # second component); truth restricted to minutes present in the tier
@@ -211,6 +156,8 @@ def main() -> dict:
         "rolled_points_per_sec": round(pps, 1),
         "raw_rows_per_sec": round(bench_rows / tok_wall, 1),
         "anomaly_flag_f1": f1s,
+        "tok_walls": [round(w, 3) for w in walls],
+        "tok_phases": [r["phases"] for r in runs],
     }
     spark.stop()
     print(json.dumps(result))

@@ -7,20 +7,21 @@ this sandbox has no iceberg-spark-runtime jar (verified in SURVEY.md
   - `iceberg`: spark.catalog tables, MERGE INTO upserts, snapshot ids
     from the snapshots metadata table (used when the configured catalog
     exists on the classpath);
-  - `parquet`: directory-per-table layout partitioned by `source`,
-    dynamic partition-overwrite emulating MERGE-by-partition, and a
-    manifest JSON carrying a monotonically increasing snapshot id +
-    row counts (the lineage anchor for checkpoint.py).
+  - `parquet`: directory-per-table layout partitioned by `source` (or
+    the writer's `partition_by`), and a manifest JSON carrying a
+    monotonically increasing snapshot id, the read schema and the
+    partition columns (the lineage anchor for checkpoint.py).
 
-Writes are idempotent at partition granularity: re-writing a partition
-replaces it (INSERT OVERWRITE semantics), which is what makes the
-checkpoint/resume path safe to re-run.
+Overwrites replace the whole table (INSERT OVERWRITE semantics, static
+whatever the session's `partitionOverwriteMode`), which is what makes
+the checkpoint/resume path safe to re-run.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -68,9 +69,11 @@ class TableIO:
                        partition_by: tuple[str, ...]) -> int:
         """Advance the snapshot id and record the schema `read` passes to
         Spark (data columns, then partition columns, all nullable — what
-        parquet inference yields), so no read runs an inference job."""
+        parquet inference yields), so no read runs an inference job, and
+        the partition columns, so a rewrite keeps the table's layout."""
         m = self._read_manifest(table)
         m["snapshot_id"] = int(m["snapshot_id"]) + 1
+        m["partition_by"] = list(partition_by)
         fields = ([f for f in df.schema if f.name not in partition_by]
                   + [df.schema[c] for c in partition_by])
         m["schema"] = StructType(
@@ -109,27 +112,12 @@ class TableIO:
            .parquet(self._path(table)))
         return self._bump_manifest(table, "append", -1, df, partition_by)
 
-    def overwrite_partitions(self, table: str, df: DataFrame,
-                             partition_by: tuple[str, ...] = ("source",)) -> int:
-        """INSERT OVERWRITE matching partitions (dynamic) — the
-        parquet emulation of Iceberg MERGE-by-partition."""
-        if self.backend == "iceberg":
-            df.writeTo(f"{self.catalog}.{table}").overwritePartitions()
-            return self.snapshot_id(table)
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (df.write.mode("overwrite").partitionBy(*partition_by)
-           .parquet(self._path(table)))
-        return self._bump_manifest(table, "overwrite_partitions", -1, df,
-                                   partition_by)
-
     def overwrite(self, table: str, df: DataFrame,
                   partition_by: tuple[str, ...] = ("source",)) -> int:
         if self.backend == "iceberg":
             df.writeTo(f"{self.catalog}.{table}").createOrReplace()
             return self.snapshot_id(table)
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-        (df.write.mode("overwrite").partitionBy(*partition_by)
-           .parquet(self._path(table)))
+        self._overwrite_dir(df, self._path(table), partition_by)
         return self._bump_manifest(table, "overwrite", -1, df, partition_by)
 
     def overwrite_safe(self, table: str, df: DataFrame,
@@ -139,39 +127,43 @@ class TableIO:
         the parquet fallback stages to a sibling dir and swaps."""
         if self.backend == "iceberg" or not self.exists(table):
             return self.overwrite(table, df, partition_by)
-        import shutil
-        final = self._path(table)
-        tmp = final + "__staging"
-        (df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp))
-        manifest = self._read_manifest(table)
-        shutil.rmtree(final)
-        os.rename(tmp, final)
-        with open(self._manifest_path(table), "w") as f:
-            json.dump(manifest, f)
-        return self._bump_manifest(table, "overwrite_safe", -1, df,
-                                   partition_by)
+        return self._stage_and_swap(table, df, partition_by, "overwrite_safe")
 
     def delete_where(self, table: str, predicate: str) -> int:
         """Retention delete. Iceberg: metadata-only DELETE FROM;
-        parquet fallback: rewrite the surviving rows."""
+        parquet fallback: rewrite the surviving rows in the table's own
+        partition layout (`source` for manifests that predate it)."""
         if self.backend == "iceberg":
             self.spark.sql(
                 f"DELETE FROM {self.catalog}.{table} WHERE {predicate}")
             return self.snapshot_id(table)
+        partition_by = tuple(self._read_manifest(table)
+                             .get("partition_by", ("source",)))
         df = self.read(table).filter(f"NOT ({predicate})")
-        pdf_cols = df.columns
-        tmp = self._path(table) + "__tmp"
-        df.write.mode("overwrite").partitionBy("source").parquet(tmp)
+        return self._stage_and_swap(table, df, partition_by,
+                                    f"delete_where:{predicate}")
+
+    @staticmethod
+    def _overwrite_dir(df: DataFrame, path: str,
+                       partition_by: tuple[str, ...]) -> None:
+        # the write option outranks the session conf, so a session in
+        # dynamic mode cannot leave stale partitions behind
+        (df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+         .partitionBy(*partition_by).parquet(path))
+
+    def _stage_and_swap(self, table: str, df: DataFrame,
+                        partition_by: tuple[str, ...], op: str) -> int:
+        """Write `df`, which may read `table` itself, to a sibling dir,
+        then swap it in for the table, keeping the manifest history."""
         final = self._path(table)
-        import shutil
+        tmp = final + "__staging"
+        self._overwrite_dir(df, tmp, partition_by)
         manifest = self._read_manifest(table)
         shutil.rmtree(final)
         os.rename(tmp, final)
         with open(self._manifest_path(table), "w") as f:
             json.dump(manifest, f)
-        del pdf_cols
-        return self._bump_manifest(table, f"delete_where:{predicate}", -1,
-                                   df, ("source",))
+        return self._bump_manifest(table, op, -1, df, partition_by)
 
     def snapshot_id(self, table: str) -> int:
         if self.backend == "iceberg":

@@ -1,6 +1,7 @@
 """Checkpoint/resume idempotency, streaming-vs-batch rollup agreement,
 multimodal plumbing, text/similarity operators."""
 
+import os
 import time
 
 import numpy as np
@@ -211,6 +212,37 @@ class TestTableIORead:
             assert list(jobs) == [], table
             assert df.schema == spark.read.parquet(
                 str(tmp_path / "tiers" / table)).schema, table
+
+
+class TestTableIOWrites:
+    def test_overwrite_is_static_and_leaves_session_conf(self, spark,
+                                                          tmp_path):
+        key = "spark.sql.sources.partitionOverwriteMode"
+        io = TableIO(spark, str(tmp_path))
+        schema = "source string, v long"
+        io.overwrite("t", spark.createDataFrame([("a", 1), ("b", 2)], schema))
+        old = spark.conf.get(key)
+        spark.conf.set(key, "dynamic")
+        try:
+            io.overwrite("t", spark.createDataFrame([("a", 3)], schema))
+            assert spark.conf.get(key) == "dynamic"
+        finally:
+            spark.conf.set(key, old)
+        # fully replaced: a dynamic overwrite would have kept source=b
+        assert [tuple(r) for r in io.read("t").collect()] == [(3, "a")]
+
+    def test_delete_where_keeps_partition_layout(self, spark, tmp_path):
+        io = TableIO(spark, str(tmp_path))
+        rows = [("src-000", "iqr", 1), ("src-000", "mad", 2),
+                ("src-001", "iqr", 3)]
+        io.overwrite("flags", spark.createDataFrame(
+            rows, "source string, method string, v long"),
+            partition_by=("method",))
+        io.delete_where("flags", "v = 3")
+        assert sorted(e for e in os.listdir(tmp_path / "flags")
+                      if "=" in e) == ["method=iqr", "method=mad"]
+        got = io.read("flags").select("source", "method", "v").collect()
+        assert sorted(tuple(r) for r in got) == rows[:2]
 
 
 class TestStreaming:

@@ -157,6 +157,25 @@ class TestRollup:
         assert dup == 0
 
 
+class TestTokenPipeline:
+    def test_rolled_points_and_phases(self, spark, raw, tmp_path):
+        from tstoken.jobs.pipeline import token_pipeline
+        staged = str(tmp_path / "staged")
+        raw.write.parquet(staged)
+        tiers = rollup.build_all_tiers(spark.read.parquet(staged))
+        first = token_pipeline(spark, staged)
+        assert first["rolled_points"] == sum(t.count()
+                                             for t in tiers.values())
+        assert set(first["phases"]) == {"rollup_1m", "cascades",
+                                        "gapfill_flags", "total"}
+        # the next run drops the previous run's cached 1m tier first, so
+        # no run reads a cache
+        second = token_pipeline(spark, staged, first)
+        assert not first["t1m"].is_cached and second["t1m"].is_cached
+        assert second["rolled_points"] == first["rolled_points"]
+        second["t1m"].unpersist()
+
+
 class TestGapFill:
     def test_dense_axis(self, t1m):
         gf = gapfill.gap_fill(t1m, "1m").toPandas()

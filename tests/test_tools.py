@@ -4,6 +4,7 @@ so the tooling's own semantics deserve tests. No Spark needed."""
 
 import os
 import sys
+import types
 
 import pandas as pd
 import pytest
@@ -138,31 +139,48 @@ class TestScalingVerdicts:
         assert out["pass_8_to_32"] is True
 
 
-class TestRenderRobustness:
-    def _summary_one_pair(self):
-        lv32 = {"cpus": 32, "rows": 100, "walls": [2.0], "wall_sec": 2.0,
-                "points_per_sec": 50.0, "raw_rows_per_sec": 50.0}
-        lv8 = {"cpus": 8, "rows": 100, "walls": [6.0], "wall_sec": 6.0,
-               "points_per_sec": 16.7, "raw_rows_per_sec": 16.7}
-        return {"rows": 100, "merged_runs": 1, "iters_per_level": 1,
-                "levels": {"local[8]": lv8, "local[32]": lv32},
-                "calibration_runs": [{"2": 100, "8": 400, "32": 1600}],
-                "cpu_calibration_units": {"2": 100, "8": 400, "32": 1600}}
+class TestSteadyWalls:
+    """`steady_walls` driven by scripted walls on a fake clock."""
 
-    def test_partial_levels_render_without_keyerror(self):
-        # a --levels 8,32 run has no 2->8 pair; render must not crash
-        # (the old f-string KeyError'd AFTER truncating BASELINE.md)
-        import scaling
-        s = scaling.recompute_verdicts(self._summary_one_pair())
-        md = scaling.render_md(s)
-        assert "n/a (level not measured)" in md
-        assert "local[8] -> local[32]" in md
+    def _drive(self, monkeypatch, script, min_iters=4, max_iters=10,
+               budget=300.0):
+        from tstoken.jobs import pipeline
+        now = [0.0]
+        monkeypatch.setattr(pipeline, "time",
+                            types.SimpleNamespace(time=lambda: now[0]))
+        script = iter(script)
 
-    def test_verdict_context_tracks_passes(self):
-        import scaling
-        s = scaling.recompute_verdicts(self._summary_one_pair())
-        # raw eff 8->32 = 6/(4*2) = 0.75, ceiling 1.0 -> FAIL branch
-        md = scaling.render_md(s)
-        assert "the table says FAIL" in md
-        s["pass_2_to_8"] = s["pass_8_to_32"] = True
-        assert "Both N->4N pairs meet the criterion" in scaling.render_md(s)
+        def run(prev):
+            now[0] += next(script)
+            return (prev or 0) + 1
+
+        walls, results = pipeline.steady_walls(
+            run, min_iters=min_iters, max_iters=max_iters, budget=budget)
+        # every run is handed the previous run's result
+        assert results == list(range(1, len(walls) + 1))
+        return walls
+
+    def test_plateau_stops(self, monkeypatch):
+        # at 4 walls the min (4) still beats the window [5] by >2%; at 5
+        # it no longer beats the window [5, 4]
+        assert self._drive(monkeypatch, [10, 5, 4, 4, 4, 4]) == \
+            [10, 5, 4, 4, 4]
+
+    def test_below_four_runs_is_a_fixed_count(self, monkeypatch):
+        assert len(self._drive(monkeypatch, [10, 9, 8, 7], min_iters=2)) == 2
+
+    def test_steady_slower_than_cold_keeps_going(self, monkeypatch):
+        # the same plateau after a FAST first run is contention
+        walls = self._drive(monkeypatch, [3] + [8] * 9, max_iters=7)
+        assert walls == [3] + [8] * 6
+
+    def test_stops_at_max_iters(self, monkeypatch):
+        walls = self._drive(monkeypatch, range(20, 0, -1), max_iters=6)
+        assert walls == [20, 19, 18, 17, 16, 15]
+
+    def test_stops_at_budget(self, monkeypatch):
+        # still improving >2% per run; 340 s elapsed at run 4 is under
+        # the budget, 400 s at run 5 is over it
+        walls = self._drive(monkeypatch, [100, 90, 80, 70, 60, 50, 40],
+                            budget=350.0)
+        assert walls == [100, 90, 80, 70, 60]
