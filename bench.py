@@ -11,6 +11,9 @@ Two groups:
     reports rolled-up points/sec, the BASELINE.json metric, plus every
     iteration's wall (`tok_walls`) and phase split (`tok_phases`).
 
+The `host` object records what pairs two runs as a same-host A/B:
+`nproc`, the load average before and after, git HEAD and dirty flag.
+
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, TSTOKEN_BENCH_ROWS,
 TSTOKEN_BENCH_SOURCES, TSTOKEN_BENCH_QUERY_ITERS, TSTOKEN_BENCH_ITERS,
 TSTOKEN_BENCH_MAX_ITERS, TSTOKEN_BENCH_BUDGET_SEC.
@@ -24,7 +27,7 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
-for p in (REPO, os.path.join(REPO, "src")):
+for p in (REPO, os.path.join(REPO, "src"), os.path.join(REPO, "perfbench")):
     if p not in sys.path:
         sys.path.insert(0, p)
 
@@ -40,7 +43,19 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def host_facts(loadavg_before: list[float]) -> dict:
+    """What a same-host A/B needs to pair two records: the CPUs this
+    process may run on, the 1/5/15-minute load before and after the
+    run, and the git revision measured."""
+    from host import git_state, loadavg
+    return {"nproc": len(os.sched_getaffinity(0)),
+            "loadavg_before": loadavg_before, "loadavg_after": loadavg(),
+            **git_state(REPO)}
+
+
 def main() -> dict:
+    from host import loadavg
+    load_before = loadavg()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     bench_rows = int(os.environ.get("TSTOKEN_BENCH_ROWS", "2000000"))
@@ -158,6 +173,7 @@ def main() -> dict:
         "anomaly_flag_f1": f1s,
         "tok_walls": [round(w, 3) for w in walls],
         "tok_phases": [r["phases"] for r in runs],
+        "host": host_facts(load_before),
     }
     spark.stop()
     print(json.dumps(result))

@@ -346,6 +346,14 @@ def _series_detector(method: str, period: int,
             s = np.maximum(np.maximum(lo - x, x - hi), 0.0) / iqr
             return f, s
 
+        def stl_resid():
+            """STL residuals; ValueError (-> iqr_fallback) if degenerate."""
+            resid = stl_fit(x, period=period,
+                            seasonal=period + (period % 2 == 0)).resid
+            if compat._degenerate_decomposition(resid, x):
+                raise ValueError("degenerate decomposition")
+            return resid
+
         method_out = method
         try:
             if method == "iqr":
@@ -354,10 +362,7 @@ def _series_detector(method: str, period: int,
                 flags, score = iqr_fallback()
                 method_out = "iqr_fallback"
             elif method == "stl":
-                resid = stl_fit(x, period=period,
-                                seasonal=period + (period % 2 == 0)).resid
-                if compat._degenerate_decomposition(resid, x):
-                    raise ValueError("degenerate decomposition")
+                resid = stl_resid()
                 _, p = monte_carlo_shapiro_pvalue(resid[~np.isnan(resid)])
                 if p > 0.05:
                     z = np.abs(_zs(resid))
@@ -373,11 +378,7 @@ def _series_detector(method: str, period: int,
                 # z explodes against a tiny robust scale; the plain
                 # z-score stays calibrated. Threshold is the
                 # reference's own (catch.py:1156), not tuned.
-                resid = stl_fit(x, period=period,
-                                seasonal=period + (period % 2 == 0)).resid
-                if compat._degenerate_decomposition(resid, x):
-                    raise ValueError("degenerate decomposition")
-                z = np.abs(_zs(resid))
+                z = np.abs(_zs(stl_resid()))
                 flags, score = z > 2.0, z
             elif method == "stl_mad":
                 # engine-native (no reference counterpart): STL
@@ -386,11 +387,7 @@ def _series_detector(method: str, period: int,
                 # (K6) picks |z|>2 when residuals look normal, which
                 # flags ~2.5% of ANY series; skipping the gate keeps
                 # STL's recall at MAD's precision.
-                resid = stl_fit(x, period=period,
-                                seasonal=period + (period % 2 == 0)).resid
-                if compat._degenerate_decomposition(resid, x):
-                    raise ValueError("degenerate decomposition")
-                s = mad_scores(resid)
+                s = mad_scores(stl_resid())
                 flags, score = s > 3.5, s
             elif method == "mstl":
                 from .stats.mstl import mstl_fit

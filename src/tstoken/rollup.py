@@ -25,13 +25,14 @@ exactly" criterion.
 
 from __future__ import annotations
 
+from typing import Callable, NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .synth import T0_EPOCH
 
 TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
-TIER_ORDER = ["1m", "1h", "1d"]
 # seasonal period per tier for decomposition detectors (SURVEY.md K11:
 # fixed tiers ⇒ static period table — 1m→hourly cycle, 1h→daily, 1d→weekly)
 TIER_PERIOD = {"1m": 60, "1h": 24, "1d": 7}
@@ -40,28 +41,46 @@ TIER_PERIOD = {"1m": 60, "1h": 24, "1d": 7}
 # hourly + daily cycles, 1h daily + weekly, 1d weekly + yearly)
 TIER_MSTL_PERIODS = {"1m": (60, 1440), "1h": (24, 168), "1d": (7, 365)}
 
-ROLLUP_COLUMNS = ["source", "bucket_ts", "n_docs", "sum_n_tok",
-                  "min_n_tok", "max_n_tok", "sum_tok_sq", "gap_filled"]
+
+def _per_doc(c: Column) -> Column:
+    """A doc-level value, read once per doc: on its pos-0 token row."""
+    return F.when(F.col("pos") == 0, c)
 
 
-def src_idx_col(source: Column = None) -> Column:
-    src = source if source is not None else F.col("source")
-    return F.substring(src, 5, 3).cast("int")
+class Measure(NamedTuple):
+    """A tier measure: its 1m aggregate over `token_rows`' rows, and the
+    aggregate ("sum", "min" or "max") a coarser tier merges it with."""
+    name: str
+    agg_1m: Callable[[], Column]
+    merge: str
 
 
-def seq_col(doc_id: Column = None) -> Column:
-    d = doc_id if doc_id is not None else F.col("doc_id")
-    return F.substring_index(d, "-", -1).cast("long")  # last '-' field = seq
-
-
-def step_col(source: Column = None) -> Column:
-    return (F.lit(3) + F.pmod(src_idx_col(source) * F.lit(7), F.lit(43)))
+# Declared once: rollup_1m, rollup_cascade, gap_fill and
+# streaming.streaming_rollup_1m derive their columns and aggregates from
+# MEASURES. F.sum skips the null sentinel tokens; the coalesce covers the
+# all-empty-docs group (a sum over only nulls is null, must be 0) — per
+# group, NOT a per-token branch: the token stream is the hot loop.
+MEASURES = (
+    Measure("n_docs", lambda: F.sum(_per_doc(F.lit(1))), "sum"),
+    Measure("sum_n_tok",
+            lambda: F.sum(_per_doc(F.col("n_tok").cast("long"))), "sum"),
+    Measure("min_n_tok", lambda: F.min(_per_doc(F.col("n_tok"))), "min"),
+    Measure("max_n_tok", lambda: F.max(_per_doc(F.col("n_tok"))), "max"),
+    Measure("sum_tok_sq",
+            lambda: F.coalesce(F.sum(F.col("tok").cast("long") * F.col("tok")),
+                               F.lit(0).cast("long")), "sum"),
+)
+ROLLUP_COLUMNS = ["source", "bucket_ts", *(m.name for m in MEASURES),
+                  "gap_filled"]
 
 
 def with_event_time(raw: DataFrame) -> DataFrame:
-    """Derive event_ts deterministically from (source, doc_id) — SURVEY §1.4."""
-    seq = seq_col()
-    step = step_col()
+    """Derive event_ts deterministically from (source, doc_id) — SURVEY
+    §1.4: T0 + seq * step, where seq is doc_id's last '-' field and step
+    is 3 + (7 × source index) mod 43 seconds."""
+    seq = F.substring_index("doc_id", "-", -1).cast("long")
+    step = F.lit(3) + F.pmod(F.substring("source", 5, 3).cast("int")
+                             * F.lit(7), F.lit(43))
     return raw.withColumn(
         "event_ts",
         F.timestamp_seconds(F.lit(T0_EPOCH) + seq * step.cast("long")))
@@ -71,6 +90,23 @@ def bucket_col(event_ts: Column, tier: str) -> Column:
     secs = TIER_SECONDS[tier]
     epoch = event_ts.cast("long")
     return F.timestamp_seconds((epoch - F.pmod(epoch, F.lit(secs))))
+
+
+def token_rows(df: DataFrame, *keys) -> DataFrame:
+    """`keys`, n_tok, pos, tok: one row per token, the rows every 1m
+    aggregate reads. An empty or null `tokens` array becomes one null
+    sentinel, so the doc still has a pos-0 row and counts toward n_docs
+    (round-1 ADVICE: zero-token docs are plausible in an arbitrary
+    tokens_raw table, though synth always makes n_tok >= 1)."""
+    toks = F.coalesce(F.col("tokens"), F.array().cast("array<int>"))
+    padded = F.when(F.size(toks) == 0,
+                    F.array(F.lit(None).cast("int"))).otherwise(toks)
+    return df.select(*keys, "n_tok", F.posexplode(padded).alias("pos", "tok"))
+
+
+def aggs_1m() -> list[Column]:
+    """The 1m aggregate of every measure over `token_rows`' rows."""
+    return [m.agg_1m().alias(m.name) for m in MEASURES]
 
 
 def rollup_1m(raw: DataFrame, n_salts: int | None = None) -> DataFrame:
@@ -84,12 +120,7 @@ def rollup_1m(raw: DataFrame, n_salts: int | None = None) -> DataFrame:
     allocation-bound and anti-scales beyond ~8 threads in one JVM.
     Doc-level measures (count/sum/min/max of n_tok) piggyback on the
     same single scan via `pos = 0` guards, so the raw table is read
-    exactly once. Empty or null `tokens` arrays are padded with a
-    single null sentinel element before the explode so every doc still
-    contributes a pos-0 row — rollup_1m is the public ingest for
-    arbitrary tokens_raw tables, where zero-token docs are plausible
-    and must count toward n_docs (round-1 ADVICE; the synth generator's
-    `n_tok >= 1` invariant never exercises this).
+    exactly once.
 
     One exchange feeds the (source, bucket_ts) aggregate (map-side
     partial aggregation spreads a hot source before it); a second one
@@ -98,27 +129,11 @@ def rollup_1m(raw: DataFrame, n_salts: int | None = None) -> DataFrame:
     per-source detector windows inherit it instead of shuffling.
     `n_salts` is ignored, kept only so existing callers still run.
     """
-    toks = F.coalesce(F.col("tokens"), F.array().cast("array<int>"))
-    padded = F.when(F.size(toks) == 0,
-                    F.array(F.lit(None).cast("int"))).otherwise(toks)
-    df = (with_event_time(raw)
-          .withColumn("bucket_ts", bucket_col(F.col("event_ts"), "1m"))
-          .select("source", "bucket_ts", "n_tok",
-                  F.posexplode(padded).alias("pos", "tok")))
-    first = F.col("pos") == 0
-    # F.sum skips the null sentinel tokens; coalesce covers the
-    # all-empty-docs group (sum over only-nulls -> null, must be 0).
-    # Per-group coalesce, NOT a per-token branch — the token stream is
-    # the hot loop.
-    return (df.groupBy("source", "bucket_ts")
-            .agg(F.sum(F.when(first, 1)).alias("n_docs"),
-                 F.sum(F.when(first, F.col("n_tok").cast("long")))
-                  .alias("sum_n_tok"),
-                 F.min(F.when(first, F.col("n_tok"))).alias("min_n_tok"),
-                 F.max(F.when(first, F.col("n_tok"))).alias("max_n_tok"),
-                 F.coalesce(
-                     F.sum(F.col("tok").cast("long") * F.col("tok")),
-                     F.lit(0).cast("long")).alias("sum_tok_sq"))
+    # bucket per doc, before the explode: not once per token
+    df = with_event_time(raw).withColumn(
+        "bucket_ts", bucket_col(F.col("event_ts"), "1m"))
+    rows = token_rows(df, "source", "bucket_ts")
+    return (rows.groupBy("source", "bucket_ts").agg(*aggs_1m())
             .withColumn("gap_filled", F.lit(False))
             .select(*ROLLUP_COLUMNS)
             .repartition("source"))
@@ -134,11 +149,8 @@ def rollup_cascade(finer: DataFrame, tier: str) -> DataFrame:
     src = finer.filter(~F.col("gap_filled"))
     return (src
             .groupBy("source", bucket_col(F.col("bucket_ts"), tier).alias("bucket_ts"))
-            .agg(F.sum("n_docs").alias("n_docs"),
-                 F.sum("sum_n_tok").alias("sum_n_tok"),
-                 F.min("min_n_tok").alias("min_n_tok"),
-                 F.max("max_n_tok").alias("max_n_tok"),
-                 F.sum("sum_tok_sq").alias("sum_tok_sq"))
+            .agg(*[getattr(F, m.merge)(m.name).alias(m.name)
+                   for m in MEASURES])
             .withColumn("gap_filled", F.lit(False))
             .select(*ROLLUP_COLUMNS))
 

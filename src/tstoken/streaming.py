@@ -2,8 +2,11 @@
 
 The reference is pure batch (SURVEY.md §2.10); the north rule's
 "continuous aggregates" get a streaming variant here: readStream →
-watermarked tumbling-window aggregation → writeStream. The same bucket/
-aggregate expressions as rollup.py, so batch and streaming tiers agree.
+watermarked tumbling-window aggregation → writeStream. It groups the
+same token rows (`rollup.token_rows`) with the same 1m aggregates
+(`rollup.aggs_1m`, built from the one `rollup.MEASURES` spec) as the
+batch `rollup_1m`, and emits exactly `ROLLUP_COLUMNS`, so the streaming
+and batch 1m tiers agree column for column by construction.
 
 The 1h/1d cascades stay batch-incremental (they re-aggregate closed 1m
 buckets via the checkpoint ledger), which avoids multi-level streaming
@@ -19,7 +22,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, LongType,
                                StringType, StructField, StructType,
                                TimestampType)
 
-from .rollup import with_event_time
+from .rollup import ROLLUP_COLUMNS, aggs_1m, token_rows, with_event_time
 
 
 def streaming_rollup_1m(raw_stream: DataFrame,
@@ -30,24 +33,13 @@ def streaming_rollup_1m(raw_stream: DataFrame,
     re-emit their bucket; MERGE on (source, bucket_ts) downstream keeps
     the tier idempotent (same keys as the batch path).
     """
-    df = with_event_time(raw_stream)
-    df = df.withWatermark("event_ts", watermark)
-    agg = (df.groupBy("source", F.window("event_ts", "1 minute").alias("win"))
-           .agg(F.count(F.lit(1)).alias("n_docs"),
-                F.sum(F.col("n_tok").cast("long")).alias("sum_n_tok"),
-                F.min("n_tok").alias("min_n_tok"),
-                F.max("n_tok").alias("max_n_tok")))
-    return agg.select("source", F.col("win.start").alias("bucket_ts"),
-                      "n_docs", "sum_n_tok", "min_n_tok", "max_n_tok",
-                      F.lit(False).alias("gap_filled"))
-
-
-def run_stream_to_memory(spark, raw_stream: DataFrame, query_name: str,
-                         watermark: str = "10 minutes"):
-    """Test harness: stream → in-memory sink (complete mode)."""
-    agg = streaming_rollup_1m(raw_stream, watermark)
-    return (agg.writeStream.format("memory").queryName(query_name)
-            .outputMode("update").start())
+    df = with_event_time(raw_stream).withWatermark("event_ts", watermark)
+    return (token_rows(df, "source", "event_ts")
+            .groupBy("source", F.window("event_ts", "1 minute").alias("win"))
+            .agg(*aggs_1m())
+            .withColumn("bucket_ts", F.col("win.start"))
+            .withColumn("gap_filled", F.lit(False))
+            .select(*ROLLUP_COLUMNS))
 
 
 # ---------------------------------------- custom stateful operator

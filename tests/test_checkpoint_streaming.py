@@ -15,6 +15,8 @@ from tstoken.tableio import TableIO
 
 ROWS = 8_000
 SOURCES = 3
+MEASURE_NAMES = ["n_docs", "sum_n_tok", "min_n_tok", "max_n_tok",
+                 "sum_tok_sq"]
 
 
 def _erase_1m_ledger(spark, io, source):
@@ -263,11 +265,59 @@ class TestStreaming:
             .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
         q.stop()
 
-        want = rollup_1m(raw).drop("sum_tok_sq", "gap_filled").toPandas() \
+        want = rollup_1m(raw).toPandas() \
             .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
-        got = got.drop(columns=["gap_filled"])
-        for c in ["n_docs", "sum_n_tok", "min_n_tok", "max_n_tok"]:
+        assert len(got) == len(want)
+        for c in MEASURE_NAMES:
             assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
+
+    def test_stream_counts_empty_and_null_token_docs(self, spark, tmp_path):
+        # the batch contract of TestRound2Fixes, applied to streaming:
+        # [] and NULL tokens docs count toward n_docs, and a minute with
+        # only such docs has sum_tok_sq 0, not NULL (src-000 steps 3 s
+        # per seq, so seq 0..2 is minute 0 and seq 20..21 minute 1)
+        from tstoken.rollup import rollup_1m
+        from tstoken.streaming import streaming_rollup_1m
+
+        rows = [("d-0", [3, 4], 2, "src-000"),
+                ("d-1", [], 0, "src-000"),
+                ("d-2", None, 0, "src-000"),
+                ("d-20", [], 0, "src-000"),
+                ("d-21", None, 0, "src-000")]
+        raw = spark.createDataFrame(
+            rows, "doc_id string, tokens array<int>, n_tok int, source string")
+        path = str(tmp_path / "empty_src")
+        raw.write.parquet(path)
+        stream = spark.readStream.schema(raw.schema).parquet(path)
+        q = (streaming_rollup_1m(stream).writeStream.format("memory")
+             .queryName("t1m_empty").outputMode("complete").start())
+        try:
+            q.processAllAvailable()
+            got = spark.sql("select * from t1m_empty").toPandas() \
+                .sort_values("bucket_ts").reset_index(drop=True)
+        finally:
+            q.stop()
+
+        assert got["n_docs"].tolist() == [3, 2]
+        assert got["sum_tok_sq"].tolist() == [9 + 16, 0]
+        want = rollup_1m(raw).toPandas() \
+            .sort_values("bucket_ts").reset_index(drop=True)
+        assert len(got) == len(want)
+        for c in MEASURE_NAMES:
+            assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
+
+    def test_stream_schema_is_the_batch_tier_schema(self, spark, tmp_path):
+        from tstoken.rollup import ROLLUP_COLUMNS, rollup_1m
+        from tstoken.streaming import streaming_rollup_1m
+
+        raw = synth.generate_tokens_raw(spark, 100, n_sources=1)
+        path = str(tmp_path / "schema_src")
+        raw.write.parquet(path)
+        stream = spark.readStream.schema(raw.schema).parquet(path)
+        got = streaming_rollup_1m(stream).schema
+        assert got.fieldNames() == ROLLUP_COLUMNS
+        assert [f.dataType for f in got] == \
+            [f.dataType for f in rollup_1m(raw).schema]
 
     def test_late_data_dropped_and_accounted(self, spark, tmp_path):
         """Out-of-order / late-arrival drill (SURVEY §2.10 watermark
@@ -348,10 +398,10 @@ class TestStreaming:
         # the late rows never arrived
         on_time = spark.createDataFrame(
             batches[0] + [doc(60, 7, "c"), doc(120, 9, "c2")], schema)
-        want = rollup_1m(on_time).drop("sum_tok_sq", "gap_filled") \
-            .toPandas().sort_values("bucket_ts").reset_index(drop=True)
+        want = rollup_1m(on_time).toPandas() \
+            .sort_values("bucket_ts").reset_index(drop=True)
         assert len(got) == 32  # 0..29 + 60 + 120; 240 never finalized
-        for c in ["n_docs", "sum_n_tok", "min_n_tok", "max_n_tok"]:
+        for c in MEASURE_NAMES:
             assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
         # the poisoned minute-5 bucket kept its on-time value
         m5 = got[got["bucket_ts"].astype("int64") // 10**9

@@ -2,7 +2,9 @@
 round-1 lesson was that a lenient local checker hides driver failures,
 so the tooling's own semantics deserve tests. No Spark needed."""
 
+import json
 import os
+import subprocess
 import sys
 import types
 
@@ -12,6 +14,7 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 sys.path.insert(0, os.path.join(REPO, "BENCH"))
+sys.path.insert(0, REPO)  # bench.py
 
 
 class TestOracleCompare:
@@ -184,3 +187,35 @@ class TestSteadyWalls:
         walls = self._drive(monkeypatch, [100, 90, 80, 70, 60, 50, 40],
                             budget=350.0)
         assert walls == [100, 90, 80, 70, 60]
+
+
+class TestBenchHostFacts:
+    """`bench.host_facts`: the record a same-host A/B pairs runs by."""
+
+    def test_outside_a_checkout(self, tmp_path, monkeypatch):
+        import bench
+        monkeypatch.setattr(bench, "REPO", str(tmp_path))
+        facts = bench.host_facts([0.5, 0.25, 0.125])
+        assert facts["nproc"] == len(os.sched_getaffinity(0)) >= 1
+        assert facts["loadavg_before"] == [0.5, 0.25, 0.125]
+        assert len(facts["loadavg_after"]) == 3
+        assert facts["git_head"] is None and facts["git_dirty"] is None
+        assert json.loads(json.dumps(facts)) == facts
+
+    def test_head_and_dirty_flag(self, tmp_path, monkeypatch):
+        import bench
+
+        def git(*args):
+            subprocess.run(["git", "-C", str(tmp_path), "-c", "user.name=t",
+                            "-c", "user.email=t@t", *args],
+                           check=True, capture_output=True)
+        (tmp_path / "f.py").write_text("x = 1\n")
+        git("init", "-q")
+        git("add", "f.py")
+        git("commit", "-qm", "one")
+        monkeypatch.setattr(bench, "REPO", str(tmp_path))
+        clean = bench.host_facts([0.0, 0.0, 0.0])
+        assert len(clean["git_head"]) == 40 and clean["git_dirty"] is False
+        (tmp_path / "f.py").write_text("x = 2\n")
+        dirty = bench.host_facts([0.0, 0.0, 0.0])
+        assert dirty["git_head"] == clean["git_head"] and dirty["git_dirty"]
