@@ -11,9 +11,8 @@ regimes the tuning never saw:
   - denser+stronger anomalies (1/100, x12 / x0.08);
   - heavier source skew (zipf 1.6).
 
-Scoring mirrors bench.py exactly: predictions exclude gap-filled
-buckets; truth is restricted to minutes present in the rolled tier;
-per-(source, minute) set precision/recall. Writes
+Detectors and scoring are bench.py's, shared through
+`tstoken.jobs.pipeline` (`detector_roster`, `f1_scores`). Writes
 BENCH/holdout_f1.json and prints one row per regime.
 
 Run:  python BENCH/holdout_f1.py          (~4-6 min, local[16])
@@ -49,15 +48,11 @@ REGIMES = [
     ("skew1.6(seed6)", {"seed": 6, "zipf_exp": 1.6}),
 ]
 
-DETECTORS = ("iqr", "mad", "stl", "stl_z", "mad_avg", "stl_z_avg",
-             "ensemble", "ensemble_adaptive")
-
 
 def score_regime(spark, kwargs):
-    from pyspark.sql import functions as F
-
-    from tstoken import detect, synth
+    from tstoken import synth
     from tstoken.gapfill import gap_fill
+    from tstoken.jobs.pipeline import detector_roster, f1_scores
     from tstoken.rollup import rollup_1m
 
     gt_kwargs = {k: v for k, v in kwargs.items()
@@ -65,47 +60,10 @@ def score_regime(spark, kwargs):
     raw = synth.generate_tokens_raw(spark, ROWS, n_sources=SOURCES,
                                     **kwargs)
     gf = gap_fill(rollup_1m(raw), "1m").localCheckpoint()
-    gt = (synth.ground_truth(spark, ROWS, n_sources=SOURCES, **gt_kwargs)
-          .select("source", "bucket_ts").distinct()
-          .join(gf.select("source", "bucket_ts"),
-                ["source", "bucket_ts"], "left_semi").cache())
-    n_truth = gt.count()
-    gaps = gf.filter("gap_filled").select("source", "bucket_ts")
-    gfr = gf.withColumn(
-        "avg_n_tok",
-        F.when(F.col("n_docs") > 0,
-               F.col("sum_n_tok").cast("double") / F.col("n_docs"))
-        .otherwise(F.lit(0.0)))
-    flags = {
-        "iqr": detect.iqr_flags(gf),
-        "mad": detect.mad_flags(gf),
-        "stl": detect.grouped_flags(gf, "1m", "stl"),
-        "stl_z": detect.grouped_flags(gf, "1m", "stl_z"),
-        "mad_avg": detect.mad_flags(gfr, value_col="avg_n_tok"),
-        "stl_z_avg": detect.grouped_flags(gfr, "1m", "stl_z",
-                                          value_col="avg_n_tok"),
-        # thresholds FROZEN at the library defaults tuned on seed-0
-        "ensemble": detect.extrema_ensemble_flags(gf),
-        # round-5 OPT-IN variant: density-adaptive dip fence (lower
-        # threshold for sparse sources); the frozen-default column
-        # above is unchanged and must reproduce its round-4 numbers
-        "ensemble_adaptive": detect.extrema_ensemble_flags(
-            gf, adaptive_dip=True),
-    }
-    out = {"n_truth": n_truth}
-    for name in DETECTORS:
-        pred = (flags[name].filter("is_outlier")
-                .select("source", "bucket_ts")
-                .join(gaps, ["source", "bucket_ts"], "left_anti")
-                .distinct().cache())
-        n_pred = pred.count()
-        tp = pred.join(gt, ["source", "bucket_ts"], "left_semi").count()
-        prec = tp / max(n_pred, 1)
-        rec = tp / max(n_truth, 1)
-        out[name] = round(2 * prec * rec / max(prec + rec, 1e-9), 4)
-        pred.unpersist()
-    gt.unpersist()
-    return out
+    truth = synth.ground_truth(spark, ROWS, n_sources=SOURCES,
+                               **gt_kwargs)
+    n_truth, f1 = f1_scores(detector_roster(gf), truth, gf)
+    return {"n_truth": n_truth, **f1}
 
 
 def main():
@@ -121,21 +79,14 @@ def main():
     except OSError:
         commit = "unknown"
     results = {}
-    hdr = f"{'regime':22s} {'truth':>6s} " + " ".join(
-        f"{d:>10s}" for d in DETECTORS)
-    print(hdr)
     for name, kwargs in REGIMES:
         t0 = time.time()
         r = score_regime(spark, kwargs)
         r["wall_sec"] = round(time.time() - t0, 1)
         results[name] = r
-        print(f"{name:22s} {r['n_truth']:6d} "
-              + " ".join(f"{r[d]:10.4f}" for d in DETECTORS)
-              + f"   ({r['wall_sec']}s)")
+        print(f"{name:22s} " + " ".join(f"{k} {v}" for k, v in r.items()))
     held = [results[n]["ensemble"] for n, _ in REGIMES
             if n != "train(seed0)"]
-    held_ad = [results[n]["ensemble_adaptive"] for n, _ in REGIMES
-               if n != "train(seed0)"]
     # thresholds come from the code, not hard-coded prose
     import inspect
     from tstoken.detect import extrema_ensemble_flags
@@ -146,18 +97,11 @@ def main():
         "commit": commit,
         "thresholds": f"FROZEN library defaults (avg {d['avg_threshold']}"
                       f" / spike {d['spike_threshold']} / dip "
-                      f"{d['dip_threshold']}); adaptive column is the "
-                      "OPT-IN adaptive_dip=True variant (dip "
-                      f"{d['adaptive_dip_low']} when median docs/bucket "
-                      f"<= {d['adaptive_dip_max_density']})",
+                      f"{d['dip_threshold']})",
         "regimes": results,
         "ensemble_train": results["train(seed0)"]["ensemble"],
         "ensemble_heldout_min": min(held),
         "ensemble_heldout_max": max(held),
-        "ensemble_adaptive_train":
-            results["train(seed0)"]["ensemble_adaptive"],
-        "ensemble_adaptive_heldout_min": min(held_ad),
-        "ensemble_adaptive_heldout_max": max(held_ad),
     }
     out = os.path.join(REPO, "BENCH", "holdout_f1.json")
     with open(out, "w") as f:

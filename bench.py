@@ -88,10 +88,10 @@ def main() -> dict:
     # token-engine pipeline (the north-rule metric): measured over a
     # STAGED parquet table (the stored-table read path — the 10^12-row
     # production shape), not fused inline generation
-    from pyspark.sql import functions as F
-
-    from tstoken import detect, synth
-    from tstoken.jobs.pipeline import steady_wall, steady_walls, token_pipeline
+    from tstoken import synth
+    from tstoken.jobs.pipeline import (detector_roster, f1_scores,
+                                       steady_wall, steady_walls,
+                                       token_pipeline)
     staged = synth.stage_tokens_raw(spark, bench_rows,
                                     n_sources=bench_sources)
 
@@ -106,56 +106,17 @@ def main() -> dict:
         budget=float(os.environ.get("TSTOKEN_BENCH_BUDGET_SEC", "300")))
     last = runs[-1]
     rolled_points = last["rolled_points"]
-    t1m, gf, iqr_fl, mad_fl = last["t1m"], last["gf"], last["iqr"], last["mad"]
     tok_wall = steady_wall(walls)
     timings["tok_pipeline"] = round(tok_wall, 3)
     timings["tok_pipeline_cold"] = round(walls[0], 3)
     pps = rolled_points / tok_wall
 
     # anomaly-flag F1 vs planted ground truth (the BASELINE.json metric's
-    # second component); truth restricted to minutes present in the tier
-    gt = (synth.ground_truth(spark, bench_rows, n_sources=bench_sources)
-          .select("source", "bucket_ts").distinct()
-          .join(t1m.select("source", "bucket_ts"), ["source", "bucket_ts"],
-                "left_semi").cache())
-    n_truth = gt.count()
-    f1s = {}
-    stl_fl = detect.grouped_flags(gf, "1m", "stl")
-    # gap-filled zero buckets are data-quality signals carried by the
-    # gap_filled column, not statistical anomalies — and the generator
-    # never plants an anomaly on a gapped minute — so they are excluded
-    # from detector predictions (they'd be guaranteed false positives)
-    gaps = gf.filter("gap_filled").select("source", "bucket_ts")
-    stlz_fl = detect.grouped_flags(gf, "1m", "stl_z")
-    # ratio feature: tokens-per-doc cancels doc-arrival (Poisson) noise
-    # on sparse sources; the planted anomalies multiply per-doc token
-    # counts, so avg_n_tok carries the clean signal (engine columns
-    # sum_n_tok/n_docs — no extra scan)
-    gfr = gf.withColumn(
-        "avg_n_tok",
-        F.when(F.col("n_docs") > 0,
-               F.col("sum_n_tok").cast("double") / F.col("n_docs"))
-        .otherwise(F.lit(0.0)))
-    mad_avg_fl = detect.mad_flags(gfr, value_col="avg_n_tok")
-    stlz_avg_fl = detect.grouped_flags(gfr, "1m", "stl_z",
-                                       value_col="avg_n_tok")
-    # round-2 engine-native ensemble: mean-ratio MAD + order-statistic
-    # (detrended log min/max) fences — catches sparse-bucket anomalies
-    # the mean ratio alone misses (detect.extrema_ensemble_flags)
-    ens_fl = detect.extrema_ensemble_flags(gf)
-    for name, fl in (("iqr", iqr_fl), ("mad", mad_fl), ("stl", stl_fl),
-                     ("stl_z", stlz_fl), ("mad_avg", mad_avg_fl),
-                     ("stl_z_avg", stlz_avg_fl), ("ensemble", ens_fl)):
-        pred = (fl.filter("is_outlier").select("source", "bucket_ts")
-                .join(gaps, ["source", "bucket_ts"], "left_anti")
-                .distinct().cache())
-        n_pred = pred.count()
-        tp = pred.join(gt, ["source", "bucket_ts"], "left_semi").count()
-        prec = tp / max(n_pred, 1)
-        rec = tp / max(n_truth, 1)
-        f1s[name] = round(2 * prec * rec / max(prec + rec, 1e-9), 4)
-        pred.unpersist()
-    gt.unpersist()
+    # second component)
+    _, f1s = f1_scores(detector_roster(last["gf"]),
+                       synth.ground_truth(spark, bench_rows,
+                                          n_sources=bench_sources),
+                       last["gf"])
 
     total = round(sum(v for k, v in timings.items()
                       if k != "tok_pipeline_cold"), 3)

@@ -357,6 +357,24 @@ def _degenerate_decomposition(residuals: np.ndarray, x: np.ndarray) -> bool:
     return bool(np.var(clean) <= thresh)
 
 
+def _classic_decomposition(x: np.ndarray, period: int):
+    """(decomposition, model name) of the engine's classic detectors.
+
+    Additive, unless every x is > 0 and the multiplicative residuals'
+    SSACF is no larger than the additive's — the reference's SSACF pick
+    (catch.py:589-691), guarded so a series with a zero or negative
+    point (a gap-filled bucket) never tries the multiplicative model.
+    `decompose_and_detect` and `build_decomposition_results` keep the
+    reference's unguarded pick: they raise on non-positive input.
+    """
+    dec = _seasonal_decompose(x, "additive", period=period)
+    if np.all(x > 0):
+        dec_m = _seasonal_decompose(x, "multiplicative", period=period)
+        if get_ssacf(get_residuals(dec_m)) <= get_ssacf(get_residuals(dec)):
+            return dec_m, "multiplicative"
+    return dec, "additive"
+
+
 def _dispersion_flags(df: pd.DataFrame, residuals: np.ndarray) -> pd.DataFrame:
     """Shapiro-MC gate → z-score or MAD flags (catch.py:1144-1162)."""
     clean = residuals[~np.isnan(residuals)]

@@ -19,10 +19,9 @@ decompress_blocks refuses rows whose codec column is not CODEC: a
 block written under a different wire format would otherwise decode
 silently to garbage (the 64-bit read consumes the old 32-bit field
 plus stream bits with no framing error). Blocks persisted by the
-round-2 "gorilla+dod" (v1) writer are decodable via the explicit
-opt-in `decompress_blocks(..., migrate_v1=True)` or re-encoded in
-bulk by `recompress_v1_blocks` — the default stays a hard refusal so
-a mixed-format table can never half-decode silently.
+round-2 "gorilla+dod" (v1) writer are re-encoded by
+`recompress_v1_blocks` and then decode like any other block; the
+refusal stays so a mixed-format table can never half-decode silently.
 
 Blocks are stored as binary columns per (source, tier, chunk) row:
 (source, chunk, ts_block, val_block, n_points, codec). Encoding runs
@@ -384,13 +383,12 @@ def compress_tier(rollup: DataFrame, value_col: str = "sum_n_tok",
         _encode_group, schema=BLOCK_SCHEMA)
 
 
-def decompress_blocks(blocks: DataFrame, migrate_v1: bool = False) -> DataFrame:
+def decompress_blocks(blocks: DataFrame) -> DataFrame:
     """blocks_<tier> → (source, bucket_ts, value).
 
-    migrate_v1=True additionally accepts round-2 "gorilla+dod" (v1)
-    blocks, routed through decode_timestamps_v1 — an explicit opt-in
-    so the default can never half-decode a mixed-format table. For a
-    one-shot table upgrade use recompress_v1_blocks instead."""
+    Only CODEC blocks decode; round-2 "gorilla+dod" (v1) blocks are
+    refused, so a mixed-format table can never half-decode. Read v1
+    data as decompress_blocks(recompress_v1_blocks(blocks))."""
     from pyspark.sql.types import DoubleType, TimestampType
 
     out_schema = StructType([
@@ -402,16 +400,13 @@ def decompress_blocks(blocks: DataFrame, migrate_v1: bool = False) -> DataFrame:
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         frames = []
         for row in pdf.itertuples(index=False):
-            if row.codec == CODEC:
-                ts = decode_timestamps(row.ts_block)
-            elif migrate_v1 and row.codec == CODEC_V1:
-                ts = decode_timestamps_v1(row.ts_block)
-            else:
+            if row.codec != CODEC:
                 raise ValueError(
                     f"block codec {row.codec!r} != {CODEC!r}: refusing "
                     "to decode a foreign wire format (a gorilla+dod "
-                    "block would mis-decode silently, not error); pass "
-                    "migrate_v1=True to read v1 blocks explicitly")
+                    "block would mis-decode silently, not error); "
+                    "upgrade v1 blocks with recompress_v1_blocks first")
+            ts = decode_timestamps(row.ts_block)
             vals = decode_values(row.val_block)
             frames.append(pd.DataFrame({
                 "source": row.source,

@@ -10,9 +10,14 @@ Two layers (SURVEY.md §7.3):
     detector reads its input once: one shuffle, no join back. The only
     broadcast join left is ma_flags' CV window pick, which aggregates
     a different row set (the test folds).
-  - GROUPED Arrow-UDF detectors (classic/STL/MSTL/ESD): applyInPandas
-    per source, each group being ONE rolled-up series (bounded size:
-    buckets, never raw rows), running the tstoken.compat pipeline.
+  - GROUPED Arrow-UDF detectors (classic/STL/MSTL/ESD and the
+    engine-native STL variants): applyInPandas per source, each group
+    being ONE rolled-up series (bounded size: buckets, never raw rows),
+    running the tstoken.compat pipeline. IQR is native only; a grouped
+    series too short or too flat to decompose falls back to IQR fences
+    scored exactly as iqr_flags scores them, labeled "iqr_fallback".
+    The classic detector picks its additive/multiplicative model with
+    compat._classic_decomposition, as diagnostics.decompose_tier does.
 
 Flag schema (FIXTURES.md A2): (source, bucket_ts, method, is_outlier,
 score). All buckets are emitted with a boolean, not just the hits.
@@ -211,11 +216,7 @@ def ma_flags(rollup: DataFrame, value_col: str = VALUE_COL,
 def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
                            avg_threshold: float = 3.5,
                            spike_threshold: float = 3.5,
-                           dip_threshold: float = 8.0,
-                           adaptive_dip: bool = False,
-                           adaptive_dip_low: float = 7.0,
-                           adaptive_dip_max_density: float = 3.0
-                           ) -> DataFrame:
+                           dip_threshold: float = 8.0) -> DataFrame:
     """Engine-native ensemble over the rollup's order-statistic columns
     (no reference counterpart; SURVEY §2.9 K14 family). Fully native —
     window aggregates + MAD fences, no Python in the data path.
@@ -239,23 +240,6 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
     for the best single detector) — disclosed tuning, same protocol as
     the round-1 engine-native rows. Rolling-mean detrending absorbs
     seasonality; log scale makes x8 spikes and x1/8 dips symmetric.
-
-    `adaptive_dip=True` (OPT-IN; the frozen defaults above are never
-    altered by it being off) lowers the dip threshold to
-    `adaptive_dip_low` for sources whose median docs/bucket is at most
-    `adaptive_dip_max_density`: on sparse sources the bucket max is
-    doc-sampling noisy, so its detrended-log MAD is wide and a weak
-    dip (e.g. x0.2) scores well under the deep fixed fence — the
-    recall loss the round-4 held-out table showed on the rare-weak
-    regime. Dense sources keep the deep threshold (their tight MAD
-    makes even weak dips score high, and the long single-doc low tail
-    the deep fence guards against lives in MID-density sources).
-    Adaptive parameters were grid-tuned on the seed-0 TRAINING regime
-    only (BENCH/adaptive_probe.py: low 7.0 / density 3.0 -> train F1
-    0.8438 vs 0.8387 frozen, recall +3.4pt at precision 0.911; the
-    a-priori low=5.0 flooded false positives, train F1 0.57 — kept in
-    the probe table as the cautionary row); held-out scores in
-    BENCH/holdout_f1.json.
     """
     ng = rollup
     if "gap_filled" in rollup.columns:
@@ -265,29 +249,19 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
     avg_v = F.col("sum_n_tok").cast("double") / F.col("n_docs")
     lmin = F.log(F.col("min_n_tok").cast("double") + 1.0)
     lmax = F.log(F.col("max_n_tok").cast("double") + 1.0)
-    dens_cols = [F.col("n_docs")] if adaptive_dip else []
     feat = (ng.select("source", "bucket_ts", avg_v.alias("avg_n_tok"),
-                      lmin.alias("lmin"), lmax.alias("lmax"), *dens_cols)
+                      lmin.alias("lmin"), lmax.alias("lmax"))
             .withColumn("d_min", F.col("lmin") - F.avg("lmin").over(w))
             .withColumn("d_max", F.col("lmax") - F.avg("lmax").over(w)))
 
-    # All three MAD fences (and med_docs) share one two-select window
-    # pass over feat, on the partitioning feat's rolling window already
-    # has. Fence math is identical to mad_flags.
-    if adaptive_dip:
-        feat = feat.withColumn("med_docs", F.percentile(
-            F.col("n_docs").cast("double"), F.lit(0.5))
-            .over(Window.partitionBy("source")))
+    # All three MAD fences share one two-select window pass over feat,
+    # on the partitioning feat's rolling window already has. Fence math
+    # is identical to mad_flags.
     j = _mad_fences(feat, {"a": "avg_n_tok", "s": "d_min", "d": "d_max"})
 
     s_a, s_s, s_d = _mad_score("a"), _mad_score("s"), _mad_score("d")
-    dip_fence = F.lit(dip_threshold)
-    if adaptive_dip:
-        dip_fence = F.when(
-            F.col("med_docs") <= adaptive_dip_max_density,
-            F.lit(adaptive_dip_low)).otherwise(F.lit(dip_threshold))
     flag = (s_a > avg_threshold) | (s_s > spike_threshold) \
-        | ((s_d > dip_fence) & (F.col("d_max") < 0))
+        | ((s_d > dip_threshold) & (F.col("d_max") < 0))
     score = F.greatest(s_a, s_s, s_d)
     out = _flags_select(j, "extrema_ensemble", flag, score)
     if "gap_filled" in rollup.columns:
@@ -303,8 +277,7 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
 
 # ------------------------------------------- grouped Arrow-UDF detectors
 
-GROUPED_METHODS = ("iqr", "stl", "stl_z", "stl_mad", "mstl", "classic",
-                   "esd")
+GROUPED_METHODS = ("stl", "stl_z", "stl_mad", "mstl", "classic", "esd")
 
 
 def _series_detector(method: str, period: int,
@@ -339,12 +312,14 @@ def _series_detector(method: str, period: int,
         score = np.zeros(n, dtype=np.float64)
 
         def iqr_fallback():
+            """iqr_flags' fences and scores: the distance outside a
+            fence in IQRs (the fences span 4 IQRs), or the distance
+            itself when the IQR is 0."""
             from .stats.dispersion import iqr_fences
             lo, hi = iqr_fences(x)
-            f = (x < lo) | (x > hi)
-            iqr = (hi - lo) / 3.0 if hi > lo else 1.0
-            s = np.maximum(np.maximum(lo - x, x - hi), 0.0) / iqr
-            return f, s
+            iqr = (hi - lo) / 4.0
+            dist = np.maximum(np.maximum(lo - x, x - hi), 0.0)
+            return (x < lo) | (x > hi), dist / iqr if iqr > 0 else dist
 
         def stl_resid():
             """STL residuals; ValueError (-> iqr_fallback) if degenerate."""
@@ -356,9 +331,7 @@ def _series_detector(method: str, period: int,
 
         method_out = method
         try:
-            if method == "iqr":
-                flags, score = iqr_fallback()
-            elif n < 2 * period + 1:
+            if n < 2 * period + 1:
                 flags, score = iqr_fallback()
                 method_out = "iqr_fallback"
             elif method == "stl":
@@ -399,16 +372,7 @@ def _series_detector(method: str, period: int,
                 s = mad_scores(resid)
                 flags, score = s > 3.5, s
             elif method == "classic":
-                from .stats.decompose import seasonal_decompose
-                dec_a = seasonal_decompose(x, "additive", period=period)
-                if np.all(x > 0):
-                    dec_m = seasonal_decompose(x, "multiplicative", period=period)
-                    ra = compat.get_residuals(dec_a)
-                    rm = compat.get_residuals(dec_m)
-                    dec = dec_a if compat.get_ssacf(ra) < compat.get_ssacf(rm) \
-                        else dec_m
-                else:
-                    dec = dec_a
+                dec, _ = compat._classic_decomposition(x, period)
                 s = mad_scores(dec.resid)
                 flags, score = s > 3.5, s
             elif method == "esd":

@@ -90,7 +90,6 @@ def decompose_tier(rollup: DataFrame, tier: str,
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         from . import compat
-        from .stats.decompose import seasonal_decompose
 
         pdf = pdf.sort_values("bucket_ts").reset_index(drop=True)
         x = pdf["value"].to_numpy(dtype=np.float64)
@@ -101,14 +100,7 @@ def decompose_tier(rollup: DataFrame, tier: str,
                 "source": pdf["source"], "bucket_ts": pdf["bucket_ts"],
                 "observed": x, "seasonal": nan, "trend": nan,
                 "resid": nan, "model": "too_short"})
-        dec_a = seasonal_decompose(x, "additive", period=period)
-        model = "additive"
-        dec = dec_a
-        if np.all(x > 0):
-            dec_m = seasonal_decompose(x, "multiplicative", period=period)
-            if compat.get_ssacf(compat.get_residuals(dec_a)) \
-                    >= compat.get_ssacf(compat.get_residuals(dec_m)):
-                dec, model = dec_m, "multiplicative"
+        dec, model = compat._classic_decomposition(x, period)
         return pd.DataFrame({
             "source": pdf["source"], "bucket_ts": pdf["bucket_ts"],
             "observed": dec.observed, "seasonal": dec.seasonal,

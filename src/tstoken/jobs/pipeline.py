@@ -4,7 +4,9 @@ The pipeline is staged parquet -> `rollup_1m` -> 1h/1d cascades ->
 `gap_fill` -> fused IQR+MAD flags. `bench.py`, `BENCH/scaling.py` and
 `BENCH/cold_profile.py` all time it through `token_pipeline`, and
 `steady_walls` is the one rule for when repeated runs have reached a
-steady state.
+steady state. `detector_roster` and `f1_scores` are the one set of
+scored detectors and the one F1 scorer that `bench.py` and
+`BENCH/holdout_f1.py` report.
 
 Fresh-process campaign, prints one JSON line:
 
@@ -17,7 +19,7 @@ import json
 import sys
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import detect, gapfill, rollup
@@ -36,8 +38,8 @@ def token_pipeline(spark: SparkSession, staged: str,
     unpersisted first, since Spark's CacheManager substitutes cached
     data into canonically-equal new plans and would turn this run into
     a cache read. Returns the rolled-point count (1m + 1h + 1d rows),
-    per-phase walls in seconds and the still-persisted 1m tier `t1m`,
-    gap-filled tier `gf` and flag frames `iqr`/`mad`.
+    per-phase walls in seconds, the still-persisted 1m tier `t1m` and
+    the gap-filled tier `gf` built on it.
     """
     if prev is not None:
         prev["t1m"].unpersist(blocking=True)
@@ -65,7 +67,63 @@ def token_pipeline(spark: SparkSession, staged: str,
               "gapfill_flags": t3 - t2, "total": t3 - t0}
     return {"rolled_points": n_1m + n_1h + n_1d,
             "phases": {k: round(v, 3) for k, v in phases.items()},
-            "t1m": t1m, "gf": gf, "iqr": iqr, "mad": mad}
+            "t1m": t1m, "gf": gf}
+
+
+def detector_roster(gf: DataFrame) -> dict[str, DataFrame]:
+    """The scored detectors by name, over the gap-filled 1m tier `gf`.
+
+    IQR and MAD fences and grouped STL / STL-z on `sum_n_tok`; MAD and
+    STL-z on tokens per document (`avg_n_tok`, 0 on empty buckets): the
+    planted anomalies scale per-document token counts, and the ratio
+    cancels the doc-arrival noise of sparse sources; and the extrema
+    ensemble over the order-statistic columns.
+    """
+    avg = gf.withColumn(
+        "avg_n_tok",
+        F.when(F.col("n_docs") > 0,
+               F.col("sum_n_tok").cast("double") / F.col("n_docs"))
+        .otherwise(F.lit(0.0)))
+    return {
+        "iqr": detect.iqr_flags(gf),
+        "mad": detect.mad_flags(gf),
+        "stl": detect.grouped_flags(gf, "1m", "stl"),
+        "stl_z": detect.grouped_flags(gf, "1m", "stl_z"),
+        "mad_avg": detect.mad_flags(avg, value_col="avg_n_tok"),
+        "stl_z_avg": detect.grouped_flags(avg, "1m", "stl_z",
+                                          value_col="avg_n_tok"),
+        "ensemble": detect.extrema_ensemble_flags(gf),
+    }
+
+
+def f1_scores(flags: dict[str, DataFrame], truth: DataFrame,
+              gf: DataFrame) -> tuple[int, dict[str, float]]:
+    """Set F1 of each flag frame's outlier (source, bucket_ts) keys
+    against the planted `truth` keys, on the gap-filled tier `gf`.
+
+    Gap-filled buckets are dropped from the predictions: a zero bucket
+    is a data-quality signal carried by `gap_filled`, and the generator
+    never plants an anomaly on a gapped minute, so it could only be a
+    false positive. Truth is restricted to the tier's observed minutes.
+    Returns the truth count and {name: F1 rounded to 4 dp}.
+    """
+    key = ["source", "bucket_ts"]
+    gaps = gf.filter(F.col("gap_filled")).select(*key)
+    gt = (truth.select(*key).distinct()
+          .join(gf.filter(~F.col("gap_filled")).select(*key), key,
+                "left_semi").cache())
+    n_truth = gt.count()
+    f1 = {}
+    for name, fl in flags.items():
+        pred = (fl.filter("is_outlier").select(*key)
+                .join(gaps, key, "left_anti").distinct().cache())
+        n_pred = pred.count()
+        tp = pred.join(gt, key, "left_semi").count()
+        prec, rec = tp / max(n_pred, 1), tp / max(n_truth, 1)
+        f1[name] = round(2 * prec * rec / max(prec + rec, 1e-9), 4)
+        pred.unpersist()
+    gt.unpersist()
+    return n_truth, f1
 
 
 def steady_walls(run, min_iters: int, max_iters: int,

@@ -42,8 +42,7 @@ def get_spark(app_name: str = "tstoken", master: str | None = None,
         # local[32] on the 6M-row staging table). 32 MB keeps every
         # stage >= 3-4 task waves per 32 cores; on a 1000-executor
         # cluster the same reasoning holds per-executor-core.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("TSTOKEN_MAX_PARTITION_BYTES", "33554432"))
+        .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -175,6 +175,35 @@ class TestTokenPipeline:
         assert second["rolled_points"] == first["rolled_points"]
         second["t1m"].unpersist()
 
+    def test_f1_scores_drops_gaps_and_unseen_truth(self, spark):
+        from tstoken.jobs.pipeline import f1_scores
+
+        def ts(m):
+            return datetime(2024, 1, 1) + timedelta(minutes=m)
+
+        # tier: minutes 0-9, minutes 3 and 4 gap-filled
+        gf = spark.createDataFrame(
+            [("s", ts(m), m in (3, 4)) for m in range(10)],
+            "source string, bucket_ts timestamp, gap_filled boolean")
+        # truth on minutes 1, 2 (observed), 3 (gap-filled), 20 (not in
+        # the tier): only 1 and 2 count
+        truth = spark.createDataFrame(
+            [("s", ts(m)) for m in (1, 2, 3, 20)],
+            "source string, bucket_ts timestamp")
+
+        def flags(hits):
+            return spark.createDataFrame(
+                [("s", ts(m), m in hits) for m in range(10)],
+                "source string, bucket_ts timestamp, is_outlier boolean")
+
+        n_truth, f1 = f1_scores(
+            # gap hits 3 and 4 are dropped: predictions {1, 5, 6, 7},
+            # precision 1/4, recall 1/2
+            {"mixed": flags({1, 3, 4, 5, 6, 7}), "none": flags(set()),
+             "exact": flags({1, 2, 3})}, truth, gf)
+        assert n_truth == 2
+        assert f1 == {"mixed": round(1 / 3, 4), "none": 0.0, "exact": 1.0}
+
 
 class TestGapFill:
     def test_dense_axis(self, t1m):
@@ -488,16 +517,15 @@ class TestCompressSpark:
         return (spark.createDataFrame([row], schema=compress.BLOCK_SCHEMA),
                 ts, vals)
 
-    def test_v1_migrate_flag_decodes_legacy_blocks(self, spark):
-        import numpy as np
+    def test_v1_blocks_decode_after_recompress(self, spark):
         import pytest
         from tstoken import compress
         v1, ts, vals = self._v1_blocks(spark)
-        # default path still refuses — migration is opt-in only
-        with pytest.raises(Exception, match="migrate_v1"):
+        # v1 blocks are refused until recompress_v1_blocks upgrades them
+        with pytest.raises(Exception, match="recompress_v1_blocks"):
             compress.decompress_blocks(v1).count()
-        dec = compress.decompress_blocks(v1, migrate_v1=True).toPandas() \
-            .sort_values("bucket_ts").reset_index(drop=True)
+        dec = compress.decompress_blocks(compress.recompress_v1_blocks(v1)) \
+            .toPandas().sort_values("bucket_ts").reset_index(drop=True)
         got_ts = (pd.to_datetime(dec["bucket_ts"]).astype("int64")
                   // 10 ** 9).to_numpy()
         assert (got_ts == ts).all()
@@ -623,13 +651,28 @@ class TestRound2Fixes:
         fl = detect.grouped_flags(df, "1m", "mstl").toPandas()
         assert set(fl["method"]) == {"iqr_fallback"}
 
-    def test_explicit_iqr_is_not_labeled_fallback(self, const_series):
-        fl = detect.grouped_flags(const_series, "1m", "iqr").toPandas()
-        assert set(fl["method"]) == {"iqr"}
+    def test_short_series_fallback_scores_like_iqr_flags(self, spark):
+        # fewer than 2 * 60 + 1 points: every grouped method falls back
+        # to IQR fences, and scores a point as iqr_flags does
+        rows = [("src-000", datetime(2024, 1, 1) + timedelta(minutes=i),
+                 float(i % 7 + (40 if i in (5, 30) else 0)))
+                for i in range(50)]
+        df = spark.createDataFrame(
+            rows, "source string, bucket_ts timestamp, sum_n_tok double")
+        key = ["source", "bucket_ts"]
+        fb = detect.grouped_flags(df, "1m", "stl").toPandas()
+        want = detect.iqr_flags(df).toPandas()
+        m = fb.merge(want, on=key, suffixes=("", "_iqr"))
+        assert len(m) == 50 and set(m["method"]) == {"iqr_fallback"}
+        assert (m["is_outlier"] == m["is_outlier_iqr"]).all()
+        assert m["is_outlier"].sum() == 2
+        assert np.allclose(m["score"], m["score_iqr"], rtol=1e-12, atol=0)
 
     def test_unknown_method_raises_at_build_time(self, const_series):
-        with pytest.raises(ValueError, match="unknown method"):
-            detect.grouped_flags(const_series, "1m", "nope")
+        # "iqr" included: IQR is the native iqr_flags only
+        for method in ("nope", "iqr"):
+            with pytest.raises(ValueError, match="unknown method"):
+                detect.grouped_flags(const_series, "1m", method)
 
     def test_extrema_ensemble_catches_sparse_dip_and_spike(self, spark):
         # one source, stable per-doc token level ~1000, one spiked

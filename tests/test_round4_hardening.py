@@ -189,7 +189,8 @@ class TestV1TagAmbiguityGuard:
         # mis-framing surfaces as either a block overrun or a
         # monotonicity violation — both carry the not-v1-framed message
         with pytest.raises(Exception, match="not v1-framed"):
-            compress.decompress_blocks(df, migrate_v1=True).count()
+            compress.decompress_blocks(
+                compress.recompress_v1_blocks(df)).count()
         with pytest.raises(Exception, match="not v1-framed"):
             compress.recompress_v1_blocks(df).count()
 

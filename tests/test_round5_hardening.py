@@ -1,6 +1,6 @@
 """Round-5 hardening: late/out-of-order streaming drill, decoder
 allocation bounds, v1 whole-block-consumption guard, golden NaN/null
-distinction, adaptive dip-threshold contract."""
+distinction, skew-stress rollup exactness."""
 
 import math
 
@@ -207,49 +207,3 @@ class TestSkewStress:
         # the hot source really is hot: >=60 docs in its busiest minute
         hotmax = got[got["source"] == "src-000"]["n_docs"].max()
         assert hotmax >= 60
-
-
-class TestAdaptiveDip:
-    def test_default_path_bit_identical(self, spark):
-        """adaptive_dip=False (the default) must produce exactly the
-        frozen-default flags — the opt-in can never move them."""
-        from tstoken.detect import extrema_ensemble_flags
-        from tstoken.rollup import rollup_1m
-
-        t1m = rollup_1m(
-            synth.generate_tokens_raw(spark, 20_000, n_sources=3))
-        t1m = t1m.localCheckpoint()
-        base = extrema_ensemble_flags(t1m).toPandas() \
-            .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
-        again = extrema_ensemble_flags(t1m, adaptive_dip=False) \
-            .toPandas().sort_values(["source", "bucket_ts"]) \
-            .reset_index(drop=True)
-        assert (base["is_outlier"].to_numpy()
-                == again["is_outlier"].to_numpy()).all()
-        assert np.allclose(base["score"].to_numpy(),
-                           again["score"].to_numpy(), equal_nan=True)
-
-    def test_adaptive_only_loosens_sparse_sources(self, spark):
-        """The adaptive fence can only ADD dip flags (threshold only
-        ever drops), and only on sources whose median docs/bucket is
-        at most the density cutoff."""
-        from tstoken.detect import extrema_ensemble_flags
-        from tstoken.rollup import rollup_1m
-
-        # zipf 1.6 makes the tail sources sparse (few docs per minute)
-        t1m = rollup_1m(synth.generate_tokens_raw(
-            spark, 20_000, n_sources=6, zipf_exp=1.6)).localCheckpoint()
-        base = extrema_ensemble_flags(t1m).toPandas()
-        adap = extrema_ensemble_flags(t1m, adaptive_dip=True).toPandas()
-        key = ["source", "bucket_ts"]
-        m = base.merge(adap, on=key, suffixes=("_b", "_a"))
-        assert len(m) == len(base) == len(adap)
-        # never un-flags
-        assert not (m["is_outlier_b"] & ~m["is_outlier_a"]).any()
-        new = m[~m["is_outlier_b"] & m["is_outlier_a"]]
-        if len(new):
-            dens = (t1m.groupBy("source")
-                    .agg(F.percentile(F.col("n_docs").cast("double"),
-                                      F.lit(0.5)).alias("med_docs"))
-                    .toPandas().set_index("source")["med_docs"])
-            assert (dens.loc[new["source"]].to_numpy() <= 3.0).all()

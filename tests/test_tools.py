@@ -141,6 +141,23 @@ class TestScalingVerdicts:
         assert out["normalized_pass_8_to_32"] is True
         assert out["pass_8_to_32"] is True
 
+    def test_pair_above_host_cpus_has_no_verdict(self):
+        from scaling import recompute_verdicts
+        s = self._summary({1: 100.0, 2: 130.0, 4: 30.0, 8: 40.0},
+                          [{"1": 1000, "2": 1900, "4": 3600}])
+        s["host_cpus"] = 4
+        out = recompute_verdicts(s)
+        # pairs come from the run's levels: 1 -> 4 and 2 -> 8
+        assert out["hw_ceiling_1_to_4"] == 0.9          # 3600/1000/4
+        assert out["scaling_efficiency_1_to_4"] == round(100 / 120, 3)
+        assert out["normalized_pass_1_to_4"] is True
+        # local[8] exceeds the host's 4 CPUs: raw efficiency only
+        assert out["scaling_efficiency_2_to_8"] == round(130 / 160, 3)
+        assert not [k for k in out if k.endswith("_2_to_8")
+                    and not k.startswith("scaling_efficiency")]
+        assert out["cpu_calibration_units"] == {"1": 1000, "2": 1900,
+                                                "4": 3600}
+
 
 class TestSteadyWalls:
     """`steady_walls` driven by scripted walls on a fake clock."""
