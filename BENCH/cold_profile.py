@@ -34,7 +34,6 @@ for p in (REPO, os.path.join(REPO, "src")):
         sys.path.insert(0, p)
 
 ROWS = int(os.environ.get("TSTOKEN_BENCH_ROWS", "2000000"))
-SOURCES = int(os.environ.get("TSTOKEN_BENCH_SOURCES", "16"))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 ITERS = 3
 
@@ -43,13 +42,13 @@ def run_mode(mode: str) -> dict:
     from pyspark.sql import functions as F
 
     from tstoken import synth
-    from tstoken.jobs.pipeline import token_pipeline
+    from tstoken.jobs.pipeline import CAMPAIGN_SOURCES, token_pipeline
     from tstoken.session import get_spark
 
     spark = get_spark(f"tstoken-coldprof-{mode}", master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
-    staged = synth.stage_tokens_raw(spark, ROWS, n_sources=SOURCES)
+    staged = synth.stage_tokens_raw(spark, ROWS, n_sources=CAMPAIGN_SOURCES)
 
     if mode == "warmed":
         # unrelated plan shape: range -> wide agg -> shuffle -> collect

@@ -15,8 +15,8 @@ Detectors and scoring are bench.py's, shared through
 `tstoken.jobs.pipeline` (`detector_roster`, `f1_scores`). Writes
 BENCH/holdout_f1.json and prints one row per regime.
 
-Run:  python BENCH/holdout_f1.py          (~4-6 min, local[16])
-Env:  TSTOKEN_HOLDOUT_ROWS (default 500000), TSTOKEN_HOLDOUT_CPUS (16)
+Run:  python BENCH/holdout_f1.py   (500k rows at local[N], N = the CPUs
+      this process may use; ~4-6 min at N = 16. F1 does not depend on N.)
 """
 
 import json
@@ -30,9 +30,10 @@ for p in (REPO, os.path.join(REPO, "src")):
     if p not in sys.path:
         sys.path.insert(0, p)
 
-ROWS = int(os.environ.get("TSTOKEN_HOLDOUT_ROWS", "500000"))
-CPUS = int(os.environ.get("TSTOKEN_HOLDOUT_CPUS", "16"))
-SOURCES = 16  # bench geometry
+from tstoken.jobs.pipeline import CAMPAIGN_SOURCES as SOURCES  # noqa: E402
+
+ROWS = 500_000
+CPUS = len(os.sched_getaffinity(0))
 
 # (name, generator/ground-truth kwargs) — seed 0 row is the TRAINING
 # regime, reported for reference; every other row is held-out

@@ -6,7 +6,8 @@ Two groups:
     __spark_entry__ — forced with a noop sink (full computation, no
     driver collect);
   - the token-engine pipeline (`tstoken.jobs.pipeline.token_pipeline`)
-    at TSTOKEN_BENCH_ROWS synthetic rows (default 2M): staged parquet
+    at TSTOKEN_BENCH_ROWS synthetic rows (default 2M) over
+    `CAMPAIGN_SOURCES` sources: staged parquet
     → 1m rollup → 1h → 1d cascades → gap-fill → IQR + MAD flags;
     reports rolled-up points/sec, the BASELINE.json metric, plus every
     iteration's wall (`tok_walls`) and phase split (`tok_phases`).
@@ -14,9 +15,9 @@ Two groups:
 The `host` object records what pairs two runs as a same-host A/B:
 `nproc`, the load average before and after, git HEAD and dirty flag.
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, TSTOKEN_BENCH_ROWS,
-TSTOKEN_BENCH_SOURCES, TSTOKEN_BENCH_QUERY_ITERS, TSTOKEN_BENCH_ITERS,
-TSTOKEN_BENCH_MAX_ITERS, TSTOKEN_BENCH_BUDGET_SEC.
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, TSTOKEN_BENCH_ROWS.
+Each headline query runs QUERY_ITERS times; the pipeline runs at least
+MIN_ITERS and at most MAX_ITERS times within BUDGET_SEC seconds.
 """
 
 from __future__ import annotations
@@ -30,6 +31,9 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 for p in (REPO, os.path.join(REPO, "src"), os.path.join(REPO, "perfbench")):
     if p not in sys.path:
         sys.path.insert(0, p)
+
+QUERY_ITERS = 2
+MIN_ITERS, MAX_ITERS, BUDGET_SEC = 4, 10, 300.0
 
 HEADLINE = [
     "ev_rollup_1m", "ev_rollup_1h", "ev_gapfill_1h", "ev_iqr_flags_1h",
@@ -59,7 +63,6 @@ def main() -> dict:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     bench_rows = int(os.environ.get("TSTOKEN_BENCH_ROWS", "2000000"))
-    bench_sources = int(os.environ.get("TSTOKEN_BENCH_SOURCES", "16"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     import __spark_entry__ as entrymod
@@ -76,10 +79,9 @@ def main() -> dict:
     # ev_optimal_window vanished on re-measure); each run rebuilds its
     # plan from a fresh spark.read, so nothing is reused but the JIT
     # profile and OS page cache — which IS steady state
-    q_iters = int(os.environ.get("TSTOKEN_BENCH_QUERY_ITERS", "2"))
     for name in HEADLINE:
         best = float("inf")
-        for _ in range(q_iters):
+        for _ in range(QUERY_ITERS):
             t0 = time.time()
             force(queries[name](spark, sf_dir))
             best = min(best, time.time() - t0)
@@ -89,21 +91,19 @@ def main() -> dict:
     # STAGED parquet table (the stored-table read path — the 10^12-row
     # production shape), not fused inline generation
     from tstoken import synth
-    from tstoken.jobs.pipeline import (detector_roster, f1_scores,
-                                       steady_wall, steady_walls,
-                                       token_pipeline)
+    from tstoken.jobs.pipeline import (CAMPAIGN_SOURCES, detector_roster,
+                                       f1_scores, steady_wall,
+                                       steady_walls, token_pipeline)
     staged = synth.stage_tokens_raw(spark, bench_rows,
-                                    n_sources=bench_sources)
+                                    n_sources=CAMPAIGN_SOURCES)
 
     # adaptive iteration count (round-2 lesson: 3 iterations in a
     # contended window recorded 30.8 s where the pooled quiet-window
-    # min was 15.6 s): at least TSTOKEN_BENCH_ITERS, then the
-    # steady_walls plateau rule, capped by count and a wall-clock budget
+    # min was 15.6 s): at least MIN_ITERS, then the steady_walls
+    # plateau rule, capped by count and a wall-clock budget
     walls, runs = steady_walls(
         lambda prev: token_pipeline(spark, staged, prev),
-        min_iters=int(os.environ.get("TSTOKEN_BENCH_ITERS", "4")),
-        max_iters=int(os.environ.get("TSTOKEN_BENCH_MAX_ITERS", "10")),
-        budget=float(os.environ.get("TSTOKEN_BENCH_BUDGET_SEC", "300")))
+        min_iters=MIN_ITERS, max_iters=MAX_ITERS, budget=BUDGET_SEC)
     last = runs[-1]
     rolled_points = last["rolled_points"]
     tok_wall = steady_wall(walls)
@@ -115,7 +115,7 @@ def main() -> dict:
     # second component)
     _, f1s = f1_scores(detector_roster(last["gf"]),
                        synth.ground_truth(spark, bench_rows,
-                                          n_sources=bench_sources),
+                                          n_sources=CAMPAIGN_SOURCES),
                        last["gf"])
 
     total = round(sum(v for k, v in timings.items()

@@ -60,42 +60,44 @@ def _records(out) -> list[dict[str, Any]]:
     return out.reset_index().to_dict(orient="records")
 
 
-def find_outliers(data: list[list], columns: list[str]) -> dict:
+def _endpoint(fn):
+    """One error mapping for every endpoint: `fn(df)` runs on the
+    request frame; an ApiError (a 400: bad date column, no outliers,
+    unexpected output) passes through, any other failure becomes a 500
+    with the exception text."""
+
+    def handler(data: list[list], columns: list[str]) -> dict:
+        try:
+            return fn(_frame(data, columns))
+        except ApiError:
+            raise
+        except Exception as e:
+            raise ApiError(500, str(e))
+
+    handler.__name__, handler.__doc__ = fn.__name__, fn.__doc__
+    return handler
+
+
+@_endpoint
+def find_outliers(df: pd.DataFrame) -> dict:
     """POST /find_outliers (`api_catch.py:27-53`): IQR fence rows."""
-    try:
-        df = _frame(data, columns)
-        return {"outliers": _records(compat.find_outliers_iqr(df))}
-    except ApiError:
-        raise
-    except Exception as e:
-        raise ApiError(500, str(e))
+    return {"outliers": _records(compat.find_outliers_iqr(df))}
 
 
-def detect_outliers_stl(data: list[list], columns: list[str]) -> dict:
+@_endpoint
+def detect_outliers_stl(df: pd.DataFrame) -> dict:
     """POST /detect_outliers_stl (`api_catch.py:56-89`)."""
-    try:
-        df = _frame(data, columns)
-        out = compat.detect_outliers_stl(df)
-    except ApiError:
-        raise
-    except Exception as e:
-        raise ApiError(500, str(e))
+    out = compat.detect_outliers_stl(df)
     if isinstance(out, pd.DataFrame):
         return {"outliers": _records(out)}
     raise ApiError(400, "No outliers detected or an error occurred.")
 
 
-def detect_outliers_today_classic(data: list[list],
-                                  columns: list[str]) -> dict:
+@_endpoint
+def detect_outliers_today_classic(df: pd.DataFrame) -> dict:
     """POST /detect_outliers_today_classic (`api_catch.py:92-117`);
     the 'No Outliers Today!' sentinel becomes a message record."""
-    try:
-        df = _frame(data, columns)
-        out = compat.detect_outliers_today_classic(df)
-    except ApiError:
-        raise
-    except Exception as e:
-        raise ApiError(500, str(e))
+    out = compat.detect_outliers_today_classic(df)
     if isinstance(out, pd.DataFrame):
         return {"outliers": _records(out)}
     if isinstance(out, str):
@@ -103,33 +105,23 @@ def detect_outliers_today_classic(data: list[list],
     raise ApiError(400, "Unexpected output from the function.")
 
 
-def decomposition_results(data: list[list], columns: list[str]) -> dict:
+@_endpoint
+def decomposition_results(df: pd.DataFrame) -> dict:
     """Data half of the seasonal-plot endpoints
     (`api_diagnostics.py:67-89` minus the PNG): the 4-column
     decomposition frame, or a message when the series is too short."""
-    try:
-        df = _frame(data, columns)
-        out = compat.build_decomposition_results(df)
-    except ApiError:
-        raise
-    except Exception as e:
-        raise ApiError(500, str(e))
+    out = compat.build_decomposition_results(df)
     if out is None:
         return {"outliers": [{"message": "series too short to decompose"}]}
     return {"outliers": _records(out)}
 
 
-def monthwise_stats(data: list[list], columns: list[str]) -> dict:
+@_endpoint
+def monthwise_stats(df: pd.DataFrame) -> dict:
     """Data half of build_monthwise_plot as an endpoint."""
-    try:
-        df = _frame(data, columns)
-        out = compat.build_monthwise_stats(df)
-        out["Month-Year"] = out["Month-Year"].astype(str)
-        return {"outliers": _records(out)}
-    except ApiError:
-        raise
-    except Exception as e:
-        raise ApiError(500, str(e))
+    out = compat.build_monthwise_stats(df)
+    out["Month-Year"] = out["Month-Year"].astype(str)
+    return {"outliers": _records(out)}
 
 
 @functools.lru_cache(maxsize=1)
@@ -159,20 +151,14 @@ def _plot_endpoint(builder):
     figure with 200, matching the reference's observed behavior (see
     _blank_figure_b64)."""
 
-    def handler(data: list[list], columns: list[str]) -> dict:
-        try:
-            df = _frame(data, columns)
-            uri = builder(df)
-            if uri is None:
-                return {"plot_image": _blank_figure_b64()}
-            return {"plot_image": uri.split(",", 1)[1]}
-        except ApiError:
-            raise
-        except Exception as e:
-            raise ApiError(500, str(e))
+    def plot(df: pd.DataFrame) -> dict:
+        uri = builder(df)
+        if uri is None:
+            return {"plot_image": _blank_figure_b64()}
+        return {"plot_image": uri.split(",", 1)[1]}
 
-    handler.__name__ = builder.__name__
-    return handler
+    plot.__name__ = builder.__name__
+    return _endpoint(plot)
 
 
 def _plot_handlers() -> dict:

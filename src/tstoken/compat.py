@@ -16,6 +16,13 @@ Deliberate deviations from the reference (documented per SURVEY.md §7.4):
     the reset-index frames the engine feeds it;
   - "today"/"latest" functions accept an injectable `now` for testability
     (reference uses wall-clock pd.Timestamp.now(), catch.py:423).
+
+Each reference decision is written once here: the freq/length gates
+(`_gate`), the SSACF model pick (`_reference_decomposition`, guarded in
+`_classic_decomposition`), the STL/MSTL model pick
+(`_decomposition_outliers`) and the MC-Shapiro gate (`dispersion_flags`).
+The grouped Spark detectors call `_classic_decomposition` and
+`dispersion_flags`; `tstoken.plots` calls the gates and model picks.
 """
 
 from __future__ import annotations
@@ -28,7 +35,8 @@ import pandas as pd
 from .stats.acf import ssacf as _ssacf
 from .stats.boxcox import boxcox as _boxcox, inv_boxcox as _inv_boxcox
 from .stats.decompose import seasonal_decompose as _seasonal_decompose
-from .stats.dispersion import iqr_fences, mad_labels, zscore as _zscore
+from .stats.dispersion import (MAD_THRESHOLD, iqr_fences, mad_labels,
+                               mad_scores, zscore as _zscore)
 from .stats.esd import generalized_esd as _gesd, seasonal_esd as _sesd
 from .stats.mstl import mstl_fit
 from .stats.normality import monte_carlo_shapiro_pvalue, shapiro
@@ -90,6 +98,28 @@ def _freq_base(freq: str | None) -> str | None:
 def _is_weekly(freq: str | None) -> bool:
     """Intent of the reference's sloppy regex r'[W-Za-z]' (catch.py:549)."""
     return freq is not None and _freq_base(freq).startswith("W")
+
+
+def _date_indexed(df: pd.DataFrame) -> pd.DataFrame:
+    """The frame itself if its index holds dates, else indexed by its
+    first column parsed as dates (the column stays), NaN rows dropped."""
+    if isinstance(df.index, pd.DatetimeIndex):
+        return df
+    return df.set_index(pd.to_datetime(df.iloc[:, 0])).dropna()
+
+
+def _gate(table, freq: str | None, n: int):
+    """The reference's freq/length dispatch (catch.py:488-586, 1190-1324,
+    1508-1591): the period of the first (freq code, min length, period)
+    row with the freq's code and min length <= n, else 52 for a weekly
+    series of 104+ points, else None."""
+    base = _freq_base(freq)
+    for code, min_len, period in table:
+        if base == code and n >= min_len:
+            return period
+    if _is_weekly(freq) and n >= 104:
+        return 52
+    return None
 
 
 # ---------------------------------------------------------------- kernels
@@ -160,6 +190,36 @@ def get_ssacf(residuals: np.ndarray, type: str = "") -> float:  # noqa: A002
 
 # ------------------------------------------------------- classic pipeline
 
+def _reference_decomposition(x: np.ndarray, period: int):
+    """(decomposition, model name) by the reference's SSACF pick
+    (catch.py:589-691, diagnostics.py:147-190): additive when its
+    residual SSACF is strictly smaller, else multiplicative. Unguarded
+    like the reference: a non-positive x raises."""
+    dec_add = _seasonal_decompose(x, "additive", period=period)
+    dec_mul = _seasonal_decompose(x, "multiplicative", period=period)
+    if get_ssacf(get_residuals(dec_add)) < get_ssacf(get_residuals(dec_mul)):
+        return dec_add, "additive"
+    return dec_mul, "multiplicative"
+
+
+def _classic_decomposition(x: np.ndarray, period: int):
+    """(decomposition, model name) of the engine's classic detectors.
+
+    Additive, unless every x is > 0 and the multiplicative residuals'
+    SSACF is no larger than the additive's — the reference's SSACF pick
+    (catch.py:589-691), guarded so a series with a zero or negative
+    point (a gap-filled bucket) never tries the multiplicative model.
+    The compat surface keeps the reference's unguarded pick
+    (`_reference_decomposition`); a NaN SSACF picks differently here.
+    """
+    dec = _seasonal_decompose(x, "additive", period=period)
+    if np.all(x > 0):
+        dec_m = _seasonal_decompose(x, "multiplicative", period=period)
+        if get_ssacf(get_residuals(dec_m)) <= get_ssacf(get_residuals(dec)):
+            return dec_m, "multiplicative"
+    return dec, "additive"
+
+
 def decompose_and_detect(df_pandas: pd.DataFrame,
                          sentinel: bool = True) -> Union[pd.DataFrame, str]:
     """Additive+multiplicative classical decomposition, SSACF pick, MAD
@@ -176,16 +236,9 @@ def decompose_and_detect(df_pandas: pd.DataFrame,
     period = _FREQ_PERIOD.get(_freq_base(freq) or "", None)
     if period is None:
         period = _FREQ_PERIOD["W"] if _is_weekly(freq) else 7
-    x = series.to_numpy(dtype=np.float64)
-    dec_add = _seasonal_decompose(x, "additive", period=period)
-    dec_mul = _seasonal_decompose(x, "multiplicative", period=period)
-    resid_add = get_residuals(dec_add)
-    resid_mul = get_residuals(dec_mul)
-    if get_ssacf(resid_add) < get_ssacf(resid_mul):
-        is_outlier = anomaly_mad(dec_add.resid)
-    else:
-        is_outlier = anomaly_mad(dec_mul.resid)
-    df_outliers = df_pandas[is_outlier]
+    dec, _ = _reference_decomposition(series.to_numpy(dtype=np.float64),
+                                      period)
+    df_outliers = df_pandas[anomaly_mad(dec.resid)]
     if df_outliers.empty and sentinel:
         return NO_OUTLIERS
     return df_outliers
@@ -203,6 +256,11 @@ def detect_outliers_iqr(df: pd.DataFrame,
     return out
 
 
+# the classic dispatch only asks whether a gate is met
+_CLASSIC_GATES = (("D", 730, True), ("B", 520, True), ("MS", 24, True),
+                  ("Q", 8, True))
+
+
 def detect_outliers_classic(df: pd.DataFrame,
                             sentinel: bool = True) -> Union[pd.DataFrame, str]:
     """Dispatch per (inferred freq, length) gates (catch.py:488-586)."""
@@ -210,16 +268,8 @@ def detect_outliers_classic(df: pd.DataFrame,
     df_pandas = check_and_convert_date(df_pandas)
     if not df_pandas.index.is_unique:
         raise DataValidationError("DataFrame contains duplicate date index values")
-    freq = df_pandas.index.inferred_freq
-    n = len(df_pandas.index)
-    base = _freq_base(freq)
-    seasonal_route = (
-        (base == "D" and n >= 730) or
-        (base == "B" and n >= 520) or
-        (base == "MS" and n >= 24) or
-        (base == "Q" and n >= 8) or
-        (_is_weekly(freq) and n >= 104))
-    if seasonal_route:
+    if _gate(_CLASSIC_GATES, df_pandas.index.inferred_freq,
+             len(df_pandas.index)):
         return decompose_and_detect(df_pandas, sentinel=sentinel)
     return detect_outliers_iqr(df_pandas, sentinel=sentinel)
 
@@ -300,32 +350,10 @@ _STL_GATES = (("H", 17520, 24), ("D", 730, 365), ("B", 520, 365),
 
 def detect_ts_frequency(df: pd.DataFrame) -> int | None:
     """Freq code + length gates → seasonal period (catch.py:1508-1591)."""
-    df_pandas = _validate(df)
-    df_ts = df_pandas.copy()
-    if not isinstance(df_ts.index, pd.DatetimeIndex):
-        df_ts = df_ts.set_index(pd.to_datetime(df_ts.iloc[:, 0])).dropna()
+    df_ts = _date_indexed(_validate(df))
     if not df_ts.index.is_unique:
         return None
-    freq = df_ts.index.inferred_freq
-    n = len(df_ts.index)
-    base = _freq_base(freq)
-    for code, min_len, period in _STL_GATES:
-        if base == code and n >= min_len:
-            return period
-    if _is_weekly(freq) and n >= 104:
-        return 52
-    return None
-
-
-def _stl_residuals(series: pd.Series, model: str, seasonal: int,
-                   period: int) -> np.ndarray:
-    """STL residuals, multiplicative via Box-Cox (catch.py:1099-1141)."""
-    x = series.to_numpy(dtype=np.float64)
-    if model == "multiplicative":
-        transformed, lmbda = _boxcox(x)
-        resid = stl_fit(transformed, period=period, seasonal=seasonal).resid
-        return _inv_boxcox(resid, lmbda)
-    return stl_fit(x, period=period, seasonal=seasonal).resid
+    return _gate(_STL_GATES, df_ts.index.inferred_freq, len(df_ts.index))
 
 
 def _degenerate_decomposition(residuals: np.ndarray, x: np.ndarray) -> bool:
@@ -357,62 +385,57 @@ def _degenerate_decomposition(residuals: np.ndarray, x: np.ndarray) -> bool:
     return bool(np.var(clean) <= thresh)
 
 
-def _classic_decomposition(x: np.ndarray, period: int):
-    """(decomposition, model name) of the engine's classic detectors.
-
-    Additive, unless every x is > 0 and the multiplicative residuals'
-    SSACF is no larger than the additive's — the reference's SSACF pick
-    (catch.py:589-691), guarded so a series with a zero or negative
-    point (a gap-filled bucket) never tries the multiplicative model.
-    `decompose_and_detect` and `build_decomposition_results` keep the
-    reference's unguarded pick: they raise on non-positive input.
-    """
-    dec = _seasonal_decompose(x, "additive", period=period)
-    if np.all(x > 0):
-        dec_m = _seasonal_decompose(x, "multiplicative", period=period)
-        if get_ssacf(get_residuals(dec_m)) <= get_ssacf(get_residuals(dec)):
-            return dec_m, "multiplicative"
-    return dec, "additive"
-
-
-def _dispersion_flags(df: pd.DataFrame, residuals: np.ndarray) -> pd.DataFrame:
-    """Shapiro-MC gate → z-score or MAD flags (catch.py:1144-1162)."""
-    clean = residuals[~np.isnan(residuals)]
-    _, p_value = monte_carlo_shapiro_pvalue(clean)
+def dispersion_flags(residuals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(flags, scores) of the reference's dispersion gate
+    (catch.py:1144-1162): when the MC-Shapiro p-value of the non-NaN
+    residuals is > 0.05, |z| with flags |z| > 2; otherwise the MAD
+    modified z with flags > 3.5."""
+    _, p_value = monte_carlo_shapiro_pvalue(residuals[~np.isnan(residuals)])
     if p_value > 0.05:
-        z = _zscore(residuals)
-        return df[np.abs(z) > 2]
-    return df[mad_labels(residuals)]
+        z = np.abs(_zscore(residuals))
+        return z > 2.0, z
+    s = mad_scores(residuals)
+    return s > MAD_THRESHOLD, s
+
+
+def _decomposition_outliers(df: pd.DataFrame, fit) -> pd.DataFrame:
+    """The STL/MSTL "extended" body (catch.py:1057-1165, 1284-1388).
+    `fit(y)` returns one model's residuals; it runs once on the Box-Cox
+    transformed last column and once on the raw one. The residual
+    variance picks the model, whose residuals the dispersion gate flags
+    (IQR fences when the decomposition absorbed the series)."""
+    x = df.iloc[:, -1].to_numpy(dtype=np.float64)
+    transformed, lmbda = _boxcox(x)
+    resid_mul = fit(transformed)
+    resid_add = fit(x)
+    # NB reference quirk (catch.py:1084-1090, 1308-1316): despite the
+    # "lower variance" comment, the code selects multiplicative when
+    # its residual variance is GREATER — reproduced faithfully.
+    if np.var(resid_mul) > np.var(resid_add):
+        residuals = _inv_boxcox(resid_mul, lmbda)
+    else:
+        residuals = resid_add
+    if _degenerate_decomposition(residuals, x):
+        out = find_outliers_iqr(df)
+    else:
+        out = df[dispersion_flags(residuals)[0]]
+    return out.iloc[:, :2].reset_index(drop=True)
 
 
 def detect_outliers_stl_extended(df_stl: pd.DataFrame, period: int) -> pd.DataFrame:
-    """Model pick by residual variance + flags (catch.py:1057-1165)."""
+    """STL model pick + flags (catch.py:1057-1165)."""
     seasonal = period + ((period % 2) == 0)  # force odd
-    x = df_stl.iloc[:, -1].to_numpy(dtype=np.float64)
-    transformed, _l = _boxcox(x.astype(np.float64))
-    resid_mul = stl_fit(transformed, period=period, seasonal=seasonal).resid
-    resid_add = stl_fit(x, period=period, seasonal=seasonal).resid
-    # NB reference quirk (catch.py:1084-1090): despite the "lower
-    # variance" comment, the code selects multiplicative when its
-    # residual variance is GREATER — reproduced faithfully.
-    model = "multiplicative" if np.var(resid_mul) > np.var(resid_add) else "additive"
-    residuals = _stl_residuals(df_stl.iloc[:, -1], model, seasonal, period)
-    if _degenerate_decomposition(residuals, x):
-        out = find_outliers_iqr(df_stl)
-    else:
-        out = _dispersion_flags(df_stl, residuals)
-    return out.iloc[:, :2].reset_index(drop=True)
+    return _decomposition_outliers(
+        df_stl, lambda y: stl_fit(y, period=period, seasonal=seasonal).resid)
 
 
 def detect_outliers_stl(df: pd.DataFrame, sentinel: bool = True):
     """STL detector with dispatch (catch.py:950-1054)."""
     df_pandas = _validate(df)
-    df_stl = df_pandas.copy()
-    if not isinstance(df_stl.index, pd.DatetimeIndex):
-        df_stl = df_stl.set_index(pd.to_datetime(df_stl.iloc[:, 0])).dropna()
+    df_stl = _date_indexed(df_pandas)
     if not df_stl.index.is_unique:
         raise DataValidationError("Duplicate date index values")
-    period = detect_ts_frequency(df_pandas)
+    period = _gate(_STL_GATES, df_stl.index.inferred_freq, len(df_stl.index))
     if period is None or period < 2:
         return detect_outliers_iqr(df_pandas, sentinel=sentinel)
     return detect_outliers_stl_extended(df_stl, period)
@@ -420,49 +443,33 @@ def detect_outliers_stl(df: pd.DataFrame, sentinel: bool = True):
 
 # ---------------------------------------------------------- MSTL pipeline
 
-_MSTL_PERIODS = {"H": (24, 168), "D": (7, 365), "B": (5, 365),
-                 "MS": 12, "M": 12, "Q": (4, 12), "A": 1}
-_MSTL_GATES = {"H": 17520, "D": 730, "B": 520, "MS": 24, "M": 24,
-               "Q": 8, "A": 2}
+_MSTL_GATES = (("H", 17520, (24, 168)), ("D", 730, (7, 365)),
+               ("B", 520, (5, 365)), ("MS", 24, 12), ("M", 24, 12),
+               ("Q", 8, (4, 12)), ("A", 2, 1))
+
+
+def mstl_periods(freq: str | None, n: int):
+    """MSTL seasonal period(s) of an inferred freq at length n, or None
+    under the gates (catch.py:1190-1324, diagnostics.py:908-998)."""
+    return _gate(_MSTL_GATES, freq, n)
 
 
 def detect_outliers_mstl(df: pd.DataFrame, sentinel: bool = True):
     """MSTL detector with dispatch (catch.py:1190-1324)."""
     df_pandas = _validate(df)
-    df_mstl = df_pandas.copy()
-    if not isinstance(df_mstl.index, pd.DatetimeIndex):
-        df_mstl = df_mstl.set_index(pd.to_datetime(df_mstl.iloc[:, 0])).dropna()
+    df_mstl = _date_indexed(df_pandas)
     if not df_mstl.index.is_unique:
         raise DataValidationError("Duplicate date index values")
-    freq = df_mstl.index.inferred_freq
-    n = len(df_mstl.index)
-    base = _freq_base(freq)
-    periods = None
-    if base in _MSTL_PERIODS and n >= _MSTL_GATES[base]:
-        periods = _MSTL_PERIODS[base]
-    elif _is_weekly(freq) and n >= 104:
-        periods = 52
+    periods = mstl_periods(df_mstl.index.inferred_freq, len(df_mstl.index))
     if periods is None:
         return detect_outliers_iqr(df_pandas, sentinel=sentinel)
     return detect_outliers_mstl_extended(df_mstl, periods)
 
 
 def detect_outliers_mstl_extended(df: pd.DataFrame, periods) -> pd.DataFrame:
-    """(catch.py:1284-1388)."""
-    x = df.iloc[:, -1].to_numpy(dtype=np.float64)
-    transformed, lmbda = _boxcox(x)
-    resid_mul = mstl_fit(transformed, periods=periods).resid
-    resid_add = mstl_fit(x, periods=periods).resid
-    # same reference quirk as STL (catch.py:1308-1316)
-    if np.var(resid_mul) > np.var(resid_add):
-        residuals = _inv_boxcox(mstl_fit(transformed, periods=periods).resid, lmbda)
-    else:
-        residuals = mstl_fit(x, periods=periods).resid
-    if _degenerate_decomposition(residuals, x):
-        out = find_outliers_iqr(df)
-    else:
-        out = _dispersion_flags(df, residuals)
-    return out.iloc[:, :2].reset_index(drop=True)
+    """MSTL model pick + flags (catch.py:1284-1388)."""
+    return _decomposition_outliers(
+        df, lambda y: mstl_fit(y, periods=periods).resid)
 
 
 # ----------------------------------------------------------- ESD pipeline
@@ -613,13 +620,8 @@ def build_decomposition_results(df: pd.DataFrame) -> pd.DataFrame | None:
     df_pandas = df_pandas.set_index(df_pandas.columns[0]).asfreq("D").dropna()
     if len(df_pandas.index) // 365.25 < 2.0:
         return None
-    x = df_pandas.iloc[:, -1].to_numpy(dtype=np.float64)
-    dec_add = _seasonal_decompose(x, "additive", period=7)
-    dec_mul = _seasonal_decompose(x, "multiplicative", period=7)
-    if get_ssacf(get_residuals(dec_add)) < get_ssacf(get_residuals(dec_mul)):
-        chosen = dec_add
-    else:
-        chosen = dec_mul
+    chosen, _ = _reference_decomposition(
+        df_pandas.iloc[:, -1].to_numpy(dtype=np.float64), 7)
     return pd.DataFrame(
         {"seasonal": chosen.seasonal, "trend": chosen.trend,
          "residuals": chosen.resid, "actual_values": chosen.observed},

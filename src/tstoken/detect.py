@@ -277,7 +277,7 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
 
 # ------------------------------------------- grouped Arrow-UDF detectors
 
-GROUPED_METHODS = ("stl", "stl_z", "stl_mad", "mstl", "classic", "esd")
+GROUPED_METHODS = ("stl", "stl_z", "mstl", "classic", "esd")
 
 
 def _series_detector(method: str, period: int,
@@ -301,7 +301,6 @@ def _series_detector(method: str, period: int,
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         from . import compat
         from .stats.dispersion import mad_scores, zscore as _zs
-        from .stats.normality import monte_carlo_shapiro_pvalue
         from .stats.stl import stl_fit
 
         pdf = pdf.sort_values("bucket_ts").reset_index(drop=True)
@@ -335,33 +334,18 @@ def _series_detector(method: str, period: int,
                 flags, score = iqr_fallback()
                 method_out = "iqr_fallback"
             elif method == "stl":
-                resid = stl_resid()
-                _, p = monte_carlo_shapiro_pvalue(resid[~np.isnan(resid)])
-                if p > 0.05:
-                    z = np.abs(_zs(resid))
-                    flags, score = z > 2.0, z
-                else:
-                    s = mad_scores(resid)
-                    flags, score = s > 3.5, s
+                flags, score = compat.dispersion_flags(stl_resid())
             elif method == "stl_z":
                 # engine-native: STL residuals + fixed |z| > 2 (the
-                # reference's normal-residuals branch, K6, applied
-                # unconditionally). On heavy-tailed residuals the
-                # MC-Shapiro gate always routes to MAD whose modified
-                # z explodes against a tiny robust scale; the plain
-                # z-score stays calibrated. Threshold is the
-                # reference's own (catch.py:1156), not tuned.
+                # reference's z branch, K6, applied unconditionally;
+                # threshold catch.py:1156, not tuned). The MC-Shapiro
+                # gate takes that branch when its p > 0.05, and a LOW
+                # Shapiro W (heavy tails) gives p near 1, so "stl"
+                # equals "stl_z" whenever p > 0.05. They differ only
+                # on residuals that look normal (high W, p <= 0.05),
+                # which the gate sends to MAD.
                 z = np.abs(_zs(stl_resid()))
                 flags, score = z > 2.0, z
-            elif method == "stl_mad":
-                # engine-native (no reference counterpart): STL
-                # residuals scored with the robust MAD fence
-                # unconditionally. The reference's dispersion gate
-                # (K6) picks |z|>2 when residuals look normal, which
-                # flags ~2.5% of ANY series; skipping the gate keeps
-                # STL's recall at MAD's precision.
-                s = mad_scores(stl_resid())
-                flags, score = s > 3.5, s
             elif method == "mstl":
                 from .stats.mstl import mstl_fit
                 periods = mstl_periods or (period,)

@@ -20,8 +20,12 @@ Unlike the reference (which returns live pyplot state), every builder
 returns a base64 PNG data-URI string — the transport its own web/API
 layer converts figures to anyway — so results are serializable and
 testable. Detection semantics are NOT reimplemented here: each builder
-calls the same tstoken.compat detector the headless path uses, so a
-plot can never disagree with the API's flags.
+calls the same tstoken.compat detector or decision the headless path
+uses (period gates, SSACF model pick, STL/MSTL/ESD flags), so a plot
+can never disagree with the API's flags. Outlier frames go to
+`_line_with_outliers` as the detector returns them: markers sit at the
+frame's DatetimeIndex, or at its first column's dates otherwise, so the
+STL/MSTL/ESD detectors are called on a (date, value) frame.
 
 Plots are driver-side over bounded frames (rollup tiers, month stats);
 the 100 TB path stays in the Spark modules.
@@ -55,13 +59,13 @@ def _prep(df) -> pd.DataFrame:
     first column parsed to a DatetimeIndex, last column numeric."""
     if not isinstance(df, pd.DataFrame):
         df = df.toPandas()
-    out = df.copy()
-    if not isinstance(out.index, pd.DatetimeIndex):
-        out = out.set_index(pd.to_datetime(out.iloc[:, 0])).dropna()
-        if out.shape[1] > 1:
-            out = out.iloc[:, 1:]
-    out.iloc[:, -1] = pd.to_numeric(out.iloc[:, -1])
-    return out
+    ts = df.copy()
+    if not isinstance(ts.index, pd.DatetimeIndex):
+        ts = ts.set_index(pd.to_datetime(ts.iloc[:, 0])).dropna()
+        if ts.shape[1] > 1:
+            ts = ts.iloc[:, 1:]
+    ts.iloc[:, -1] = pd.to_numeric(ts.iloc[:, -1])
+    return ts
 
 
 def _xdays(index: pd.DatetimeIndex) -> np.ndarray:
@@ -201,14 +205,6 @@ def build_monthwise_plot(df) -> str:
 
 # --------------------------------------------- classical decomposition
 
-def _detected_period(df_ts: pd.DataFrame) -> int | None:
-    """The reference's freq/length gate table (diagnostics.py:99-141)
-    — the SAME table the headless detectors use
-    (compat.detect_ts_frequency / _STL_GATES), not a private copy, so
-    a gate tweak can never desynchronize plots from API flags."""
-    return compat.detect_ts_frequency(df_ts)
-
-
 def build_seasonal_plot_classic(df) -> str | None:
     """Frequency-gated classical seasonal plot (diagnostics.py:58-144).
     Returns None when no period is detectable, mirroring the
@@ -217,7 +213,7 @@ def build_seasonal_plot_classic(df) -> str | None:
     if not df_ts.index.is_unique:
         raise compat.DataValidationError(
             "Duplicate date index values. Check your data.")
-    period = _detected_period(df_ts)
+    period = compat.detect_ts_frequency(df_ts)
     if period is None:
         return None
     return generate_seasonal_plot_classic(df_ts, period)
@@ -228,21 +224,13 @@ def generate_seasonal_plot_classic(df, detected_period) -> str:
     4-panel plot titled with the chosen model (diagnostics.py:147-190
     + the plot_seasonal layout at :31)."""
     df_ts = _prep(df)
-    x = df_ts.iloc[:, -1].to_numpy(dtype=np.float64)
-    dec_add = compat._seasonal_decompose(x, "additive",
-                                         period=detected_period)
-    dec_mul = compat._seasonal_decompose(x, "multiplicative",
-                                         period=detected_period)
-    if compat.get_ssacf(compat.get_residuals(dec_add)) < \
-            compat.get_ssacf(compat.get_residuals(dec_mul)):
-        chosen, title = dec_add, "Additive"
-    else:
-        chosen, title = dec_mul, "Multiplicative"
+    chosen, model = compat._reference_decomposition(
+        df_ts.iloc[:, -1].to_numpy(dtype=np.float64), detected_period)
     return _component_panels(
         df_ts.index,
         [("Observed", chosen.observed), ("Trend", chosen.trend),
          ("Seasonal", chosen.seasonal), ("Residual", chosen.resid)],
-        title)
+        model.capitalize())
 
 
 # ----------------------------------------------------- outlier plots
@@ -279,7 +267,7 @@ def build_outliers_plot_stl(df) -> str:
     if not df_ts.index.is_unique:
         raise compat.DataValidationError(
             "Duplicate date index values. Check your data.")
-    period = _detected_period(df_ts)
+    period = compat.detect_ts_frequency(df_ts)
     if period is None:
         return build_iqr_plot(df_ts.reset_index())
     return generate_outlier_plot_stl(df_ts, period)
@@ -289,9 +277,8 @@ def generate_outlier_plot_stl(df, detected_period) -> str:
     """diagnostics.py:597-644: STL flags (variance model pick, same
     compat kernel as detect_outliers_stl) as red markers."""
     df_ts = _prep(df)
-    out = compat.detect_outliers_stl_extended(df_ts, detected_period)
-    out = out.set_index(pd.to_datetime(out.iloc[:, 0])) \
-        if not out.empty else out
+    out = compat.detect_outliers_stl_extended(
+        df_ts.iloc[:, [-1]].reset_index(), detected_period)
     return _line_with_outliers(df_ts, out, "STL Outliers")
 
 
@@ -299,7 +286,7 @@ def build_seasonal_plot_stl(df) -> str | None:
     """STL seasonal panels with the period gate
     (diagnostics.py:647-726); None when no period is detectable."""
     df_ts = _prep(df)
-    period = _detected_period(df_ts)
+    period = compat.detect_ts_frequency(df_ts)
     if period is None:
         return None
     return generate_seasonal_plot_stl(df_ts, period)
@@ -325,19 +312,14 @@ def build_outliers_plot_mstl(df) -> str:
     df_ts = _prep(df)
     out = compat.detect_outliers_mstl(df_ts.reset_index(),
                                       sentinel=False)
-    if isinstance(out, str):
-        out = pd.DataFrame()
-    elif not out.empty:
-        out = out.set_index(pd.to_datetime(out.iloc[:, 0]))
     return _line_with_outliers(df_ts, out, "MSTL Outliers")
 
 
 def generate_outlier_plot_mstl(df, derived_period) -> str:
     """diagnostics.py:861-905: MSTL flags at an explicit period set."""
     df_ts = _prep(df)
-    out = compat.detect_outliers_mstl_extended(df_ts, derived_period)
-    if not out.empty:
-        out = out.set_index(pd.to_datetime(out.iloc[:, 0]))
+    out = compat.detect_outliers_mstl_extended(
+        df_ts.iloc[:, [-1]].reset_index(), derived_period)
     return _line_with_outliers(df_ts, out, "MSTL Outliers")
 
 
@@ -345,15 +327,9 @@ def build_seasonal_plot_mstl(df) -> str | None:
     """MSTL seasonal panels (diagnostics.py:908-998): one panel per
     seasonal component."""
     df_ts = _prep(df)
-    freq = df_ts.index.inferred_freq
-    base = compat._freq_base(freq)
-    periods = compat._MSTL_PERIODS.get(base or "")
-    gate = compat._MSTL_GATES.get(base or "")
-    if periods is None or gate is None or len(df_ts) < gate:
-        if compat._is_weekly(freq) and len(df_ts) >= 104:
-            periods = 52
-        else:
-            return None
+    periods = compat.mstl_periods(df_ts.index.inferred_freq, len(df_ts))
+    if periods is None:
+        return None
     return generate_seasonal_plot_mstl(df_ts, periods)
 
 
@@ -377,8 +353,4 @@ def build_outliers_plot_esd(df) -> str:
     df_ts = _prep(df)
     out = compat.detect_outliers_esd(df_ts.reset_index(),
                                      sentinel=False)
-    if isinstance(out, str):
-        out = pd.DataFrame()
-    elif not out.empty:
-        out = out.set_index(pd.to_datetime(out.iloc[:, 0]))
     return _line_with_outliers(df_ts, out, "ESD Outliers")

@@ -323,12 +323,6 @@ def _lsh_sig_col(vec_col: str, dim: int, n_planes: int = 16,
     return sig
 
 
-def lsh_signature(df: DataFrame, vec_col: str, dim: int,
-                  n_planes: int = 16, seed: int = 42) -> DataFrame:
-    return df.withColumn("lsh_sig",
-                         _lsh_sig_col(vec_col, dim, n_planes, seed))
-
-
 def _multi_table_sigs(df: DataFrame, vec_col: str, id_cols: list[str],
                       dim: int, n_planes: int, n_tables: int,
                       seed0: int = 42) -> DataFrame:

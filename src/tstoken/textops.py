@@ -7,7 +7,7 @@ native). Designed so the simple operators have exact DuckDB oracles
 hash-based ones (minhash/simhash) are Spark-native-only.
 
 Operators:
-  - token_count / bpe_token_count     whitespace + BPE-ish regex counting
+  - token_count                       whitespace + BPE-ish regex counting
   - quality_score                     length/punct/stopword ratio scoring
   - detect_language                   stopword-hit n-gram heuristic
   - fingerprint                       md5 + Karp-Rabin rolling hash

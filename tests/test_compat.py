@@ -298,6 +298,35 @@ class TestDetectOutliersMSTL:
         assert 1000.0 in out.iloc[:, -1].values
 
 
+class TestOneFitPerModel:
+    """The STL/MSTL detectors fit the Box-Cox and the raw series once
+    each and flag the residuals of the model they pick, without
+    refitting it."""
+
+    @pytest.mark.parametrize("detector, fit", [
+        ("detect_outliers_stl", "stl_fit"),
+        ("detect_outliers_mstl", "mstl_fit")])
+    def test_two_fits_per_call(self, monkeypatch, detector, fit):
+        rng = np.random.default_rng(7)
+        n = 800
+        y = 100 + 10 * np.sin(2 * np.pi * np.arange(n) / 7) \
+            + rng.normal(0, 2, n)
+        y[n // 2] += 80
+        df = pd.DataFrame({
+            "dt": pd.date_range("2021-01-01", periods=n, freq="D"),
+            "cnt": y})
+        real, calls = getattr(compat, fit), []
+
+        def counted(*args, **kwargs):
+            calls.append(1)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(compat, fit, counted)
+        out = getattr(compat, detector)(df)
+        assert isinstance(out, pd.DataFrame) and not out.empty
+        assert len(calls) == 2
+
+
 class TestDetectOutliersESD:
     def test_normal_with_spikes(self):
         np.random.seed(42)

@@ -593,11 +593,6 @@ class TestEngineDetectorVariants:
         rec = len(truth & flagged) / max(len(truth), 1)
         assert rec >= 0.6, rec
 
-    def test_stl_mad_runs_and_flags_subset_shape(self, spark, gf):
-        fl = detect.grouped_flags(gf, "1m", "stl_mad").toPandas()
-        assert len(fl) == gf.count()
-        assert fl["is_outlier"].dtype == bool
-
     def test_stationarity_check_runs_per_source(self, spark, t1m):
         st = detect.stationarity_check(t1m).toPandas()
         assert len(st) == SOURCES

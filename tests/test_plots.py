@@ -17,8 +17,8 @@ import pytest
 
 from tstoken import plots
 from tstoken.compat import DataValidationError
-from tstoken.plotting import (Canvas, fmt_num, nice_ticks, png_decode_size,
-                              png_encode, to_base64_png)
+from tstoken.plotting import (RED, Axes, Canvas, fmt_num, nice_ticks,
+                              png_decode_size, png_encode, to_base64_png)
 
 
 def _png_bytes(data_uri: str) -> bytes:
@@ -68,6 +68,21 @@ class TestPngEncoder:
         assert fmt_num(0) == "0"
         assert fmt_num(1234567) == "1.2e+06"
         assert fmt_num(3.5) == "3.5"
+
+
+def _red_pixels(data_uri: str) -> int:
+    """Count of pixels in the plots' RED."""
+    raw = _png_bytes(data_uri)
+    w, h = png_decode_size(raw)
+    i, idat = 8, b""
+    while i < len(raw):
+        ln = struct.unpack(">I", raw[i:i + 4])[0]
+        if raw[i + 4:i + 8] == b"IDAT":
+            idat += raw[i + 8:i + 8 + ln]
+        i += 12 + ln
+    scan = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
+    px = scan.reshape(h, 1 + 3 * w)[:, 1:].reshape(h, w, 3)
+    return int((px == np.array(RED, dtype=np.uint8)).all(axis=-1).sum())
 
 
 def _daily_df(n=800, spike_at=None, seed=7):
@@ -133,16 +148,18 @@ class TestBuilders:
     def test_outlier_markers_visibly_red(self):
         """The planted spike must appear as red marker pixels."""
         uri = plots.build_outliers_plot_classic(_daily_df(800))
-        raw = _png_bytes(uri)
-        w, h = png_decode_size(raw)
-        i, idat = 8, b""
-        while i < len(raw):
-            ln = struct.unpack(">I", raw[i:i + 4])[0]
-            if raw[i + 4:i + 8] == b"IDAT":
-                idat += raw[i + 8:i + 8 + ln]
-            i += 12 + ln
-        scan = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
-        px = scan.reshape(h, 1 + 3 * w)[:, 1:].reshape(h, w, 3)
-        red = (px[:, :, 0] == 214) & (px[:, :, 1] == 39) \
-            & (px[:, :, 2] == 40)
-        assert red.sum() > 10
+        assert _red_pixels(uri) > 10
+
+    def test_stl_and_mstl_markers_beyond_legend_swatch(self):
+        """STL/MSTL flags are drawn at their dates: red pixels beyond
+        the legend's one red swatch. A one-column (value-only) frame
+        handed to the detector loses the dates, and its markers land
+        off the canvas."""
+        c = Canvas(900, 420)
+        Axes(c, 70, 30, c.w - 90, c.h - 75).legend([("Outliers", RED)])
+        swatch = int((c.a == RED).all(axis=-1).sum())
+        assert swatch > 0
+        df = _daily_df(800)
+        for uri in (plots.build_outliers_plot_stl(df),
+                    plots.generate_outlier_plot_mstl(df, (7, 365))):
+            assert _red_pixels(uri) > swatch
