@@ -29,9 +29,11 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-for p in (REPO, os.path.join(REPO, "src")):
+for p in (REPO, os.path.join(REPO, "src"), os.path.join(REPO, "tools")):
     if p not in sys.path:
         sys.path.insert(0, p)
+
+from check_oracles import code_stamp  # noqa: E402
 
 ROWS = int(os.environ.get("TSTOKEN_BENCH_ROWS", "2000000"))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -68,6 +70,7 @@ def run_mode(mode: str) -> dict:
                                    runs[-1] if runs else None))
     iters = [r["phases"] for r in runs]
     out = {"mode": mode, "rows": ROWS, "cpus": CPUS,
+           "code_stamp": code_stamp(),
            "warmup_wall": round(warmup_wall, 3),
            "session_to_first_total": round(
                iters[0]["total"] + warmup_wall, 3),

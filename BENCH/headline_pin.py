@@ -27,6 +27,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = os.path.join(REPO, "BENCH", "headline_r5.json")
+sys.path.insert(0, os.path.join(REPO, "tools"))
+from check_oracles import code_stamp  # noqa: E402
 
 
 def main() -> None:
@@ -64,9 +66,7 @@ def main() -> None:
         q: min(c["queries"][q] for c in campaigns)
         for q in campaigns[0]["queries"]}
     summary = {
-        "git_head": subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
-            capture_output=True, text=True).stdout.strip(),
+        "code_stamp": code_stamp(),
         "n_campaigns": n,
         "pooled_query_min_sec": pooled_queries,
         # exclude the cold wall: bench.py's own headline `value` does
@@ -84,7 +84,7 @@ def main() -> None:
     with open(OUT, "w") as f:
         json.dump(summary, f, indent=1)
     print(json.dumps({k: summary[k] for k in (
-        "git_head", "pooled_total_sec", "best_campaign_total_sec",
+        "code_stamp", "pooled_total_sec", "best_campaign_total_sec",
         "best_rolled_points_per_sec")}))
 
 

@@ -21,15 +21,15 @@ Run:  python BENCH/holdout_f1.py   (500k rows at local[N], N = the CPUs
 
 import json
 import os
-import subprocess
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-for p in (REPO, os.path.join(REPO, "src")):
+for p in (REPO, os.path.join(REPO, "src"), os.path.join(REPO, "tools")):
     if p not in sys.path:
         sys.path.insert(0, p)
 
+from check_oracles import code_stamp  # noqa: E402
 from tstoken.jobs.pipeline import CAMPAIGN_SOURCES as SOURCES  # noqa: E402
 
 ROWS = 500_000
@@ -73,12 +73,6 @@ def main():
     spark = get_spark("tstoken-holdout-f1", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
-    try:
-        commit = subprocess.run(
-            ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True).stdout.strip()
-    except OSError:
-        commit = "unknown"
     results = {}
     for name, kwargs in REGIMES:
         t0 = time.time()
@@ -95,7 +89,7 @@ def main():
          inspect.signature(extrema_ensemble_flags).parameters.items()}
     summary = {
         "rows": ROWS, "sources": SOURCES, "cpus": CPUS,
-        "commit": commit,
+        "code_stamp": code_stamp(),
         "thresholds": f"FROZEN library defaults (avg {d['avg_threshold']}"
                       f" / spike {d['spike_threshold']} / dip "
                       f"{d['dip_threshold']})",

@@ -48,32 +48,8 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-STAGE_FILES = ("src/tstoken/rollup.py", "src/tstoken/gapfill.py",
-               "src/tstoken/detect.py", "src/tstoken/synth.py",
-               "src/tstoken/session.py", "src/tstoken/jobs/pipeline.py")
-
-
-def code_stamp() -> dict:
-    """Identity of the measured code: git HEAD plus a sha256 over the
-    engine files the pipeline executes, including the campaign module
-    `tstoken.jobs.pipeline` itself. --merge refuses to pool walls
-    whose checksum differs — 'same code' in the headline is verified,
-    not asserted (round-2 ADVICE: nothing recorded the engine version,
-    so minima measured on different code could silently pool)."""
-    import hashlib
-
-    h = hashlib.sha256()
-    for rel in STAGE_FILES:
-        with open(os.path.join(REPO, rel), "rb") as f:
-            h.update(f.read())
-    try:
-        commit = subprocess.run(
-            ["git", "-C", REPO, "rev-parse", "HEAD"],
-            capture_output=True, text=True, timeout=30).stdout.strip()
-    except Exception:
-        commit = "unknown"
-    return {"git_commit": commit or "unknown",
-            "stage_checksum": h.hexdigest()}
+sys.path.insert(0, os.path.join(REPO, "tools"))
+from check_oracles import code_stamp  # noqa: E402
 
 
 def host_cpus() -> int:
@@ -267,8 +243,8 @@ def main():
                         ), flush=True)
                     sys.exit(3)
                 if prev_stamp is not None \
-                        and prev_stamp.get("stage_checksum") != \
-                        stamp["stage_checksum"]:
+                        and prev_stamp.get("src_sha256") != \
+                        stamp["src_sha256"]:
                     # refuse LOUDLY and write NOTHING: silently dropping
                     # the prior levels would overwrite scaling.json with
                     # a partial-levels summary (and, combined with
@@ -276,7 +252,7 @@ def main():
                     # fresh walls just measured are printed for the
                     # operator to save via --out on a re-run.
                     print(json.dumps({
-                        "merge_refused": "stage checksum mismatch — "
+                        "merge_refused": "src_sha256 mismatch — "
                         "refusing to pool walls across code versions; "
                         "run a fresh full campaign or pass --out",
                         "prev": prev_stamp, "cur": stamp,

@@ -47,6 +47,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+sys.path.insert(0, os.path.join(REPO, "tools"))
+from check_oracles import code_stamp  # noqa: E402
 
 CHILD = r"""
 import glob, json, os, sys, time
@@ -202,19 +204,24 @@ def main():
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     only = set(sys.argv[2:])  # arm names: re-measure just these,
     #                           pooling the rest from the prior file
-    # pool with prior campaigns (same protocol as BENCH/scaling.py):
-    # keep each arm's fastest campaign — min-of-mins is the only
-    # estimator robust to one campaign catching a contended window
+    # pool with prior campaigns of the same rows and code (same
+    # protocol as BENCH/scaling.py): keep each arm's fastest campaign —
+    # min-of-mins is the only estimator robust to one campaign
+    # catching a contended window
     outpath = os.path.join(REPO, "BENCH", "skew_stress.json")
+    stamp = code_stamp()
     prior = {}
     if os.path.exists(outpath):
         with open(outpath) as f:
             prior = json.load(f)
-    if prior.get("rows") != rows or "runs" not in prior:
+    if prior.get("rows") != rows or "runs" not in prior \
+            or prior.get("code_stamp", {}).get("src_sha256") \
+            != stamp["src_sha256"]:
         prior = {"runs": {}}
     hot_rows = rows // 2
     src = os.path.join(REPO, "src")
-    results = {"rows": rows, "hotminute_rows": hot_rows}
+    results = {"rows": rows, "hotminute_rows": hot_rows,
+               "code_stamp": stamp}
 
     tables = {}
     for kind, n in (("balanced", rows), ("skew90", rows),

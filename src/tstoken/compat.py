@@ -583,30 +583,36 @@ def build_monthwise_frame(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+def box_stats(values: pd.Series) -> dict:
+    """Linear quartiles, ONE-sided 1.5·IQR whiskers (min of points >=
+    the low fence, max of points <= the high fence; NaN for an empty
+    side) and the fliers outside them, as diagnostics.monthwise_box
+    computes them (round-2 ADVICE: a two-sided mask gave NaN where
+    Spark yields a value)."""
+    q1, med, q3 = values.quantile([0.25, 0.5, 0.75], interpolation="linear")
+    iqr = q3 - q1
+    lo, hi = q1 - 1.5 * iqr, q3 + 1.5 * iqr
+    above_lo = values[values >= lo]
+    below_hi = values[values <= hi]
+    return {"q1": q1, "median": med, "q3": q3,
+            "whisker_lo": above_lo.min() if len(above_lo) else np.nan,
+            "whisker_hi": below_hi.max() if len(below_hi) else np.nan,
+            "fliers": values[(values < lo) | (values > hi)]}
+
+
 def build_monthwise_stats(df: pd.DataFrame) -> pd.DataFrame:
     """Per-month box statistics over the build_monthwise_frame output —
-    the numbers the box plot renders (quartiles, 1.5·IQR whiskers
-    clipped to data, flier count). Matches tstoken.diagnostics
+    the numbers the box plot renders (`box_stats`: quartiles, 1.5·IQR
+    whiskers clipped to data, flier count). Matches tstoken.diagnostics
     .monthwise_box so the Spark tier and the pandas compat surface
     agree."""
     frame = build_monthwise_frame(df)
 
     def stats(g: pd.Series) -> pd.Series:
-        q1, med, q3 = g.quantile([0.25, 0.5, 0.75], interpolation="linear")
-        iqr = q3 - q1
-        lo, hi = q1 - 1.5 * iqr, q3 + 1.5 * iqr
-        # whiskers are ONE-sided (min of points >= lo; max of points
-        # <= hi), exactly as diagnostics.monthwise_box computes them —
-        # the old two-sided `inside` mask could return NaN on
-        # degenerate months where Spark yields a value (round-2 ADVICE)
-        above_lo = g[g >= lo]
-        below_hi = g[g <= hi]
-        return pd.Series({
-            "n": len(g), "vmin": g.min(), "vmax": g.max(),
-            "q1": q1, "median": med, "q3": q3,
-            "whisker_lo": above_lo.min() if len(above_lo) else np.nan,
-            "whisker_hi": below_hi.max() if len(below_hi) else np.nan,
-            "n_fliers": int(((g < lo) | (g > hi)).sum())})
+        box = box_stats(g)
+        n_fliers = len(box.pop("fliers"))
+        return pd.Series({"n": len(g), "vmin": g.min(), "vmax": g.max(),
+                          **box, "n_fliers": n_fliers})
 
     return (frame.groupby("Month-Year")["Count"].apply(stats).unstack()
             .reset_index())

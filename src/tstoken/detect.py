@@ -397,20 +397,6 @@ def grouped_flags(rollup: DataFrame, tier: str, method: str,
         schema=FLAG_SCHEMA)
 
 
-def all_flags(rollup: DataFrame, tier: str,
-              methods=("iqr", "zscore", "mad", "ma", "stl"),
-              value_col: str = VALUE_COL) -> DataFrame:
-    """Union of the requested detectors' flags for one tier."""
-    out = None
-    native = {"iqr": iqr_flags, "zscore": zscore_flags, "mad": mad_flags,
-              "ma": ma_flags}
-    for m in methods:
-        df = native[m](rollup, value_col) if m in native else \
-            grouped_flags(rollup, tier, m, value_col)
-        out = df if out is None else out.unionByName(df)
-    return out
-
-
 STATIONARITY_SCHEMA = StructType([
     StructField("source", StringType()),
     StructField("adf_stat", DoubleType()),

@@ -8,9 +8,13 @@ steady state. `detector_roster` and `f1_scores` are the one set of
 scored detectors and the one F1 scorer that `bench.py` and
 `BENCH/holdout_f1.py` report.
 
-Fresh-process campaign, prints one JSON line:
+Fresh-process campaign, prints one JSON line. It runs as a module or,
+since it imports `tstoken` by absolute name, as a spark-submit script;
+either way it pins `local[<cpus>]`:
 
     PYTHONPATH=src python -m tstoken.jobs.pipeline <cpus> <rows> <iters>
+    spark-submit --py-files tstoken.zip src/tstoken/jobs/pipeline.py \
+        <cpus> <rows> <iters>
 """
 
 from __future__ import annotations
@@ -22,9 +26,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import detect, gapfill, rollup
-from ..session import get_spark
-from ..synth import stage_tokens_raw
+from tstoken import detect, gapfill, rollup
+from tstoken.session import get_spark
+from tstoken.synth import stage_tokens_raw
 
 CAMPAIGN_SOURCES = 16
 CAMPAIGN_MAX_ITERS = 24

@@ -153,15 +153,7 @@ def build_iqr_plot(df) -> str:
     if not isinstance(df, pd.DataFrame):
         df = df.toPandas()
     vals = pd.to_numeric(df.iloc[:, -1]).dropna()
-    q1, med, q3 = vals.quantile([0.25, 0.5, 0.75],
-                                interpolation="linear")
-    iqr = q3 - q1
-    lo_f, hi_f = q1 - 1.5 * iqr, q3 + 1.5 * iqr
-    inside_lo = vals[vals >= lo_f]
-    inside_hi = vals[vals <= hi_f]
-    wlo = float(inside_lo.min()) if len(inside_lo) else float(q1)
-    whi = float(inside_hi.max()) if len(inside_hi) else float(q3)
-    fliers = vals[(vals < lo_f) | (vals > hi_f)].to_numpy()
+    box = compat.box_stats(vals)
 
     c = Canvas(700, 320)
     ax = Axes(c, 60, 40, c.w - 80, c.h - 90)
@@ -175,9 +167,10 @@ def build_iqr_plot(df) -> str:
         c.line(x, ax.y1, x, ax.y1 + 3)
         c.text_center(x, ax.y1 + 6, f"{t:.0f}", GREY)
     c.text_center((ax.x0 + ax.x1) / 2, ax.y1 + 20, "Values", GREY)
-    ax.boxplot((ax.y0 + ax.y1) / 2, (ax.y1 - ax.y0) * 0.5,
-               float(q1), float(med), float(q3), wlo, whi,
-               fliers=fliers, mean=float(vals.mean()), horizontal=True)
+    ax.boxplot((ax.y0 + ax.y1) / 2, (ax.y1 - ax.y0) * 0.5, box["q1"],
+               box["median"], box["q3"], box["whisker_lo"], box["whisker_hi"],
+               fliers=box["fliers"].to_numpy(), mean=float(vals.mean()),
+               horizontal=True)
     return to_base64_png(c.a)
 
 

@@ -7,13 +7,12 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "tstoken", master: str | None = None,
+def get_spark(app_name: str, master: str,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    """Arrow-enabled, AQE-enabled session.
+    """Arrow-enabled, AQE-enabled session on `master`.
 
-    On a real cluster these settings ride through spark-submit --conf;
-    in the sandbox we default to local[$SPARK_GRAFT_CPUS].
+    On a real cluster these settings ride through spark-submit --conf.
     `extra_conf` entries are applied last (e.g. event-log capture for
     the BENCH task-balance harnesses).
     """
@@ -24,9 +23,6 @@ def get_spark(app_name: str = "tstoken", master: str | None = None,
     if src_dir not in existing.split(os.pathsep):
         os.environ["PYTHONPATH"] = (src_dir + os.pathsep + existing) if existing else src_dir
 
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
     if shuffle_partitions is None:
         n = master.split("[")[-1].rstrip("]") if "[" in master else "32"
         shuffle_partitions = 32 if n == "*" else max(int(n), 8)

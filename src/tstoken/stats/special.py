@@ -1,7 +1,7 @@
 """Special functions needed by the stats kernels, pure NumPy.
 
 Implemented from the published algorithms (no scipy in this sandbox):
-  - normal CDF/SF via erfc (math.erfc, vectorized)
+  - normal SF via erfc (math.erfc, vectorized)
   - normal quantile: Wichura AS 241 (PPND16)
   - regularized incomplete beta: continued fraction (Lentz), per
     Numerical Recipes §6.4
@@ -16,12 +16,6 @@ import math
 import numpy as np
 
 _erfc_vec = np.vectorize(math.erfc, otypes=[np.float64])
-
-
-def norm_cdf(x):
-    """Standard normal CDF."""
-    x = np.asarray(x, dtype=np.float64)
-    return 0.5 * _erfc_vec(-x / math.sqrt(2.0))
 
 
 def norm_sf(x):

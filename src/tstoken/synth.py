@@ -71,7 +71,6 @@ def _case_chain(id_col, bounds, values):
 
 def generate_tokens_raw(spark: SparkSession, total_rows: int,
                         n_sources: int = 8,
-                        partitions: int | None = None,
                         seed: int = 0,
                         anomaly_period: int = 200,
                         spike_mult: float = 8.0,
@@ -94,8 +93,7 @@ def generate_tokens_raw(spark: SparkSession, total_rows: int,
     reproduce the original table bit-for-bit (seed=0 adds zero to each
     mix) — the DuckDB tok_* oracles and goldens depend on that."""
     counts = rows_per_source(total_rows, n_sources, zipf_exp)
-    if partitions is None:
-        partitions = max(spark.sparkContext.defaultParallelism, 8)
+    partitions = max(spark.sparkContext.defaultParallelism, 8)
     active = [(i, c) for i, c in enumerate(counts) if c > 0]
     bounds = np.cumsum([0] + [c for _, c in active])
     base = (spark.range(0, int(bounds[-1]),
@@ -152,8 +150,7 @@ def generate_tokens_raw(spark: SparkSession, total_rows: int,
 
 
 def stage_tokens_raw(spark: SparkSession, total_rows: int,
-                     n_sources: int = 8, path: str | None = None,
-                     overwrite: bool = False) -> str:
+                     n_sources: int = 8) -> str:
     """Materialize the synthetic table to parquet once; return the path.
 
     Benchmarks read the staged table rather than fusing generation into
@@ -161,14 +158,18 @@ def stage_tokens_raw(spark: SparkSession, total_rows: int,
     parquet table (vectorized columnar scan), so measuring rollup
     throughput over `spark.read.parquet` is the faithful proxy, while
     inline generation is interpreted-expression-bound and would
-    misattribute its cost to the rollup. Staging is idempotent per
-    (rows, sources) path."""
+    misattribute its cost to the rollup. The path under the temp dir
+    is keyed by (rows, sources) and the sha256 of this module's source,
+    so an edit to the generator stages a fresh table instead of reusing
+    a stale one; an existing table at that path is reused."""
+    import hashlib
     import os
+    import tempfile
 
-    if path is None:
-        path = f"/tmp/tstoken_raw_{total_rows}_{n_sources}"
-    marker = os.path.join(path, "_SUCCESS")
-    if overwrite or not os.path.exists(marker):
+    digest = hashlib.sha256(__loader__.get_data(__file__)).hexdigest()
+    path = os.path.join(tempfile.gettempdir(),
+                        f"tstoken_raw_{total_rows}_{n_sources}_{digest[:12]}")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (generate_tokens_raw(spark, total_rows, n_sources=n_sources)
          .write.mode("overwrite").parquet(path))
     return path

@@ -2,6 +2,7 @@
 tier cascade, gap-fill, source partitioning, detector F1, codec
 round-trip through Spark, retention (SURVEY.md §5 engine test plan)."""
 
+import os
 import re
 from datetime import datetime, timedelta
 
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 
 from tstoken import detect, gapfill, rollup, synth
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ROWS = 12_000
 SOURCES = 4
 
@@ -108,6 +110,26 @@ class TestSynth:
                 base.sort_values("doc_id")["n_tok"].astype(odf["n_tok"].dtype)
                 .reset_index(drop=True))
 
+    def test_staged_path_keyed_by_synth_source(self, spark, tmp_path,
+                                               monkeypatch):
+        import hashlib
+        import tempfile
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        with open(synth.__file__, "rb") as f:
+            digest = hashlib.sha256(f.read()).hexdigest()
+        path = synth.stage_tokens_raw(spark, 300, n_sources=2)
+        assert os.path.basename(path) == f"tstoken_raw_300_2_{digest[:12]}"
+        assert spark.read.parquet(path).count() == \
+            synth.generate_tokens_raw(spark, 300, n_sources=2).count()
+
+        # a second call reuses the staged table: it generates nothing
+        def no_generation(*args, **kwargs):
+            raise AssertionError("staged table rewritten")
+
+        monkeypatch.setattr(synth, "generate_tokens_raw", no_generation)
+        assert synth.stage_tokens_raw(spark, 300, n_sources=2) == path
+
 
 class TestRollup:
     def test_1m_exact_vs_oracle(self, t1m, oracle_pdf):
@@ -158,6 +180,24 @@ class TestRollup:
 
 
 class TestTokenPipeline:
+    def test_job_file_loads_as_a_script(self):
+        # spark-submit runs the job file as a script (no parent package);
+        # PYTHONPATH=src stands in for --py-files. Loading it defines the
+        # campaign without starting Spark.
+        import subprocess
+        import sys
+
+        src = os.path.join(REPO, "src")
+        code = ("import runpy, sys; g = runpy.run_path(sys.argv[1], "
+                "run_name='not_main'); print(callable(g['main']))")
+        out = subprocess.run(
+            [sys.executable, "-c", code,
+             os.path.join(src, "tstoken", "jobs", "pipeline.py")],
+            capture_output=True, text=True, timeout=300,
+            env=dict(os.environ, PYTHONPATH=src))
+        assert out.returncode == 0, out.stderr[-2000:]
+        assert out.stdout.strip() == "True"
+
     def test_rolled_points_and_phases(self, spark, raw, tmp_path):
         from tstoken.jobs.pipeline import token_pipeline
         staged = str(tmp_path / "staged")

@@ -141,9 +141,12 @@ class TestDecoderBounds:
 
 class TestGoldenFmt:
     def test_nan_and_null_serialize_distinctly(self):
+        import os
         import sys
 
-        sys.path.insert(0, "/root/repo/tools")
+        sys.path.insert(0, os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "tools"))
         from goldens import _fmt
 
         assert _fmt(None) == "null"
