@@ -6,7 +6,7 @@ Design notes (what we learned measuring this):
   - The measured job is `tstoken.jobs.pipeline.token_pipeline`, the
     stored-table path: a staged parquet tokens_raw table (written
     once, shared byte-identical by every level) -> 1m rollup
-    (posexplode + native agg, partitioned by source) -> 1h -> 1d
+    (one row per doc, native agg, partitioned by source) -> 1h -> 1d
     cascades -> gap-fill -> IQR + MAD flags. Fusing synthetic
     generation into the measured job would misattribute the
     interpreted-expression generator cost to the engine.

@@ -14,8 +14,8 @@ local[$SPARK_GRAFT_CPUS]:
               minutes at a fixed docs/min rate, so per-key cardinality
               stays bounded): 90% of docs carry wrapped sequence
               numbers, concentrating them onto ~9 minute buckets —
-              per-(source,bucket_ts) explode cardinality in the
-              hundreds of millions.
+              ~100,000 docs (~10^8 tokens) per (source, bucket_ts)
+              key at the default 2M rows.
 
 Per-run evidence beyond wall clock: Spark event logs are enabled and
 the dominant stage's task-duration spread (max/median) is parsed out —
@@ -39,6 +39,7 @@ BENCH/skew_stress.json
 from __future__ import annotations
 
 import glob
+import hashlib
 import json
 import os
 import subprocess
@@ -106,7 +107,7 @@ elif kind == "hotminute":
     # engine derives event_ts from) wraps modulo 180 -> with src-000's
     # 3 s step all hot docs land in ~9 minute buckets; 10% cold docs
     # keep the bench shape. n_tok/tokens mirror the synth generator's
-    # distribution so per-doc explode cost matches.
+    # distribution so per-doc token cost matches.
     n_hot = int(rows * 0.9)
     hot = (spark.range(0, n_hot, numPartitions=max(32, n_hot // 50_000))
            .withColumn("seq", F.pmod(F.col("id"), F.lit(180)))
@@ -200,6 +201,16 @@ def task_spread(evdir: str, window: list[int] | None = None) -> dict:
     }
 
 
+def stage_digest() -> str:
+    """First 12 hex of sha256 over synth.py and the STAGE template: an
+    edit to either stages fresh tables instead of reusing ones the old
+    code wrote (the `synth.stage_tokens_raw` rule)."""
+    with open(os.path.join(REPO, "src", "tstoken", "synth.py"), "rb") as f:
+        h = hashlib.sha256(f.read())
+    h.update(STAGE.encode())
+    return h.hexdigest()[:12]
+
+
 def main():
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     only = set(sys.argv[2:])  # arm names: re-measure just these,
@@ -224,9 +235,10 @@ def main():
                "code_stamp": stamp}
 
     tables = {}
+    digest = stage_digest()
     for kind, n in (("balanced", rows), ("skew90", rows),
                     ("hotminute", hot_rows)):
-        path = f"/tmp/tstoken_skew_{kind}_{n}"
+        path = f"/tmp/tstoken_skew_{kind}_{n}_{digest}"
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             info = run(STAGE.format(src=src, kind=kind, rows=n, path=path,
                                     cpus=CPUS))

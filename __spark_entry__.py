@@ -373,7 +373,7 @@ def _tok_t1m_staged(spark, gapfilled: bool = False) -> DataFrame:
     parquet scan of bounded tier rows. The detectors themselves read
     their input once (per-source fences are window aggregates), except
     ma_flags, whose CV window search is a second reference joined back
-    to the full series — over the unmaterialized synth→posexplode→
+    to the full series — over the unmaterialized synth→rollup
     aggregate lineage that second reference would re-run the rollup.
     """
     from tstoken.gapfill import gap_fill

@@ -14,9 +14,16 @@ Spark-first design (SURVEY.md A10, §4.2):
     (BENCH/BASELINE.md skew stress), so no salt level is needed;
   - 1h re-aggregates 1m, 1d re-aggregates 1h (associative sums/counts/
     min/max only — the ROLLUP-cascade equivalent; averages derive at read);
-  - token-derived statistics (sum of squared token ids) are computed
-    once, at the 1m tier, by a native `posexplode` aggregate — the fat
-    `tokens` array is never read again above 1m (column pruning).
+  - every tier merges the same measures with the same aggregates
+    (`MEASURES`): the 1m tier over one row per doc, each coarser tier
+    over the tier below it. A doc's token statistic (Σtok²) is one
+    native `F.aggregate` over its `tokens` array, in the doc's own row,
+    and the fat array is never read again above 1m (column pruning).
+    Exploding every token into a row instead was measured slower on a
+    4-core host (200k rows, steady `rollup_1m` phase 6.5–8.1 s against
+    3.6–4.2 s at local[4]); an older 32-core measurement found the
+    interpreted lambda slower at 32 threads than at 8, not re-checked
+    since (ROADMAP "Waiting on a bigger host").
 
 All tier measures are integer (count/sum/min/max of int64) ⇒ rollups
 are exactly reproducible — the BASELINE "rolled-up points must match
@@ -42,33 +49,28 @@ TIER_PERIOD = {"1m": 60, "1h": 24, "1d": 7}
 TIER_MSTL_PERIODS = {"1m": (60, 1440), "1h": (24, 168), "1d": (7, 365)}
 
 
-def _per_doc(c: Column) -> Column:
-    """A doc-level value, read once per doc: on its pos-0 token row."""
-    return F.when(F.col("pos") == 0, c)
-
-
 class Measure(NamedTuple):
-    """A tier measure: its 1m aggregate over `token_rows`' rows, and the
-    aggregate ("sum", "min" or "max") a coarser tier merges it with."""
+    """A tier measure: its value for one doc, and the aggregate ("sum",
+    "min" or "max") that merges it — over doc rows at 1m, over the finer
+    tier's rows above it."""
     name: str
-    agg_1m: Callable[[], Column]
+    per_doc: Callable[[], Column]
     merge: str
 
 
 # Declared once: rollup_1m, rollup_cascade, gap_fill and
 # streaming.streaming_rollup_1m derive their columns and aggregates from
-# MEASURES. F.sum skips the null sentinel tokens; the coalesce covers the
-# all-empty-docs group (a sum over only nulls is null, must be 0) — per
-# group, NOT a per-token branch: the token stream is the hot loop.
+# MEASURES. A doc's Σtok² is 0 for an empty or NULL array; its long
+# accumulator raises on overflow under ANSI, as the long sums do.
 MEASURES = (
-    Measure("n_docs", lambda: F.sum(_per_doc(F.lit(1))), "sum"),
-    Measure("sum_n_tok",
-            lambda: F.sum(_per_doc(F.col("n_tok").cast("long"))), "sum"),
-    Measure("min_n_tok", lambda: F.min(_per_doc(F.col("n_tok"))), "min"),
-    Measure("max_n_tok", lambda: F.max(_per_doc(F.col("n_tok"))), "max"),
-    Measure("sum_tok_sq",
-            lambda: F.coalesce(F.sum(F.col("tok").cast("long") * F.col("tok")),
-                               F.lit(0).cast("long")), "sum"),
+    Measure("n_docs", lambda: F.lit(1), "sum"),
+    Measure("sum_n_tok", lambda: F.col("n_tok").cast("long"), "sum"),
+    Measure("min_n_tok", lambda: F.col("n_tok"), "min"),
+    Measure("max_n_tok", lambda: F.col("n_tok"), "max"),
+    Measure("sum_tok_sq", lambda: F.aggregate(
+        F.coalesce(F.col("tokens"), F.array().cast("array<int>")),
+        F.lit(0).cast("long"), lambda acc, t: acc + t.cast("long") * t),
+        "sum"),
 )
 ROLLUP_COLUMNS = ["source", "bucket_ts", *(m.name for m in MEASURES),
                   "gap_filled"]
@@ -92,35 +94,18 @@ def bucket_col(event_ts: Column, tier: str) -> Column:
     return F.timestamp_seconds((epoch - F.pmod(epoch, F.lit(secs))))
 
 
-def token_rows(df: DataFrame, *keys) -> DataFrame:
-    """`keys`, n_tok, pos, tok: one row per token, the rows every 1m
-    aggregate reads. An empty or null `tokens` array becomes one null
-    sentinel, so the doc still has a pos-0 row and counts toward n_docs
-    (round-1 ADVICE: zero-token docs are plausible in an arbitrary
-    tokens_raw table, though synth always makes n_tok >= 1)."""
-    toks = F.coalesce(F.col("tokens"), F.array().cast("array<int>"))
-    padded = F.when(F.size(toks) == 0,
-                    F.array(F.lit(None).cast("int"))).otherwise(toks)
-    return df.select(*keys, "n_tok", F.posexplode(padded).alias("pos", "tok"))
+def doc_rows(df: DataFrame, *keys) -> DataFrame:
+    """`keys` plus every measure's per-doc value: one row per doc."""
+    return df.select(*keys, *(m.per_doc().alias(m.name) for m in MEASURES))
 
 
-def aggs_1m() -> list[Column]:
-    """The 1m aggregate of every measure over `token_rows`' rows."""
-    return [m.agg_1m().alias(m.name) for m in MEASURES]
+def merged() -> list[Column]:
+    """Every measure's merge aggregate, the one rule of every tier."""
+    return [getattr(F, m.merge)(m.name).alias(m.name) for m in MEASURES]
 
 
 def rollup_1m(raw: DataFrame, n_salts: int | None = None) -> DataFrame:
     """tokens_raw → 1m tier, hash-partitioned by `source`.
-
-    Token-derived statistics use `posexplode` + whole-stage-codegen
-    native aggregation rather than an interpreted `F.aggregate` lambda:
-    the flattened stream stays in primitive unsafe-row form end to end
-    (no per-element boxing), which both runs ~10× faster per core and
-    SCALES with cores — the interpreted higher-order path is
-    allocation-bound and anti-scales beyond ~8 threads in one JVM.
-    Doc-level measures (count/sum/min/max of n_tok) piggyback on the
-    same single scan via `pos = 0` guards, so the raw table is read
-    exactly once.
 
     One exchange feeds the (source, bucket_ts) aggregate (map-side
     partial aggregation spreads a hot source before it); a second one
@@ -129,11 +114,9 @@ def rollup_1m(raw: DataFrame, n_salts: int | None = None) -> DataFrame:
     per-source detector windows inherit it instead of shuffling.
     `n_salts` is ignored, kept only so existing callers still run.
     """
-    # bucket per doc, before the explode: not once per token
-    df = with_event_time(raw).withColumn(
-        "bucket_ts", bucket_col(F.col("event_ts"), "1m"))
-    rows = token_rows(df, "source", "bucket_ts")
-    return (rows.groupBy("source", "bucket_ts").agg(*aggs_1m())
+    docs = doc_rows(with_event_time(raw), "source",
+                    bucket_col(F.col("event_ts"), "1m").alias("bucket_ts"))
+    return (docs.groupBy("source", "bucket_ts").agg(*merged())
             .withColumn("gap_filled", F.lit(False))
             .select(*ROLLUP_COLUMNS)
             .repartition("source"))
@@ -149,8 +132,7 @@ def rollup_cascade(finer: DataFrame, tier: str) -> DataFrame:
     src = finer.filter(~F.col("gap_filled"))
     return (src
             .groupBy("source", bucket_col(F.col("bucket_ts"), tier).alias("bucket_ts"))
-            .agg(*[getattr(F, m.merge)(m.name).alias(m.name)
-                   for m in MEASURES])
+            .agg(*merged())
             .withColumn("gap_filled", F.lit(False))
             .select(*ROLLUP_COLUMNS))
 

@@ -7,6 +7,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """min(48 GB, half of MemTotal), so the local-mode heap leaves the
+    host room; 48 GB when MemTotal cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(l.split()[1]) for l in f
+                       if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        kib = 96 << 20
+    return f"{min(48 << 10, kib // 2048)}m"
+
+
 def get_spark(app_name: str, master: str,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
@@ -30,14 +42,12 @@ def get_spark(app_name: str, master: str,
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # 32 MB scan splits (default 128 MB): the token tables carry a
-        # fat array column that EXPANDS ~30x through posexplode, so
-        # input bytes understate downstream work by that factor — with
-        # 128 MB splits a 4 GB table yields ~34 tasks and a 32-thread
-        # stage runs as one ragged wave (measured 47 s vs 29 s at
-        # local[32] on the 6M-row staging table). 32 MB keeps every
-        # stage >= 3-4 task waves per 32 cores; on a 1000-executor
-        # cluster the same reasoning holds per-executor-core.
+        # 32 MB scan splits (default 128 MB): with 128 MB splits a 4 GB
+        # token table yields ~34 tasks and a 32-thread stage runs as
+        # one ragged wave (measured 47 s vs 29 s at local[32] on the
+        # 6M-row staging table). 32 MB keeps every stage >= 3-4 task
+        # waves per 32 cores; on a 1000-executor cluster the same
+        # reasoning holds per-executor-core.
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
@@ -45,7 +55,8 @@ def get_spark(app_name: str, master: str,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

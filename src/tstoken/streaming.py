@@ -2,9 +2,9 @@
 
 The reference is pure batch (SURVEY.md §2.10); the north rule's
 "continuous aggregates" get a streaming variant here: readStream →
-watermarked tumbling-window aggregation → writeStream. It groups the
-same token rows (`rollup.token_rows`) with the same 1m aggregates
-(`rollup.aggs_1m`, built from the one `rollup.MEASURES` spec) as the
+watermarked tumbling-window aggregation → writeStream. It merges the
+same doc rows (`rollup.doc_rows`) with the same aggregates
+(`rollup.merged`, built from the one `rollup.MEASURES` spec) as the
 batch `rollup_1m`, and emits exactly `ROLLUP_COLUMNS`, so the streaming
 and batch 1m tiers agree column for column by construction.
 
@@ -22,7 +22,7 @@ from pyspark.sql.types import (BooleanType, DoubleType, LongType,
                                StringType, StructField, StructType,
                                TimestampType)
 
-from .rollup import ROLLUP_COLUMNS, aggs_1m, token_rows, with_event_time
+from .rollup import ROLLUP_COLUMNS, doc_rows, merged, with_event_time
 
 
 def streaming_rollup_1m(raw_stream: DataFrame,
@@ -34,9 +34,9 @@ def streaming_rollup_1m(raw_stream: DataFrame,
     the tier idempotent (same keys as the batch path).
     """
     df = with_event_time(raw_stream).withWatermark("event_ts", watermark)
-    return (token_rows(df, "source", "event_ts")
+    return (doc_rows(df, "source", "event_ts")
             .groupBy("source", F.window("event_ts", "1 minute").alias("win"))
-            .agg(*aggs_1m())
+            .agg(*merged())
             .withColumn("bucket_ts", F.col("win.start"))
             .withColumn("gap_filled", F.lit(False))
             .select(*ROLLUP_COLUMNS))

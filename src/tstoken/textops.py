@@ -448,12 +448,12 @@ def simhash(docs: DataFrame, hash_col: F.Column | None = None) -> DataFrame:
     native bit-vote sums under whole-stage codegen.
 
     The previous formulation ran 64 interpreted `F.aggregate` lambdas
-    per row — the allocation-bound higher-order-function path that
-    anti-scales beyond ~8 threads (measured for rollup_1m, README).
-    Here the exploded (doc_id, xxhash64(word)) stream is aggregated
-    with plain conditional sums (votes[i] = Σ ±1 on bit i), exactly the
-    posexplode+codegen rewrite rollup_1m and minhash_signatures already
-    use. explode_outer keeps zero-word docs (simhash = 0, matching the
+    per row, an allocation-bound path that ran slower at 32 threads
+    than at 8 on a 32-core host. Here the exploded (doc_id,
+    xxhash64(word)) stream is aggregated with plain conditional sums
+    (votes[i] = Σ ±1 on bit i), as minhash_signatures does (rollup_1m,
+    with ONE lambda per doc, keeps docs as rows instead — README).
+    explode_outer keeps zero-word docs (simhash = 0, matching the
     old empty-array fold).
 
     hash_col: expression over the exploded word column `w` (default

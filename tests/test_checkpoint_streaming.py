@@ -263,7 +263,10 @@ class TestStreaming:
         q.processAllAvailable()
         got = spark.sql("select * from t1m_stream").toPandas() \
             .sort_values(["source", "bucket_ts"]).reset_index(drop=True)
+        # one row per doc, as in the batch tier: no token explode
+        plan = q._jsq.explainInternal(False)
         q.stop()
+        assert "StateStoreSave" in plan and "Generate" not in plan, plan
 
         want = rollup_1m(raw).toPandas() \
             .sort_values(["source", "bucket_ts"]).reset_index(drop=True)

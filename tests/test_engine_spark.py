@@ -131,6 +131,18 @@ class TestSynth:
         assert synth.stage_tokens_raw(spark, 300, n_sources=2) == path
 
 
+class TestSession:
+    def test_default_driver_memory(self, tmp_path):
+        from tstoken.session import default_driver_memory
+        mi = tmp_path / "meminfo"
+        mi.write_text("MemTotal:       16384000 kB\nMemFree: 1 kB\n")
+        assert default_driver_memory(str(mi)) == \
+            f"{16384000 // 2 // 1024}m"
+        mi.write_text("MemTotal:       268435456 kB\n")
+        assert default_driver_memory(str(mi)) == "49152m"
+        assert default_driver_memory(str(tmp_path / "missing")) == "49152m"
+
+
 class TestRollup:
     def test_1m_exact_vs_oracle(self, t1m, oracle_pdf):
         r = t1m.toPandas().sort_values(["source", "bucket_ts"]) \
@@ -325,10 +337,16 @@ class TestSourcePartitioning:
 
     def test_1m_plans_two_exchanges(self, t1m):
         # one below the (source, bucket_ts) aggregate, one repartitioning
-        # its output by source: no salt level
+        # its output by source: no salt level; and one row per doc, so
+        # no Generate (token explode) node
         ex = _exchanges(t1m, into_cache=True)
         assert len(ex) == 2, ex
         assert all(e.startswith("Exchange hashpartitioning") for e in ex), ex
+        plan = t1m._jdf.queryExecution().executedPlan()
+        nodes = {n.getClass().getSimpleName()
+                 for n in _plan_nodes(plan, into_cache=True)}
+        assert "InMemoryTableScanExec" in nodes, nodes
+        assert "GenerateExec" not in nodes, nodes
 
     @pytest.mark.parametrize("tiers", [("1h",), ("1h", "1d")],
                              ids=["1h", "1d"])
@@ -343,10 +361,17 @@ class TestSourcePartitioning:
         df = getattr(detect, name)(gapfill.gap_fill(t1m, "1m"))
         assert _exchanges(df) == []
 
-    def test_long_sum_overflow_raises(self, spark):
-        # Σtok² is a Spark long sum: 2·(−2³¹)² = 2⁶³ overflows under ANSI
+    @pytest.mark.parametrize("docs", [
+        # 2·(−2³¹)² = 2⁶³ overflows inside one doc's long Σtok²
+        [("src-000-000000000001", [-2**31, -2**31], 2)],
+        # each doc's Σtok² is 2⁶², their sum in the minute's row 2⁶³
+        [("src-000-000000000001", [-2**31], 1),
+         ("src-000-000000000002", [-2**31], 1)],
+    ], ids=["in_doc", "across_docs"])
+    def test_long_sum_overflow_raises(self, spark, docs):
+        # Σtok² is a Spark long: overflow raises under ANSI
         raw = spark.createDataFrame(
-            [("src-000-000000000001", [-2**31, -2**31], 2, "src-000")],
+            [(d, t, n, "src-000") for d, t, n in docs],
             "doc_id string, tokens array<int>, n_tok int, source string")
         with pytest.raises(ArithmeticException):
             rollup.rollup_1m(raw).collect()

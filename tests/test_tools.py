@@ -236,3 +236,16 @@ class TestBenchHostFacts:
         (tmp_path / "f.py").write_text("x = 2\n")
         dirty = bench.host_facts([0.0, 0.0, 0.0])
         assert dirty["git_head"] == clean["git_head"] and dirty["git_dirty"]
+
+
+class TestSkewStressStaging:
+    def test_stage_path_keyed_by_generator_and_template(self, monkeypatch):
+        # a synth.py or STAGE edit must not reuse a table the old code
+        # staged
+        import re
+
+        import skew_stress
+        digest = skew_stress.stage_digest()
+        assert re.fullmatch(r"[0-9a-f]{12}", digest)
+        monkeypatch.setattr(skew_stress, "STAGE", skew_stress.STAGE + "#")
+        assert skew_stress.stage_digest() != digest
