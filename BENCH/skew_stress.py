@@ -202,13 +202,11 @@ def task_spread(evdir: str, window: list[int] | None = None) -> dict:
 
 
 def stage_digest() -> str:
-    """First 12 hex of sha256 over synth.py and the STAGE template: an
-    edit to either stages fresh tables instead of reusing ones the old
-    code wrote (the `synth.stage_tokens_raw` rule)."""
-    with open(os.path.join(REPO, "src", "tstoken", "synth.py"), "rb") as f:
-        h = hashlib.sha256(f.read())
-    h.update(STAGE.encode())
-    return h.hexdigest()[:12]
+    """First 12 hex of sha256 over `synth.source_digest()` and the STAGE
+    template: an edit to either stages fresh tables instead of reusing
+    ones the old code wrote."""
+    from tstoken.synth import source_digest
+    return hashlib.sha256((source_digest() + STAGE).encode()).hexdigest()[:12]
 
 
 def main():

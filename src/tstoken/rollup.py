@@ -16,14 +16,10 @@ Spark-first design (SURVEY.md A10, §4.2):
     min/max only — the ROLLUP-cascade equivalent; averages derive at read);
   - every tier merges the same measures with the same aggregates
     (`MEASURES`): the 1m tier over one row per doc, each coarser tier
-    over the tier below it. A doc's token statistic (Σtok²) is one
-    native `F.aggregate` over its `tokens` array, in the doc's own row,
-    and the fat array is never read again above 1m (column pruning).
-    Exploding every token into a row instead was measured slower on a
-    4-core host (200k rows, steady `rollup_1m` phase 6.5–8.1 s against
-    3.6–4.2 s at local[4]); an older 32-core measurement found the
-    interpreted lambda slower at 32 threads than at 8, not re-checked
-    since (ROADMAP "Waiting on a bigger host").
+    over the tier below it. A doc's Σtok² is one native `F.aggregate`
+    over its `tokens` array, so the fat array is never exploded into
+    rows nor read above 1m. That beat the explode on 4 cores (README);
+    its behaviour at 32 threads is unchecked (ROADMAP).
 
 All tier measures are integer (count/sum/min/max of int64) ⇒ rollups
 are exactly reproducible — the BASELINE "rolled-up points must match
@@ -51,8 +47,7 @@ TIER_MSTL_PERIODS = {"1m": (60, 1440), "1h": (24, 168), "1d": (7, 365)}
 
 class Measure(NamedTuple):
     """A tier measure: its value for one doc, and the aggregate ("sum",
-    "min" or "max") that merges it — over doc rows at 1m, over the finer
-    tier's rows above it."""
+    "min" or "max") that merges it at every tier."""
     name: str
     per_doc: Callable[[], Column]
     merge: str
@@ -60,8 +55,9 @@ class Measure(NamedTuple):
 
 # Declared once: rollup_1m, rollup_cascade, gap_fill and
 # streaming.streaming_rollup_1m derive their columns and aggregates from
-# MEASURES. A doc's Σtok² is 0 for an empty or NULL array; its long
-# accumulator raises on overflow under ANSI, as the long sums do.
+# MEASURES. A doc's Σtok² skips NULL tokens, so it is 0 for an empty or
+# NULL array; its long accumulator raises on overflow under ANSI, as the
+# long sums do.
 MEASURES = (
     Measure("n_docs", lambda: F.lit(1), "sum"),
     Measure("sum_n_tok", lambda: F.col("n_tok").cast("long"), "sum"),
@@ -69,7 +65,8 @@ MEASURES = (
     Measure("max_n_tok", lambda: F.col("n_tok"), "max"),
     Measure("sum_tok_sq", lambda: F.aggregate(
         F.coalesce(F.col("tokens"), F.array().cast("array<int>")),
-        F.lit(0).cast("long"), lambda acc, t: acc + t.cast("long") * t),
+        F.lit(0).cast("long"), lambda acc, t: acc + F.coalesce(
+            t.cast("long") * t, F.lit(0).cast("long"))),
         "sum"),
 )
 ROLLUP_COLUMNS = ["source", "bucket_ts", *(m.name for m in MEASURES),

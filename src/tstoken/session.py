@@ -7,15 +7,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_mem_kib(meminfo: str = "/proc/meminfo") -> int | None:
+    """MemTotal in KiB, or None when it cannot be read."""
+    try:
+        with open(meminfo) as f:
+            return next(int(l.split()[1]) for l in f
+                        if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return None
+
+
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """min(48 GB, half of MemTotal), so the local-mode heap leaves the
     host room; 48 GB when MemTotal cannot be read."""
-    try:
-        with open(meminfo) as f:
-            kib = next(int(l.split()[1]) for l in f
-                       if l.startswith("MemTotal:"))
-    except (OSError, StopIteration, ValueError, IndexError):
-        kib = 96 << 20
+    kib = host_mem_kib(meminfo) or 96 << 20
     return f"{min(48 << 10, kib // 2048)}m"
 
 

@@ -149,6 +149,12 @@ def generate_tokens_raw(spark: SparkSession, total_rows: int,
     return out
 
 
+def source_digest() -> str:
+    """sha256 of this module's source, the key of every staged table."""
+    import hashlib
+    return hashlib.sha256(__loader__.get_data(__file__)).hexdigest()
+
+
 def stage_tokens_raw(spark: SparkSession, total_rows: int,
                      n_sources: int = 8) -> str:
     """Materialize the synthetic table to parquet once; return the path.
@@ -159,16 +165,13 @@ def stage_tokens_raw(spark: SparkSession, total_rows: int,
     throughput over `spark.read.parquet` is the faithful proxy, while
     inline generation is interpreted-expression-bound and would
     misattribute its cost to the rollup. The path under the temp dir
-    is keyed by (rows, sources) and the sha256 of this module's source,
-    so an edit to the generator stages a fresh table instead of reusing
-    a stale one; an existing table at that path is reused."""
-    import hashlib
+    is keyed by (rows, sources) and `source_digest()`, so an edit to the
+    generator stages a fresh table; an existing table there is reused."""
     import os
     import tempfile
 
-    digest = hashlib.sha256(__loader__.get_data(__file__)).hexdigest()
-    path = os.path.join(tempfile.gettempdir(),
-                        f"tstoken_raw_{total_rows}_{n_sources}_{digest[:12]}")
+    path = os.path.join(tempfile.gettempdir(), f"tstoken_raw_{total_rows}"
+                        f"_{n_sources}_{source_digest()[:12]}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (generate_tokens_raw(spark, total_rows, n_sources=n_sources)
          .write.mode("overwrite").parquet(path))

@@ -672,18 +672,23 @@ class TestRound2Fixes:
     def test_rollup_counts_empty_and_null_token_docs(self, spark):
         # rollup_1m is the public ingest for arbitrary tokens_raw
         # tables: docs with [] or NULL tokens must still count toward
-        # n_docs (pre-fix they silently vanished from the posexplode)
+        # n_docs (pre-fix they silently vanished from the posexplode);
+        # a NULL token inside an array is skipped, not the whole doc
         rows = [("d-0", [3, 4], 2, "src-000"),
                 ("d-1", [], 0, "src-000"),
-                ("d-2", None, 0, "src-000")]
+                ("d-2", None, 0, "src-000"),
+                ("d-3", [3, None, 4], 3, "src-001")]
         raw = spark.createDataFrame(
             rows, "doc_id string, tokens array<int>, n_tok int, source string")
-        out = rollup.rollup_1m(raw).toPandas()
-        assert len(out) == 1
-        r = out.iloc[0]
+        out = rollup.rollup_1m(raw).toPandas().set_index("source")
+        assert len(out) == 2
+        r = out.loc["src-000"]
         assert r["n_docs"] == 3
         assert r["sum_n_tok"] == 2
         assert r["min_n_tok"] == 0 and r["max_n_tok"] == 2
+        assert r["sum_tok_sq"] == 9 + 16
+        r = out.loc["src-001"]
+        assert r["n_docs"] == 1
         assert r["sum_tok_sq"] == 9 + 16
 
     @pytest.fixture(scope="class")

@@ -116,13 +116,9 @@ def resumable_rows(prior: dict, sf_dir: str, stamp: dict) -> dict:
 def duckdb_memory_limit(meminfo: str = "/proc/meminfo") -> str:
     """min(32 GB, 75% of MemTotal): a big oracle spills instead of
     taking the whole host (32 GB when MemTotal cannot be read)."""
+    from tstoken.session import host_mem_kib
     cap_kib = 32 << 20
-    try:
-        with open(meminfo) as f:
-            total = next(int(l.split()[1]) for l in f
-                         if l.startswith("MemTotal:"))
-    except (OSError, StopIteration, ValueError, IndexError):
-        total = None
+    total = host_mem_kib(meminfo)
     kib = cap_kib if total is None else min(cap_kib, total * 3 // 4)
     return f"{kib // 1024}MiB"
 
