@@ -1403,7 +1403,7 @@ FROM comp f JOIN pick p ON f.source = p.source"""
     # 1m series (zero-filled gaps force additive for gapped sources via
     # the all-positive guard, exactly like the engine), then the PyOD
     # MAD modified-z fence (> 3.5) on the chosen model's residuals
-    # (detect._series_detector 'classic' branch; reference
+    # (detect.KERNELS['classic']; reference
     # catch.py:589-691 + 228-232)
     tok_classic = f"""WITH {tok_cte},
 gb AS (SELECT source, min(bucket_ts) lo, max(bucket_ts) hi

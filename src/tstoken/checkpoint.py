@@ -84,11 +84,9 @@ def _commit(io: TableIO, tier: str, units: set, work: DataFrame,
     """Merge `work` (the rows of `units`) into rollup_<tier>; record units."""
     table = f"rollup_{tier}"
     work = work.withColumn("chunk", chunk_col()).cache()
-    if io.exists(table):
-        merged = io.read(table).filter(~_in_units(units)).unionByName(work)
-        io.overwrite_safe(table, merged, partition_by=("source",))
-    else:
-        io.overwrite(table, work, partition_by=("source",))
+    merged = (io.read(table).filter(~_in_units(units)).unionByName(work)
+              if io.exists(table) else work)
+    io.overwrite(table, merged, partition_by=("source",))
     counts = work.groupBy("source", "chunk").agg(
         F.sum("n_docs").alias("rows_in"), F.count(F.lit(1)).alias("rows_out"))
     record_units(io, tier, counts, input_snapshot,

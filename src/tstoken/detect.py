@@ -11,13 +11,15 @@ Two layers (SURVEY.md §7.3):
     broadcast join left is ma_flags' CV window pick, which aggregates
     a different row set (the test folds).
   - GROUPED Arrow-UDF detectors (classic/STL/MSTL/ESD and the
-    engine-native STL variants): applyInPandas per source, each group
-    being ONE rolled-up series (bounded size: buckets, never raw rows),
-    running the tstoken.compat pipeline. IQR is native only; a grouped
-    series too short or too flat to decompose falls back to IQR fences
-    scored exactly as iqr_flags scores them, labeled "iqr_fallback".
-    The classic detector picks its additive/multiplicative model with
-    compat._classic_decomposition, as diagnostics.decompose_tier does.
+    engine-native stl_z): one NumPy kernel per method in KERNELS, run
+    by per_source_series (one applyInPandas group per source's rolled
+    series), which stationarity_check and diagnostics.decompose_tier
+    also use. IQR is native only; a series too short to decompose, or
+    whose kernel raises ValueError (a too-flat STL/MSTL residual, ESD
+    on a constant series), falls back to IQR fences scored exactly as
+    iqr_flags scores them, labeled "iqr_fallback". classic picks its
+    model with compat._classic_decomposition, as decompose_tier does,
+    and has no flatness check: a constant series keeps its label.
 
 Flag schema (FIXTURES.md A2): (source, bucket_ts, method, is_outlier,
 score). All buckets are emitted with a boolean, not just the hits.
@@ -32,7 +34,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (BooleanType, DoubleType, StringType,
                                StructField, StructType, TimestampType)
 
+from . import compat
 from .rollup import TIER_MSTL_PERIODS, TIER_PERIOD
+from .stats.dispersion import iqr_fences, mad_scores, zscore
+from .stats.esd import generalized_esd, seasonal_esd
+from .stats.mstl import mstl_fit
+from .stats.normality import shapiro
+from .stats.stationarity import stationarity_verdicts
+from .stats.stl import stl_fit
 
 FLAG_SCHEMA = StructType([
     StructField("source", StringType()),
@@ -277,124 +286,134 @@ def extrema_ensemble_flags(rollup: DataFrame, half_window: int = 30,
 
 # ------------------------------------------- grouped Arrow-UDF detectors
 
-GROUPED_METHODS = ("stl", "stl_z", "mstl", "classic", "esd")
-
-
-def _series_detector(method: str, period: int,
-                     mstl_periods: tuple | None = None):
-    """Build the per-group pandas function for applyInPandas.
-
-    Each group is one source's rolled series — bounded by bucket count
-    (≤ ~10^5 points/tier), never raw rows (SURVEY.md §4.1).
-
-    When a decomposition kernel degenerates (constant series, zero
-    residual spread) the detector falls back to IQR fences and SAYS SO:
-    the output `method` column reads "iqr_fallback", never the
-    requested method (round-1 verdict #3 — a silent fallback would ship
-    wrong-but-plausible flags on a kernel regression). Only the known
-    degenerate path (ValueError) falls back; any other kernel error
-    propagates and fails the query loudly.
-    """
-    if method not in GROUPED_METHODS:
-        raise ValueError(f"unknown method {method}")
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from . import compat
-        from .stats.dispersion import mad_scores, zscore as _zs
-        from .stats.stl import stl_fit
-
+def per_source_series(rollup: DataFrame, value_col: str, fn,
+                      schema: StructType) -> DataFrame:
+    """`fn(source, bucket_ts, x)` once per source, as one grouped Arrow
+    UDF: `bucket_ts` is the source's sorted buckets (a pandas Series),
+    `x` their `value_col` as float64, and `fn` returns a pandas frame
+    of `schema`. Each group is one rolled series, bounded by bucket
+    count (<= ~10^5 points/tier), never raw rows (SURVEY.md §4.1)."""
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("bucket_ts").reset_index(drop=True)
-        src = pdf["source"].iloc[0]
-        x = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(x)
-        flags = np.zeros(n, dtype=bool)
-        score = np.zeros(n, dtype=np.float64)
+        return fn(pdf["source"].iloc[0], pdf["bucket_ts"],
+                  pdf["value"].to_numpy(dtype=np.float64))
 
-        def iqr_fallback():
-            """iqr_flags' fences and scores: the distance outside a
-            fence in IQRs (the fences span 4 IQRs), or the distance
-            itself when the IQR is 0."""
-            from .stats.dispersion import iqr_fences
-            lo, hi = iqr_fences(x)
-            iqr = (hi - lo) / 4.0
-            dist = np.maximum(np.maximum(lo - x, x - hi), 0.0)
-            return (x < lo) | (x > hi), dist / iqr if iqr > 0 else dist
+    src = rollup.select("source", "bucket_ts",
+                        F.col(value_col).cast("double").alias("value"))
+    return src.groupBy("source").applyInPandas(run, schema=schema)
 
-        def stl_resid():
-            """STL residuals; ValueError (-> iqr_fallback) if degenerate."""
-            resid = stl_fit(x, period=period,
-                            seasonal=period + (period % 2 == 0)).resid
-            if compat._degenerate_decomposition(resid, x):
-                raise ValueError("degenerate decomposition")
-            return resid
 
-        method_out = method
-        try:
-            if n < 2 * period + 1:
-                flags, score = iqr_fallback()
-                method_out = "iqr_fallback"
-            elif method == "stl":
-                flags, score = compat.dispersion_flags(stl_resid())
-            elif method == "stl_z":
-                # engine-native: STL residuals + fixed |z| > 2 (the
-                # reference's z branch, K6, applied unconditionally;
-                # threshold catch.py:1156, not tuned). The MC-Shapiro
-                # gate takes that branch when its p > 0.05, and a LOW
-                # Shapiro W (heavy tails) gives p near 1, so "stl"
-                # equals "stl_z" whenever p > 0.05. They differ only
-                # on residuals that look normal (high W, p <= 0.05),
-                # which the gate sends to MAD.
-                z = np.abs(_zs(stl_resid()))
-                flags, score = z > 2.0, z
-            elif method == "mstl":
-                from .stats.mstl import mstl_fit
-                periods = mstl_periods or (period,)
-                usable = tuple(p for p in periods if n > 2 * p)
-                resid = mstl_fit(x, periods=usable or (period,)).resid
-                if compat._degenerate_decomposition(resid, x):
-                    raise ValueError("degenerate decomposition")
-                s = mad_scores(resid)
-                flags, score = s > 3.5, s
-            elif method == "classic":
-                dec, _ = compat._classic_decomposition(x, period)
-                s = mad_scores(dec.resid)
-                flags, score = s > 3.5, s
-            elif method == "esd":
-                from .stats.esd import generalized_esd, seasonal_esd
-                from .stats.normality import shapiro
-                _, p = shapiro(x)
-                if p > 0.05:
-                    idx = generalized_esd(x, max_anomalies=n // 20)
-                else:
-                    idx = seasonal_esd(x, periodicity=period,
-                                       max_anomalies=n // 20, hybrid=True)
-                flags = np.zeros(n, dtype=bool)
-                flags[list(idx)] = True
-                score = flags.astype(np.float64)
-        except ValueError:
-            # degenerate decomposition / zero-spread series only —
-            # other kernel exceptions propagate (see docstring)
-            flags, score = iqr_fallback()
-            method_out = "iqr_fallback"
+def decomposable(x: np.ndarray, period: int) -> bool:
+    """At least two full cycles plus one point: shorter series are not
+    decomposed (the grouped detectors fall back, decompose_tier says
+    "too_short")."""
+    return len(x) >= 2 * period + 1
 
-        return pd.DataFrame({
-            "source": src, "bucket_ts": pdf["bucket_ts"],
-            "method": method_out, "is_outlier": flags,
-            "score": np.nan_to_num(score, posinf=1e308, neginf=-1e308),
-        })
 
-    return fn
+def _iqr_fallback(x: np.ndarray):
+    """iqr_flags' fences and scores: the distance outside a fence in
+    IQRs (the fences span 4 IQRs), or the distance itself when the IQR
+    is 0."""
+    lo, hi = iqr_fences(x)
+    iqr = (hi - lo) / 4.0
+    dist = np.maximum(np.maximum(lo - x, x - hi), 0.0)
+    return (x < lo) | (x > hi), dist / iqr if iqr > 0 else dist
+
+
+def _nondegenerate(resid: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """`resid`, or ValueError (-> iqr_fallback) when the decomposition
+    absorbed the series."""
+    if compat._degenerate_decomposition(resid, x):
+        raise ValueError("degenerate decomposition")
+    return resid
+
+
+def _stl_resid(x: np.ndarray, period: int) -> np.ndarray:
+    fit = stl_fit(x, period=period, seasonal=period + (period % 2 == 0))
+    return _nondegenerate(fit.resid, x)
+
+
+def _stl(x, period, mstl_periods):
+    return compat.dispersion_flags(_stl_resid(x, period))
+
+
+def _stl_z(x, period, mstl_periods):
+    # engine-native: STL residuals + fixed |z| > 2 (the reference's z
+    # branch, K6, applied unconditionally; threshold catch.py:1156, not
+    # tuned). The MC-Shapiro gate takes that branch when its p > 0.05,
+    # and a LOW Shapiro W (heavy tails) gives p near 1, so "stl" equals
+    # "stl_z" whenever p > 0.05. They differ only on residuals that
+    # look normal (high W, p <= 0.05), which the gate sends to MAD.
+    z = np.abs(zscore(_stl_resid(x, period)))
+    return z > 2.0, z
+
+
+def _mstl(x, period, mstl_periods):
+    usable = tuple(p for p in (mstl_periods or (period,))
+                   if len(x) > 2 * p)
+    s = mad_scores(_nondegenerate(
+        mstl_fit(x, periods=usable or (period,)).resid, x))
+    return s > 3.5, s
+
+
+def _classic(x, period, mstl_periods):
+    dec, _ = compat._classic_decomposition(x, period)
+    s = mad_scores(dec.resid)
+    return s > 3.5, s
+
+
+def _esd(x, period, mstl_periods):
+    n = len(x)
+    if shapiro(x)[1] > 0.05:
+        idx = generalized_esd(x, max_anomalies=n // 20)
+    else:
+        idx = seasonal_esd(x, periodicity=period, max_anomalies=n // 20,
+                           hybrid=True)
+    flags = np.zeros(n, dtype=bool)
+    flags[list(idx)] = True
+    return flags, flags.astype(np.float64)
+
+
+# method -> kernel(x, period, mstl_periods) -> (flags, score)
+KERNELS = {"stl": _stl, "stl_z": _stl_z, "mstl": _mstl,
+           "classic": _classic, "esd": _esd}
+GROUPED_METHODS = tuple(KERNELS)
 
 
 def grouped_flags(rollup: DataFrame, tier: str, method: str,
                   value_col: str = VALUE_COL) -> DataFrame:
-    """classic/stl/mstl/esd flags via applyInPandas per source."""
-    period = TIER_PERIOD[tier]
-    src = rollup.select("source", "bucket_ts",
-                        F.col(value_col).cast("double").alias("value"))
-    return src.groupBy("source").applyInPandas(
-        _series_detector(method, period, TIER_MSTL_PERIODS.get(tier)),
-        schema=FLAG_SCHEMA)
+    """`method`'s flags per source (KERNELS), via per_source_series.
+
+    A series too short to decompose, or whose kernel raises ValueError
+    (a degenerate decomposition: constant series, zero residual
+    spread), falls back to IQR fences and SAYS SO: the output `method`
+    column reads "iqr_fallback", never the requested method (round-1
+    verdict #3 — a silent fallback would ship wrong-but-plausible flags
+    on a kernel regression). Only the known degenerate path
+    (ValueError) falls back; any other kernel error propagates and
+    fails the query loudly.
+    """
+    if method not in KERNELS:
+        raise ValueError(f"unknown method {method}")
+    kernel, period = KERNELS[method], TIER_PERIOD[tier]
+    mstl_periods = TIER_MSTL_PERIODS.get(tier)
+
+    def fn(source, bucket_ts, x):
+        label = method
+        try:
+            if not decomposable(x, period):
+                raise ValueError("too short to decompose")
+            flags, score = kernel(x, period, mstl_periods)
+        except ValueError:
+            label = "iqr_fallback"
+            flags, score = _iqr_fallback(x)
+        return pd.DataFrame({
+            "source": source, "bucket_ts": bucket_ts, "method": label,
+            "is_outlier": flags,
+            "score": np.nan_to_num(score, posinf=1e308, neginf=-1e308),
+        })
+
+    return per_source_series(rollup, value_col, fn, FLAG_SCHEMA)
 
 
 STATIONARITY_SCHEMA = StructType([
@@ -413,20 +432,12 @@ STATIONARITY_SCHEMA = StructType([
 def stationarity_check(rollup: DataFrame,
                        value_col: str = VALUE_COL) -> DataFrame:
     """Per-source ADF + KPSS diagnostics over rolled series
-    (SURVEY.md K12; reference `diagnostics.py:262-319`) — one grouped
-    Arrow UDF per source, OLS via numpy.linalg.lstsq inside."""
-    import pandas as pd
-
-    from .stats.stationarity import stationarity_verdicts
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("bucket_ts")
-        v = stationarity_verdicts(pdf["value"].to_numpy())
-        return pd.DataFrame([{"source": pdf["source"].iloc[0], **{
-            k: float(val) if not isinstance(val, bool) else val
+    (SURVEY.md K12; reference `diagnostics.py:262-319`), OLS via
+    numpy.linalg.lstsq inside."""
+    def fn(source, bucket_ts, x):
+        v = stationarity_verdicts(x)
+        return pd.DataFrame([{"source": source, **{
+            k: val if isinstance(val, bool) else float(val)
             for k, val in v.items()}}])
 
-    src = rollup.select("source", "bucket_ts",
-                        F.col(value_col).cast("double").alias("value"))
-    return src.groupBy("source").applyInPandas(
-        fn, schema=STATIONARITY_SCHEMA)
+    return per_source_series(rollup, value_col, fn, STATIONARITY_SCHEMA)

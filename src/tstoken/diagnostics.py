@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, StringType, StructField,
                                StructType, TimestampType)
 
+from . import compat
+from .detect import decomposable, per_source_series
 from .rollup import TIER_PERIOD
 
 DECOMP_SCHEMA = StructType([
@@ -88,24 +90,16 @@ def decompose_tier(rollup: DataFrame, tier: str,
     """
     period = TIER_PERIOD[tier]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        from . import compat
-
-        pdf = pdf.sort_values("bucket_ts").reset_index(drop=True)
-        x = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(x)
-        if n < 2 * period + 1:
-            nan = np.full(n, np.nan)
-            return pd.DataFrame({
-                "source": pdf["source"], "bucket_ts": pdf["bucket_ts"],
-                "observed": x, "seasonal": nan, "trend": nan,
-                "resid": nan, "model": "too_short"})
-        dec, model = compat._classic_decomposition(x, period)
+    def fn(source, bucket_ts, x):
+        if decomposable(x, period):
+            dec, model = compat._classic_decomposition(x, period)
+            seasonal, trend, resid = dec.seasonal, dec.trend, dec.resid
+        else:
+            seasonal = trend = resid = np.full(len(x), np.nan)
+            model = "too_short"
         return pd.DataFrame({
-            "source": pdf["source"], "bucket_ts": pdf["bucket_ts"],
-            "observed": dec.observed, "seasonal": dec.seasonal,
-            "trend": dec.trend, "resid": dec.resid, "model": model})
+            "source": source, "bucket_ts": bucket_ts, "observed": x,
+            "seasonal": seasonal, "trend": trend, "resid": resid,
+            "model": model})
 
-    src = rollup.select("source", "bucket_ts",
-                        F.col(value_col).cast("double").alias("value"))
-    return src.groupBy("source").applyInPandas(fn, schema=DECOMP_SCHEMA)
+    return per_source_series(rollup, value_col, fn, DECOMP_SCHEMA)

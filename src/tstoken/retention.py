@@ -13,6 +13,7 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from .tableio import TableIO
 
@@ -40,7 +41,9 @@ def apply_retention(io: TableIO, tier: str, now: datetime | None = None,
     table = f"rollup_{tier}"
     if not io.exists(table):
         return None
-    pred = f"bucket_ts < TIMESTAMP '{cutoff.strftime('%Y-%m-%d %H:%M:%S')}'"
+    # epoch microseconds, converted as F.lit converts `cutoff` (naive =
+    # local time), so the session time zone cannot move the cutoff
+    pred = f"bucket_ts < timestamp_micros({TimestampType().toInternal(cutoff)})"
     return io.delete_where(table, pred)
 
 

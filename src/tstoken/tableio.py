@@ -13,8 +13,9 @@ this sandbox has no iceberg-spark-runtime jar (verified in SURVEY.md
     partition columns (the lineage anchor for checkpoint.py).
 
 Overwrites replace the whole table (INSERT OVERWRITE semantics, static
-whatever the session's `partitionOverwriteMode`), which is what makes
-the checkpoint/resume path safe to re-run.
+whatever the session's `partitionOverwriteMode`) and may read the table
+they replace, which is what makes the checkpoint/resume path safe to
+re-run.
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 
@@ -65,13 +65,13 @@ class TableIO:
                 return json.load(f)
         return {"snapshot_id": 0, "history": []}
 
-    def _bump_manifest(self, table: str, op: str, rows: int, df: DataFrame,
+    def _bump_manifest(self, table: str, m: dict, op: str, df: DataFrame,
                        partition_by: tuple[str, ...]) -> int:
-        """Advance the snapshot id and record the schema `read` passes to
-        Spark (data columns, then partition columns, all nullable — what
-        parquet inference yields), so no read runs an inference job, and
-        the partition columns, so a rewrite keeps the table's layout."""
-        m = self._read_manifest(table)
+        """Advance manifest `m`'s snapshot id and record the schema `read`
+        passes to Spark (data columns, then partition columns, all
+        nullable — what parquet inference yields), so no read runs an
+        inference job, and the partition columns, so a rewrite keeps the
+        table's layout."""
         m["snapshot_id"] = int(m["snapshot_id"]) + 1
         m["partition_by"] = list(partition_by)
         fields = ([f for f in df.schema if f.name not in partition_by]
@@ -79,7 +79,7 @@ class TableIO:
         m["schema"] = StructType(
             [StructField(f.name, f.dataType, True) for f in fields]).json()
         m["history"].append({"snapshot_id": m["snapshot_id"], "op": op,
-                             "rows": rows, "ts": time.time(),
+                             "ts": time.time(),
                              "run": str(uuid.uuid4())[:8]})
         with open(self._manifest_path(table), "w") as f:
             json.dump(m, f)
@@ -110,60 +110,44 @@ class TableIO:
             return self.snapshot_id(table)
         (df.write.mode("append").partitionBy(*partition_by)
            .parquet(self._path(table)))
-        return self._bump_manifest(table, "append", -1, df, partition_by)
+        return self._bump_manifest(table, self._read_manifest(table),
+                                   "append", df, partition_by)
 
     def overwrite(self, table: str, df: DataFrame,
                   partition_by: tuple[str, ...] = ("source",)) -> int:
+        """Replace the table with `df`, which may read the table itself
+        (merge-back). Iceberg snapshots make this safe natively; the
+        parquet backend writes `df` to a sibling dir, swaps it in for
+        an existing table and keeps the manifest's snapshot count."""
         if self.backend == "iceberg":
             df.writeTo(f"{self.catalog}.{table}").createOrReplace()
             return self.snapshot_id(table)
-        self._overwrite_dir(df, self._path(table), partition_by)
-        return self._bump_manifest(table, "overwrite", -1, df, partition_by)
-
-    def overwrite_safe(self, table: str, df: DataFrame,
-                       partition_by: tuple[str, ...] = ("source",)) -> int:
-        """Overwrite a table with a DataFrame that may READ from the same
-        table (merge-back). Iceberg snapshots make this safe natively;
-        the parquet fallback stages to a sibling dir and swaps."""
-        if self.backend == "iceberg" or not self.exists(table):
-            return self.overwrite(table, df, partition_by)
-        return self._stage_and_swap(table, df, partition_by, "overwrite_safe")
+        path = self._path(table)
+        m = self._read_manifest(table)
+        staged = path + "__staging" if os.path.exists(path) else path
+        # the write option outranks the session conf, so a session in
+        # dynamic mode cannot leave stale partitions behind
+        (df.write.mode("overwrite").option("partitionOverwriteMode", "static")
+         .partitionBy(*partition_by).parquet(staged))
+        if staged != path:
+            shutil.rmtree(path)
+            os.rename(staged, path)
+        return self._bump_manifest(table, m, "overwrite", df, partition_by)
 
     def delete_where(self, table: str, predicate: str) -> int:
         """Retention delete. Iceberg: metadata-only DELETE FROM;
-        parquet fallback: rewrite the surviving rows in the table's own
-        partition layout (`source` for manifests that predate it)."""
+        parquet fallback: overwrite with the surviving rows in the
+        table's own partition layout (`source` for manifests that
+        predate it)."""
         if self.backend == "iceberg":
             self.spark.sql(
                 f"DELETE FROM {self.catalog}.{table} WHERE {predicate}")
             return self.snapshot_id(table)
         partition_by = tuple(self._read_manifest(table)
                              .get("partition_by", ("source",)))
-        df = self.read(table).filter(f"NOT ({predicate})")
-        return self._stage_and_swap(table, df, partition_by,
-                                    f"delete_where:{predicate}")
-
-    @staticmethod
-    def _overwrite_dir(df: DataFrame, path: str,
-                       partition_by: tuple[str, ...]) -> None:
-        # the write option outranks the session conf, so a session in
-        # dynamic mode cannot leave stale partitions behind
-        (df.write.mode("overwrite").option("partitionOverwriteMode", "static")
-         .partitionBy(*partition_by).parquet(path))
-
-    def _stage_and_swap(self, table: str, df: DataFrame,
-                        partition_by: tuple[str, ...], op: str) -> int:
-        """Write `df`, which may read `table` itself, to a sibling dir,
-        then swap it in for the table, keeping the manifest history."""
-        final = self._path(table)
-        tmp = final + "__staging"
-        self._overwrite_dir(df, tmp, partition_by)
-        manifest = self._read_manifest(table)
-        shutil.rmtree(final)
-        os.rename(tmp, final)
-        with open(self._manifest_path(table), "w") as f:
-            json.dump(manifest, f)
-        return self._bump_manifest(table, op, -1, df, partition_by)
+        return self.overwrite(
+            table, self.read(table).filter(f"NOT ({predicate})"),
+            partition_by)
 
     def snapshot_id(self, table: str) -> int:
         if self.backend == "iceberg":

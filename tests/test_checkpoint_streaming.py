@@ -175,16 +175,30 @@ class TestCheckpointResume:
 
 
 class TestRetentionDelete:
-    def test_apply_retention_deletes_old(self, spark, tmp_path):
+    @pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+    def test_apply_retention_deletes_old(self, spark, tmp_path, tz):
+        # the cutoff is an instant: the session time zone cannot move it
         from datetime import timedelta
-        from tstoken.retention import apply_retention
+        from tstoken.retention import apply_retention, filter_retained
         io = TableIO(spark, str(tmp_path / "tiers"))
         raw = synth.generate_tokens_raw(spark, ROWS, n_sources=SOURCES)
         run_incremental_rollup(spark, io, raw)
         n_before = io.read("rollup_1m").count()
         hi = io.read("rollup_1m").agg(F.max("bucket_ts")).collect()[0][0]
-        apply_retention(io, "1m", now=hi,
-                        horizons={"1m": timedelta(hours=1)})
+        horizons = {"1m": timedelta(hours=1)}
+        key = "spark.sql.session.timeZone"
+        old = spark.conf.get(key)
+        spark.conf.set(key, tz)
+        cols = ["source", "bucket_ts", *MEASURE_NAMES]
+        try:
+            want = sorted(map(tuple, filter_retained(
+                io.read("rollup_1m"), "1m", hi, horizons)
+                .select(cols).collect()))
+            apply_retention(io, "1m", now=hi, horizons=horizons)
+            assert sorted(map(tuple, io.read("rollup_1m").select(cols)
+                              .collect())) == want
+        finally:
+            spark.conf.set(key, old)
         kept = io.read("rollup_1m")
         assert kept.count() < n_before
         lo = kept.agg(F.min("bucket_ts")).collect()[0][0]
@@ -227,6 +241,7 @@ class TestTableIOWrites:
         spark.conf.set(key, "dynamic")
         try:
             io.overwrite("t", spark.createDataFrame([("a", 3)], schema))
+            assert io.snapshot_id("t") == 2
             assert spark.conf.get(key) == "dynamic"
         finally:
             spark.conf.set(key, old)

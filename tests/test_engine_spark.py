@@ -699,13 +699,22 @@ class TestRound2Fixes:
         return spark.createDataFrame(
             rows, "source string, bucket_ts timestamp, sum_n_tok long")
 
-    def test_degenerate_kernel_fallback_is_labeled(self, const_series):
-        # constant series -> degenerate STL decomposition -> IQR
-        # fallback, which must SAY SO in the method column instead of
-        # shipping flags labeled "stl" (round-1 verdict #3)
-        fl = detect.grouped_flags(const_series, "1m", "stl").toPandas()
-        assert set(fl["method"]) == {"iqr_fallback"}
+    @pytest.mark.parametrize("method", detect.GROUPED_METHODS)
+    def test_degenerate_kernel_fallback_is_labeled(self, const_series,
+                                                   method):
+        # constant series -> degenerate decomposition -> IQR fallback,
+        # which must SAY SO in the method column instead of shipping
+        # flags labeled with the requested method (round-1 verdict #3)
+        fl = detect.grouped_flags(const_series, "1m", method).toPandas()
         assert not fl["is_outlier"].any()
+        if method == "classic":
+            # no flatness check: the MAD score of floating-point noise
+            # in the residual (CHANGES.md FOUND)
+            assert set(fl["method"]) == {"classic"}
+            assert fl["score"].max() == pytest.approx(2.0235, rel=1e-9)
+        else:
+            assert set(fl["method"]) == {"iqr_fallback"}
+            assert (fl["score"] == 0.0).all()
 
     def test_short_series_fallback_is_labeled(self, spark):
         from datetime import datetime, timedelta
@@ -716,7 +725,9 @@ class TestRound2Fixes:
         fl = detect.grouped_flags(df, "1m", "mstl").toPandas()
         assert set(fl["method"]) == {"iqr_fallback"}
 
-    def test_short_series_fallback_scores_like_iqr_flags(self, spark):
+    @pytest.mark.parametrize("method", detect.GROUPED_METHODS)
+    def test_short_series_fallback_scores_like_iqr_flags(self, spark,
+                                                         method):
         # fewer than 2 * 60 + 1 points: every grouped method falls back
         # to IQR fences, and scores a point as iqr_flags does
         rows = [("src-000", datetime(2024, 1, 1) + timedelta(minutes=i),
@@ -725,7 +736,7 @@ class TestRound2Fixes:
         df = spark.createDataFrame(
             rows, "source string, bucket_ts timestamp, sum_n_tok double")
         key = ["source", "bucket_ts"]
-        fb = detect.grouped_flags(df, "1m", "stl").toPandas()
+        fb = detect.grouped_flags(df, "1m", method).toPandas()
         want = detect.iqr_flags(df).toPandas()
         m = fb.merge(want, on=key, suffixes=("", "_iqr"))
         assert len(m) == 50 and set(m["method"]) == {"iqr_fallback"}
