@@ -24,7 +24,6 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-import zipfile
 from collections.abc import Callable
 
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "src")
@@ -34,47 +33,14 @@ if _SRC not in sys.path:
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# ------------------------------------------------- executor packaging
-#
-# The harness builds its own vanilla SparkSession, so the engine's
-# PYTHONPATH fix in tstoken.session never applies and every
-# applyInPandas/mapInPandas stage would die worker-side with
-# `ModuleNotFoundError: No module named 'tstoken'`. Ship the package
-# to executors exactly like `spark-submit --py-files`: zip src/tstoken
-# once per process and sc.addPyFile it once per SparkContext (addPyFile
-# works after session start and propagates to every Python worker).
-
-_ZIP_PATH: str | None = None
-_SHIPPED: set[str] = set()
+from tstoken.session import ship_package
 
 
-def _tstoken_zip() -> str:
-    global _ZIP_PATH
-    if _ZIP_PATH is None or not os.path.exists(_ZIP_PATH):
-        d = tempfile.mkdtemp(prefix="tstoken_pyfiles_")
-        zpath = os.path.join(d, "tstoken.zip")
-        pkg = os.path.join(_SRC, "tstoken")
-        with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
-            for root, _dirs, files in os.walk(pkg):
-                for fname in sorted(files):
-                    if fname.endswith(".py"):
-                        full = os.path.join(root, fname)
-                        z.write(full, os.path.relpath(full, _SRC))
-        _ZIP_PATH = zpath
-    return _ZIP_PATH
-
-
-def _ensure_shipped(spark: SparkSession) -> None:
-    sc = spark.sparkContext
-    key = sc.applicationId
-    if key not in _SHIPPED:
-        sc.addPyFile(_tstoken_zip())
-        _SHIPPED.add(key)
-
-
+# The harness builds its own vanilla SparkSession, so each query ships
+# tstoken to its Python workers with the engine's ship_package.
 def _shipped(fn):
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_shipped(spark)
+        ship_package(spark)
         return fn(spark, sf_dir)
     return wrapped
 
@@ -558,7 +524,7 @@ def _media_features(spark, sf_dir) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: hourly rollup of events + gap-fill + IQR flags at sf0.001."""
     sf_dir = "/root/testdata/sf0.001"
-    _ensure_shipped(spark)
+    ship_package(spark)
     from tstoken.detect import iqr_flags
     gf = _ev_gapfill(spark, sf_dir)
     fl = iqr_flags(gf, value_col="n_events")

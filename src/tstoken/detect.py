@@ -19,7 +19,7 @@ Two layers (SURVEY.md §7.3):
     on a constant series), falls back to IQR fences scored exactly as
     iqr_flags scores them, labeled "iqr_fallback". classic picks its
     model with compat._classic_decomposition, as decompose_tier does,
-    and has no flatness check: a constant series keeps its label.
+    and falls back when that model's residual is flat in the series' units.
 
 Flag schema (FIXTURES.md A2): (source, bucket_ts, method, is_outlier,
 score). All buckets are emitted with a boolean, not just the hits.
@@ -357,7 +357,10 @@ def _mstl(x, period, mstl_periods):
 
 
 def _classic(x, period, mstl_periods):
-    dec, _ = compat._classic_decomposition(x, period)
+    dec, model = compat._classic_decomposition(x, period)
+    # judged in x's units: a multiplicative resid is a ratio near 1
+    _nondegenerate(x - dec.trend * dec.seasonal if model == "multiplicative"
+                   else dec.resid, x)
     s = mad_scores(dec.resid)
     return s > 3.5, s
 

@@ -10,7 +10,8 @@ scored detectors and the one F1 scorer that `bench.py` and
 
 Fresh-process campaign, prints one JSON line. It runs as a module or,
 since it imports `tstoken` by absolute name, as a spark-submit script;
-either way it pins `local[<cpus>]`:
+either way it pins `local[<cpus>]`, and `get_spark` ships `tstoken` to
+the workers once the driver imports it (`PYTHONPATH=src`, `--py-files`):
 
     PYTHONPATH=src python -m tstoken.jobs.pipeline <cpus> <rows> <iters>
     spark-submit --py-files tstoken.zip src/tstoken/jobs/pipeline.py \

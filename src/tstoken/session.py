@@ -2,9 +2,17 @@
 
 from __future__ import annotations
 
+import atexit
+import functools
+import glob
 import os
+import shutil
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+_SHIPPED: set[str] = set()  # applicationIds
 
 
 def host_mem_kib(meminfo: str = "/proc/meminfo") -> int | None:
@@ -27,26 +35,16 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
 def get_spark(app_name: str, master: str,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
-    """Arrow-enabled, AQE-enabled session on `master`.
+    """Arrow-enabled, AQE-enabled session on `master` that ships tstoken.
 
     On a real cluster these settings ride through spark-submit --conf.
     `extra_conf` entries are applied last (e.g. event-log capture for
-    the BENCH task-balance harnesses).
+    the BENCH task-balance harnesses); shuffle partitions default to
+    max(defaultParallelism, 8) of the started context.
     """
-    # make the tstoken package importable in executor Python workers
-    # (spark-submit --py-files equivalent for local mode)
-    src_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if src_dir not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (src_dir + os.pathsep + existing) if existing else src_dir
-
-    if shuffle_partitions is None:
-        n = master.split("[")[-1].rstrip("]") if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(int(n), 8)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # 32 MB scan splits (default 128 MB): with 128 MB splits a 4 GB
         # token table yields ~34 tasks and a 32-thread stage runs as
         # one ragged wave (measured 47 s vs 29 s at local[32] on the
@@ -66,4 +64,31 @@ def get_spark(app_name: str, master: str,
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", str(
+        shuffle_partitions or max(spark.sparkContext.defaultParallelism, 8)))
+    ship_package(spark)
+    return spark
+
+
+@functools.cache
+def _package_zip() -> str:
+    """src/tstoken/**/*.py zipped once per process, stored (not deflated)."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    tmp = tempfile.mkdtemp(prefix="tstoken_pyfiles_")
+    atexit.register(shutil.rmtree, tmp, ignore_errors=True)
+    path = os.path.join(tmp, "tstoken.zip")
+    with zipfile.ZipFile(path, "w") as z:
+        for f in sorted(glob.glob(f"{pkg}/**/*.py", recursive=True)):
+            z.write(f, os.path.relpath(f, os.path.dirname(pkg)))
+    return path
+
+
+def ship_package(spark: SparkSession) -> None:
+    """addPyFile the tstoken zip once per SparkContext, as `spark-submit
+    --py-files` does, so its Python workers import tstoken. A no-op when
+    tstoken itself was imported from a zip: `--py-files` shipped it."""
+    sc = spark.sparkContext
+    if os.path.isfile(__file__) and sc.applicationId not in _SHIPPED:
+        sc.addPyFile(_package_zip())
+        _SHIPPED.add(sc.applicationId)

@@ -61,12 +61,12 @@ def _mix_cols(src_idx, seq):
 
 
 def _case_chain(id_col, bounds, values):
-    """values[i] for id in [bounds[i], bounds[i+1]) as a CASE chain."""
+    """values[i] for id in [bounds[i], bounds[i+1]); the last is the ELSE."""
     expr = None
-    for i, v in enumerate(values):
+    for i, v in enumerate(values[:-1]):
         cond = id_col < int(bounds[i + 1])
         expr = F.when(cond, v) if expr is None else expr.when(cond, v)
-    return expr
+    return F.lit(values[-1]) if expr is None else expr.otherwise(values[-1])
 
 
 def generate_tokens_raw(spark: SparkSession, total_rows: int,
@@ -134,6 +134,9 @@ def generate_tokens_raw(spark: SparkSession, total_rows: int,
     base_tok = (F.lit(64) + F.pmod(h1, F.lit(1985))).cast("double")
     n_tok = F.greatest(F.lit(1), F.floor(base_tok * factor * mult)).cast("int")
 
+    # token i = pmod(a + 45120·i, 50257), as 1000003 mod 50257 = 45120: one
+    # sequence over longs (45120·n_tok overflows an int from n_tok 47,596)
+    a = F.lit(1000003 * 131) * seq + F.lit(17)
     out = (base
            .where(~gap)
            .withColumn("n_tok", n_tok)
@@ -142,9 +145,9 @@ def generate_tokens_raw(spark: SparkSession, total_rows: int,
            .withColumn(
                "tokens",
                F.transform(
-                   F.sequence(F.lit(0), F.col("n_tok") - 1),
-                   lambda i: F.pmod(F.lit(1000003) * (seq * F.lit(131) + i)
-                                    + F.lit(17), F.lit(50257)).cast("int")))
+                   F.sequence(a, a + F.lit(45120) * (F.col("n_tok").cast("long")
+                                                     - 1), F.lit(45120)),
+                   lambda t: F.pmod(t, F.lit(50257)).cast("int")))
            .select("doc_id", "tokens", "n_tok", "source"))
     return out
 

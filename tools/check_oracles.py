@@ -141,10 +141,11 @@ def main():
     from pyspark.sql import SparkSession
 
     # Reproduce the DRIVER's environment faithfully: a vanilla session
-    # with no tstoken on the worker PYTHONPATH (round-1 verdict #1 —
-    # tstoken.session's PYTHONPATH fix masked 7 worker-side
-    # ModuleNotFoundError crashes from this checker). Executor shipping
-    # must come from __spark_entry__._ensure_shipped alone.
+    # with no tstoken on the worker PYTHONPATH. A caller's shell that
+    # exports PYTHONPATH=src would let the workers import tstoken
+    # anyway (it once masked 7 worker-side ModuleNotFoundError crashes
+    # from this checker), so executor shipping must come from the
+    # queries' own tstoken.session.ship_package alone.
     src_abs = os.path.join(REPO, "src")
     parts = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
              if p and os.path.abspath(p) != src_abs]
